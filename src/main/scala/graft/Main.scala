@@ -67,23 +67,25 @@ object Main {
           else catalog.list.foreach { case (n, op) => out.println(s"$n: $op") }
         case Some("4") =>
           prompt("Path to the search request (search.json): ").foreach { path =>
-            try {
+            // one request scope: the engine's per-request caches are
+            // released once the answer is printed and written
+            try graft.util.CacheScope.withScope {
               val req = RequestParser.parseSearchRequest(path)
               val res = SimSearchEngine.search(spark, catalog, req.k, req.specs,
                 detailed = true, algorithm = graft.api.Algorithm.parse(req.algorithm))
               // the prefixURL id formatting applies AFTER the extras join —
               // prefixed ids would no longer match the facet frames; ONE
-              // projected frame serves the JSON response, the A6 table, and
+              // collected result serves the JSON response, the A6 table, and
               // the file sink
               val extras = req.output.extraColumns
-              val projected = SimSearchEngine.applyIdPrefix(catalog,
-                if (extras.isEmpty) res else SimSql.projectExtras(catalog, res, extras))
-              out.println(OutputWriter.toJsonResponse(projected, extras))
-              if (extras.nonEmpty) out.println(OutputWriter.toTabular(projected, 1000))
+              val result = OutputWriter.Collected(SimSearchEngine.applyIdPrefix(catalog,
+                if (extras.isEmpty) res else SimSql.projectExtras(catalog, res, extras)))
+              out.println(OutputWriter.toJsonResponse(result, extras))
+              if (extras.nonEmpty) out.println(OutputWriter.toTabular(result, 1000))
               // S11: the request's output block routes results to a file
               // sink (reference: request/SearchOutput.java file/format)
               req.output.file.foreach { f =>
-                OutputWriter.writeResults(projected, req.output, f, extras)
+                OutputWriter.writeResults(result, req.output, f, extras)
                 out.println(s"Results written to $f (${req.output.format}).")
               }
             } catch {
@@ -104,7 +106,8 @@ object Main {
               case Some("") => ()
               case Some(q) if q.toUpperCase.startsWith("SELECT") =>
                 // k <= 50 per combo; 1000 covers every legal combo count
-                try out.println(OutputWriter.toTabular(SimSql.run(spark, catalog, q), 1000))
+                try graft.util.CacheScope.withScope(
+                  out.println(OutputWriter.toTabular(SimSql.run(spark, catalog, q), 1000)))
                 catch { case e: Exception => out.println(s"Query failed: ${e.getMessage}") }
               case Some(q) if q.toLowerCase.startsWith("set") =>
                 // reference console parity (Runner.java:160-167):
@@ -134,5 +137,6 @@ object Main {
           out.println(s"Unknown choice: $other")
       }
     }
+    catalog.close() // the session ends: release the resident attributes
   }
 }

@@ -1,12 +1,20 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Result sinks (S11/S12) — the rebuild of the reference's OutputWriter
   * (reference: engine/OutputWriter.java:33-160) and the REST response shape
   * (engine/SearchResponse.java:1-88, serialized by SimSearchController).
   */
 object OutputWriter {
+
+  /** A small ranked result collected ONCE: the single-file sinks and the
+    * JSON response below all render from it, so a search request that
+    * both writes its output file and answers over HTTP runs its plan once. */
+  final case class Collected(columns: Seq[String], rows: Seq[Row])
+  object Collected {
+    def apply(df: DataFrame): Collected = Collected(df.columns.toSeq, df.collect().toSeq)
+  }
 
   /** S11 (dataset-scale): JSON directory sink (one JSON object per line,
     * Spark-native part files — parallel writers, no single-task funnel).
@@ -145,14 +153,18 @@ object OutputWriter {
     * (OutputWriter.java:115-131), quoting a value only when it collides
     * with the dialect. Embedded quotes double, per RFC 4180. */
   def toCsv(df: DataFrame, delimiter: String = ";", quote: String = "\"",
-      header: Boolean = true): String = {
+      header: Boolean = true): String =
+    toCsv(Collected(df), delimiter, quote, header)
+
+  def toCsv(result: Collected, delimiter: String, quote: String,
+      header: Boolean): String = {
     def render(v: String): String =
       if (quote.nonEmpty && (v.contains(delimiter) || v.contains(quote) ||
           v.contains("\n") || v.contains("\r")))
         quote + v.replace(quote, quote + quote) + quote
       else v
-    val cols = df.columns.toSeq
-    val rows = df.collect().map(_.toSeq.map {
+    val cols = result.columns
+    val rows = result.rows.map(_.toSeq.map {
       case null => ""
       case s: Seq[_] => s.mkString("[", ", ", "]")
       case v => String.valueOf(v)
@@ -164,15 +176,17 @@ object OutputWriter {
 
   /** S11: tabular console/txt rendering of the first n rows; a truncated
     * listing says so instead of silently dropping rows. */
-  def toTabular(df: DataFrame, n: Int = 50): String = {
-    val cols = df.columns
-    val collected = df.limit(n + 1).collect()
-    val rows = collected.take(n).map(_.toSeq.map(v => String.valueOf(v)))
+  def toTabular(df: DataFrame, n: Int = 50): String =
+    toTabular(Collected(df.columns.toSeq, df.limit(n + 1).collect().toSeq), n)
+
+  def toTabular(result: Collected, n: Int): String = {
+    val cols = result.columns
+    val rows = result.rows.take(n).map(_.toSeq.map(v => String.valueOf(v)))
     val widths = cols.indices.map(i => (cols(i).length +: rows.map(_(i).length)).max)
     def line(vals: Seq[String]) =
       vals.zip(widths).map { case (v, w) => v.padTo(w, ' ') }.mkString("| ", " | ", " |")
-    val body = (line(cols.toSeq) +: rows.map(r => line(r))).mkString("\n")
-    if (collected.length > n) body + s"\n... (showing first $n rows)" else body
+    val body = (line(cols) +: rows.map(r => line(r))).mkString("\n")
+    if (result.rows.length > n) body + s"\n... (showing first $n rows)" else body
   }
 
   /** S11: route a ranked result to the sink declared by a search request's
@@ -183,11 +197,15 @@ object OutputWriter {
     * directory. The json branch writes the same rendered SearchResponse
     * array the REST endpoint serves. */
   def writeResults(df: DataFrame, out: graft.engine.RequestParser.OutputSpec,
-      file: String, extras: Seq[String] = Seq.empty): Unit = {
+      file: String, extras: Seq[String] = Seq.empty): Unit =
+    writeResults(Collected(df), out, file, extras)
+
+  def writeResults(result: Collected, out: graft.engine.RequestParser.OutputSpec,
+      file: String, extras: Seq[String]): Unit = {
     val content = out.format match {
-      case "csv" => toCsv(df, out.delimiter, out.quote, out.header)
-      case "txt" => toTabular(df, 100000)
-      case _ => toJsonResponse(df, extras)
+      case "csv" => toCsv(result, out.delimiter, out.quote, out.header)
+      case "txt" => toTabular(result, 100000)
+      case _ => toJsonResponse(result, extras)
     }
     val p = java.nio.file.Paths.get(file)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
@@ -200,20 +218,23 @@ object OutputWriter {
     * each with its rankedResults array. `extras` names projected
     * extra-attribute columns, serialized per result as the reference's
     * `extra_attributes` map (RankedResult.setExtraAttributes). */
-  def toJsonResponse(df: DataFrame, extras: Seq[String] = Seq.empty): String = {
+  def toJsonResponse(df: DataFrame, extras: Seq[String] = Seq.empty): String =
+    toJsonResponse(Collected(df), extras)
+
+  def toJsonResponse(result: Collected, extras: Seq[String]): String = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createArrayNode()
     // The per-result exact flag (reference: RankedResult.setExact) is only
     // computed by the detailed search (RankAggregate tau bound); serialize
     // it when present and OMIT it otherwise — never assert exactness the
     // engine did not establish.
-    val hasExact = df.columns.contains("exact")
+    val hasExact = result.columns.contains("exact")
     // detailed mode also carries one raw per-attribute similarity column per
     // facet, named s_<facet> — serialized as the reference's per-result
     // attributes map (RankedResult.attributes)
-    val attrCols = df.columns.filter(_.startsWith("s_")).toSeq
-    val extraCols = extras.filter(df.columns.contains)
-    val byCombo = df.collect()
+    val attrCols = result.columns.filter(_.startsWith("s_"))
+    val extraCols = extras.filter(result.columns.contains)
+    val byCombo = result.rows
       .map(r => (r.getLong(r.fieldIndex("combo")), r.getLong(r.fieldIndex("rank")),
         String.valueOf(r.get(r.fieldIndex("id"))), r.getDouble(r.fieldIndex("score")),
         if (hasExact) Some(r.getBoolean(r.fieldIndex("exact"))) else None,

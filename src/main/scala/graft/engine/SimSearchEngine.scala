@@ -7,6 +7,7 @@ import graft.api.{Algorithm, Facet, Limits, Normalizer, SimOp}
 import graft.functions.SimKernels
 import graft.operators.{BoundFacet, FacetSearch, RankAggregate}
 import graft.sources.CsvMount
+import graft.util.CacheScope
 
 /** The search front-end over a mounted catalog — the rebuild of the
   * reference's SearchHandler (reference: engine/SearchHandler.java:193-752).
@@ -62,7 +63,18 @@ object SimSearchEngine {
 
   /** Mounted-attribute catalog with listing (A8), append (the reference's
     * /append endpoint) and removal (A9). Holds both ingested facets
-    * ((id, value) frames) and in-situ REST attributes. */
+    * ((id, value) frames) and in-situ REST attributes.
+    *
+    * The catalog owns facet RESIDENCY — the reference's ingest-on-mount
+    * (its attributes are read once into in-memory per-attribute maps and
+    * every query is answered from those). Every facet that enters it, by
+    * the constructor or [[add]], is cached and materialised once, at
+    * mount; searches then read the cached columns instead of re-reading
+    * and re-parsing the source. Answers are therefore a snapshot taken at
+    * mount: a later change to the source shows only after the attribute
+    * is mounted again. A replaced or [[remove]]d facet is unpersisted, and
+    * [[close]] releases everything the catalog still holds. In-situ
+    * attributes (and their lazy Spark-side twins) stay remote. */
   final class Catalog(initial: Seq[Facet],
       initialInSitu: Seq[InSituFacet] = Seq.empty) {
     /** Per-instance settings — one per catalog, like the reference's
@@ -73,7 +85,7 @@ object SimSearchEngine {
     // reference-swap of immutable maps — a concurrent reader sees either
     // the old or the new catalog, never a torn one.
     @volatile private var facets: Map[String, Facet] =
-      initial.map(f => f.spec.name -> f).toMap
+      initial.map(f => f.spec.name -> Resident.hold(f)).toMap
     @volatile private var inSitu: Map[String, InSituFacet] =
       initialInSitu.map(f => f.name -> f).toMap
     def get(name: String): Facet = facets.getOrElse(name,
@@ -106,14 +118,35 @@ object SimSearchEngine {
     // the REST pool can run two /append handlers at once — without the
     // lock one mount silently loses. Reads stay lock-free (volatile
     // reference to an immutable map); mounts are rare, contention is nil.
-    def add(f: Facet): Unit = synchronized { facets += (f.spec.name -> f) }
+    /** Mount `f`, replacing a facet of the same name. The replaced facet
+      * is released BEFORE the new one is materialised: a re-mount of the
+      * same source would otherwise find the old snapshot still cached
+      * under the same plan and keep serving it. If materialisation fails
+      * the attribute ends up unmounted and the error propagates. */
+    def add(f: Facet): Unit = synchronized {
+      facets.get(f.spec.name).foreach { old =>
+        facets -= f.spec.name
+        Resident.release(old)
+      }
+      facets += (f.spec.name -> Resident.hold(f))
+    }
     def add(f: InSituFacet): Unit = synchronized { inSitu += (f.name -> f) }
     /** @return whether the attribute was mounted (callers surface 404 on false) */
     def remove(name: String): Boolean = synchronized {
       val had = facets.contains(name) || inSitu.contains(name)
+      facets.get(name).foreach(Resident.release)
       facets -= name
       inSitu -= name
       had
+    }
+    /** Unmount everything and release the resident facets. The catalog is
+      * empty afterwards; a search still in flight on it recomputes any
+      * released partition from the source. */
+    def close(): Unit = synchronized {
+      facets.values.foreach(Resident.release)
+      facets = Map.empty
+      inSitu = Map.empty
+      dictStore = Map.empty
     }
     def size: Int = facets.size + inSitu.size
     /** Vector dictionaries mounted into this catalog — kept so a LATER
@@ -132,6 +165,42 @@ object SimSearchEngine {
       facets.values.toSeq
         .filter(f => !f.spec.queryable && f.spec.prefixURL.isDefined)
         .sortBy(_.spec.name).headOption.flatMap(_.spec.prefixURL)
+  }
+
+  /** Facet residency shared by every [[Catalog]] in the JVM. Spark keys
+    * its cache by plan, so two catalogs mounting the same source with the
+    * same spec share ONE cache entry (and one snapshot). Each holder is
+    * counted per plan, and the entry is unpersisted when its last holder
+    * releases it — an /unmount in one tenant must not evict another
+    * tenant's facet. */
+  private object Resident {
+    private val holders =
+      scala.collection.mutable.HashMap.empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int]
+
+    private def key(df: DataFrame) = df.queryExecution.analyzed.canonicalized
+
+    /** Cache `f`'s frame and materialise it (one count, outside the lock:
+      * a slow mount must not stall another catalog's release). */
+    def hold(f: Facet): Facet = {
+      synchronized {
+        val k = key(f.df)
+        f.df.cache()
+        holders(k) = holders.getOrElse(k, 0) + 1
+      }
+      try f.df.count()
+      catch { case e: Throwable => release(f); throw e }
+      f
+    }
+
+    def release(f: Facet): Unit = synchronized {
+      val k = key(f.df)
+      holders.get(k) match {
+        case Some(n) if n > 1 => holders(k) = n - 1
+        case _ =>
+          holders -= k
+          f.df.unpersist(blocking = false)
+      }
+    }
   }
 
   /** Format result ids as URL identifiers when the catalog mounts a name
@@ -338,9 +407,10 @@ object SimSearchEngine {
     *    `ORDER BY distance LIMIT m` and returns a bounded (id, d) list;
     *    the engine calibrates scale / decays it exactly like an ingested
     *    facet. The list is cached so the scale calibration, weight
-    *    estimation and exact-scoring phases share ONE remote fetch (cache
-    *    lifetime: <= m rows, MEMORY_AND_DISK, shed by LRU — same story as
-    *    RankAggregate's topM caches). */
+    *    estimation and exact-scoring phases share ONE remote fetch, and
+    *    registered with [[graft.util.CacheScope]] so the consuming request
+    *    scope releases it (outside a scope it lives until LRU — the
+    *    RankAggregate topM story). */
   private def facetDistFrames(catalog: Catalog, m: Int, specs: Seq[SearchSpec],
       eligible: Option[DataFrame])
       : (Map[Int, graft.operators.BoundFacet], Seq[Option[DataFrame]]) = {
@@ -362,8 +432,9 @@ object SimSearchEngine {
     val dists: Seq[Option[DataFrame]] = specs.zipWithIndex.map { case (s, i) =>
       inSituBuilt.get(i) match {
         case Some(bf) if !bf.preScored =>
-          Some(eligible.map(e => bf.dist.join(e, Seq("id"), "left_semi"))
-            .getOrElse(bf.dist).cache())
+          Some(CacheScope.register(eligible
+            .map(e => bf.dist.join(e, Seq("id"), "left_semi"))
+            .getOrElse(bf.dist).cache()))
         case Some(_) => None
         case None =>
           val f = catalog.get(s.column)
@@ -425,10 +496,11 @@ object SimSearchEngine {
     // (its k-prefix), R7 weight estimation, and the rank aggregation's
     // phase-1 candidate lists all read this cache — previously each phase
     // paid its own full facet scan (a k-scan here, an m-scan inside run,
-    // and another m-scan for estimation). Cache lifetime: <= m rows each,
-    // MEMORY_AND_DISK, shed by LRU — the RankAggregate story.
+    // and another m-scan for estimation). Each is registered with the
+    // consuming request's CacheScope, which releases it once the answer
+    // is rendered (outside a scope: <= m rows each, shed by LRU).
     val topMCache: Map[Int, DataFrame] = specs.indices.flatMap(i =>
-      dists(i).map(d => i -> FacetSearch.topM(d, m).cache())).toMap
+      dists(i).map(d => i -> CacheScope.register(FacetSearch.topM(d, m).cache()))).toMap
     // Calibrate every uncalibrated facet's k-th candidate distance in ONE
     // tagged Spark job (union only (f, d) so id types never conflict) —
     // sequential per-facet collects would pay |facets| job overheads. The
@@ -493,7 +565,8 @@ object SimSearchEngine {
     // hand the cached candidate lists to the aggregation, positionally:
     // preScored facets rank by similarity DESC (run's own convention)
     val topMs = facets.zipWithIndex.map { case (bf, i) =>
-      if (bf.preScored) bf.dist.orderBy(col("d").desc, col("id")).limit(m).cache()
+      if (bf.preScored)
+        CacheScope.register(bf.dist.orderBy(col("d").desc, col("id")).limit(m).cache())
       else topMCache(i)
     }
     if (detailed) RankAggregate.topKDetailed(spark, facets, k, m, Some(topMs))
@@ -550,9 +623,10 @@ object SimSearchEngine {
     val calibrated = specs.zip(scalesByIdx).map { case (s, sc) => s.copy(scale = Some(sc)) }
     // cache: the ids frame feeds one collect plus |facets| joins below —
     // uncached, each consumer would re-run the whole search (re-firing
-    // every remote top-M fetch for in-situ facets)
-    val ids = search(spark, catalog, k, calibrated)
-      .where(col("combo") === 0).select(col("id")).cache()
+    // every remote top-M fetch for in-situ facets). The consuming request
+    // scope releases it with the search's own caches.
+    val ids = CacheScope.register(search(spark, catalog, k, calibrated)
+      .where(col("combo") === 0).select(col("id")).cache())
     // value retrieval for in-situ facets: one bounded (<= K_MAX) id collect
     // feeds every remote value fetch
     val idSeq: Seq[Any] = ids.collect().map(_.get(0)).toSeq

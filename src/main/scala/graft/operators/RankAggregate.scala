@@ -341,7 +341,12 @@ object RankAggregate {
     * (combo, score) column pair, ranked by a single window partitioned by
     * combo. A per-combo union of branches would re-execute the whole
     * pivot subtree once per combination (Spark unions share no common
-    * subexpressions) and sort each branch on a single partition. */
+    * subexpressions) and sort each branch on a single partition.
+    *
+    * Detailed mode carries the per-facet `s_<i>` columns through the
+    * explode and the window, so the ranked rows keep their own facet
+    * scores: re-joining them to `pivoted` would evaluate the pivot subtree
+    * (every facet's exact-scoring scan and the aggregation) a second time. */
   private def finish(pivoted: DataFrame, facetMeta: Seq[(String, Seq[Double])],
       k: Int, nCombos: Int, detailed: Boolean,
       sMthOpt: Option[Seq[Double]]): DataFrame = {
@@ -354,25 +359,25 @@ object RankAggregate {
       round(num / lit(ws.sum), 6)
     }
     val w = Window.partitionBy(col("combo")).orderBy(col("score").desc, col("id"))
+    val carried: Seq[Column] =
+      if (detailed) facetMeta.indices.map(i => col(s"s_$i")) else Seq.empty
     val base = pivoted
-      .select(col("id"), posexplode(array(scoreCols: _*)).as(Seq("combo", "score")))
-      .select(col("combo").cast("long").as("combo"), col("id"), col("score"))
+      .select(col("id") +: carried :+
+        posexplode(array(scoreCols: _*)).as(Seq("combo", "score")): _*)
+      .select(Seq(col("combo").cast("long").as("combo"), col("id"), col("score")) ++
+        carried: _*)
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .withColumn("rank", col("rank").cast("long"))
-    val result =
-      if (!detailed) base
-      else {
-        val sMth = sMthOpt.get
-        val taus = (0 until nCombos).map { c =>
-          val ws = facetMeta.map(_._2(c))
-          ws.zip(sMth).map { case (wf, s) => wf * s }.sum / ws.sum
-        }
-        base.withColumn("exact", col("score") >=
-          element_at(array(taus.map(lit): _*), col("combo").cast("int") + 1))
-      }
-    if (!detailed) result
+    if (!detailed) base
     else {
+      val sMth = sMthOpt.get
+      val taus = (0 until nCombos).map { c =>
+        val ws = facetMeta.map(_._2(c))
+        ws.zip(sMth).map { case (wf, s) => wf * s }.sum / ws.sum
+      }
+      val exact = col("score") >=
+        element_at(array(taus.map(lit): _*), col("combo").cast("int") + 1)
       // disambiguate duplicate facet names (the same column may be queried
       // twice with different values/weights): a repeated name would yield
       // two identically-named s_ columns and serializers would silently
@@ -382,7 +387,8 @@ object RankAggregate {
         val n = if (names.count(_ == nm) > 1) s"s_${nm}_$i" else s"s_$nm"
         col(s"s_$i").as(n)
       }
-      result.join(pivoted.select(col("id") +: perFacetCols: _*), Seq("id"))
+      base.select(Seq(col("id"), col("combo"), col("score"), col("rank"),
+        exact.as("exact")) ++ perFacetCols: _*)
     }
   }
 }

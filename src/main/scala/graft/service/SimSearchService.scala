@@ -74,14 +74,16 @@ final class SimSearchService(spark: SparkSession, port: Int,
     * paths resolvable on this host. Returns a fresh api_key. */
   private def handleIndex(x: HttpExchange): Unit = {
     val tmp = bodyFile(x)
+    val cat = new Catalog(Seq.empty)
     try {
-      val cat = new Catalog(Seq.empty)
       val n = RequestParser.mountInto(spark, tmp.toString, cat)
       val key = java.util.UUID.randomUUID().toString
       catalogs.put(key, cat)
       respond(x, 200, s"""{"apiKey":"$key","attributes":$n}""")
     } catch {
-      case e: Exception => respond(x, 400, errorBody(e))
+      case e: Exception =>
+        cat.close() // the attributes mounted before the failure
+        respond(x, 400, errorBody(e))
     } finally java.nio.file.Files.delete(tmp)
   }
 
@@ -148,7 +150,9 @@ final class SimSearchService(spark: SparkSession, port: Int,
     }
     if (!isAdmin(x)) { respond(x, 403, """{"error":"admin key required"}"""); return }
     val target = Option(x.getRequestHeaders.getFirst("target_key")).getOrElse("")
-    if (catalogs.remove(target) != null) {
+    val cat = catalogs.remove(target)
+    if (cat != null) {
+      cat.close()
       extraKeys.entrySet().removeIf(e => e.getValue == target)
       respond(x, 200, s"""{"revoked":"${jsonEscape(target)}"}""")
     } else respond(x, 404, """{"error":"unknown target_key"}""")
@@ -161,7 +165,9 @@ final class SimSearchService(spark: SparkSession, port: Int,
     * deleted."). Subsequent requests with any of those keys 401. */
   private def handleUnmount(x: HttpExchange): Unit = {
     val key = apiKey(x)
-    if (catalogs.remove(key) != null) {
+    val cat = catalogs.remove(key)
+    if (cat != null) {
+      cat.close()
       extraKeys.entrySet().removeIf(e => e.getValue == key)
       respond(x, 200,
         s"""{"notification":"SimSearch instance controlled by API key ${jsonEscape(key)} is no longer mounted and cannot support any requests. Any associated API keys have been deleted."}""")
@@ -185,12 +191,16 @@ final class SimSearchService(spark: SparkSession, port: Int,
   private def isAdmin(x: HttpExchange): Boolean =
     adminKey.exists(_ == Option(x.getRequestHeaders.getFirst("admin_api_key")).getOrElse(""))
 
-  /** POST /search: body = search request (search.json shape). */
+  /** POST /search: body = search request (search.json shape). The request
+    * runs in a [[graft.util.CacheScope]]: the engine's per-request caches
+    * (top-M candidate lists, bounded in-situ lists) are released once the
+    * answer is rendered, before it is sent, so only the catalog's resident
+    * facets stay. */
   private def handleSearch(x: HttpExchange): Unit = {
     val cat = catalogs.get(masterOf(apiKey(x)))
     if (cat == null) { respond(x, 401, """{"error":"unknown api_key"}"""); return }
     val tmp = bodyFile(x)
-    try {
+    try respond(x, 200, graft.util.CacheScope.withScope {
       val req = RequestParser.parseSearchRequest(tmp.toString)
       // detailed mode computes the per-result TA exactness bound so the
       // response's `exact` flags are real, not asserted (RankedResult.setExact)
@@ -205,11 +215,13 @@ final class SimSearchService(spark: SparkSession, port: Int,
       // result ids become URL identifiers when a name dictionary with
       // prefixURL is mounted (reference: SearchResponseFormat)
       val projected = SimSearchEngine.applyIdPrefix(cat, projected0)
+      // collected once: the file sink and the response render the same rows
+      val result = OutputWriter.Collected(projected)
       // S11: the output block's file sink is honored server-side, exactly
       // as the reference's OutputWriter does for service requests
-      req.output.file.foreach(OutputWriter.writeResults(projected, req.output, _, extras))
-      respond(x, 200, OutputWriter.toJsonResponse(projected, extras))
-    } catch {
+      req.output.file.foreach(OutputWriter.writeResults(result, req.output, _, extras))
+      OutputWriter.toJsonResponse(result, extras)
+    }) catch {
       case e: Exception => respond(x, 400, errorBody(e))
     } finally java.nio.file.Files.delete(tmp)
   }
@@ -226,7 +238,7 @@ final class SimSearchService(spark: SparkSession, port: Int,
     val cat = catalogs.get(masterOf(apiKey(x)))
     if (cat == null) { respond(x, 401, """{"error":"unknown api_key"}"""); return }
     val tmp = bodyFile(x)
-    try {
+    try respond(x, 200, graft.util.CacheScope.withScope {
       val req = RequestParser.parseSearchRequest(tmp.toString)
       val ds = SimSearchEngine.calibrationDistances(spark, cat, req.k, req.specs)
       // keyed by query INDEX so two specs over the same column (different
@@ -237,8 +249,8 @@ final class SimSearchService(spark: SparkSession, port: Int,
         .map { case (i, c, l) =>
           s"""{"index":$i,"column":"${jsonEscape(c)}","distances":[${l.mkString(",")}]}""" }
         .mkString("[", ",", "]")
-      respond(x, 200, s"""{"k":${req.k},"facets":$facets}""")
-    } catch {
+      s"""{"k":${req.k},"facets":$facets}"""
+    }) catch {
       case e: Exception => respond(x, 400, errorBody(e))
     } finally java.nio.file.Files.delete(tmp)
   }

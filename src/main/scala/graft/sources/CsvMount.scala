@@ -16,7 +16,9 @@ import graft.functions.SimKernels
   *
   * Scale note: mounting is a plain `spark.read.csv` scan plus codegen'd
   * column expressions — no driver materialization; the per-attribute frames
-  * stay distributed and lazily evaluated (cacheable by the caller).
+  * stay distributed and lazily evaluated. The caller that makes them
+  * resident is [[graft.engine.SimSearchEngine.Catalog]]: every facet that
+  * enters a catalog is cached and materialised once, at mount.
   */
 object CsvMount {
 
@@ -219,11 +221,10 @@ object CsvMount {
             val dim = dict.select(size(col("vector"))).head.getInt(0)
             val toks = SimKernels.tokenize(col(spec.searchColumns.head), spec.tokenDelimiter)
             val tokensDf = raw.select(id, toks.as("tokens")).na.drop(Seq("id"))
-            // transform ONCE at mount and keep the derived vectors resident
+            // the catalog materialises the derived vectors once, at mount
             // (the reference's ingest-on-mount semantics for transformed
-            // data, Coordinator.java:633-637) — a lazy frame would replay
-            // the explode/join/aggregate transform on every query
-            val vecs = graft.operators.Word2Vec.transform(tokensDf, dict, dim).cache()
+            // data, Coordinator.java:633-637)
+            val vecs = graft.operators.Word2Vec.transform(tokensDf, dict, dim)
             // query values stay keywords; the same dictionary maps them into
             // the vector space (a 1-row pass through the SAME transform, so
             // data and query semantics cannot drift)

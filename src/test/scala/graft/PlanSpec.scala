@@ -35,6 +35,26 @@ class PlanSpec extends SparkTestBase {
       "facet scans must stream against the broadcast candidates")
   }
 
+  test("detailed rank aggregation: the per-facet scores ride through the " +
+    "ranking window — no join above it, ONE pivot aggregation") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Window}
+    val facets = (0 until 3).map { i =>
+      graft.operators.BoundFacet(s"f$i",
+        (0 until 40).map(j => (j.toLong, ((j * (i + 3)) % 17).toDouble)).toDF("id", "d"),
+        Seq(0.5, 0.25))
+    }
+    val plan = graft.operators.RankAggregate.topKDetailed(spark, facets, 5, 10)
+      .queryExecution.optimizedPlan
+    assert(plan.exists(_.isInstanceOf[Window]), plan.treeString.take(800))
+    val joinsAbove = plan.collect { case j: Join if j.exists(_.isInstanceOf[Window]) => j }
+    assert(joinsAbove.isEmpty, "the ranked rows must not re-join the pivot")
+    val pivots = plan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[Sum])) => a
+    }
+    assert(pivots.size == 1, s"${pivots.size} pivot aggregations: ${plan.treeString.take(800)}")
+  }
+
   test("multimodal pipeline: every near-dup stage is a bucketed " +
     "equi-join and every keep-survivors step an anti-join — no cartesian " +
     "product or nested-loop join anywhere in the composition") {
