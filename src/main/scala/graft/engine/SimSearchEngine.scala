@@ -502,19 +502,12 @@ object SimSearchEngine {
     val topMCache: Map[Int, DataFrame] = specs.indices.flatMap(i =>
       dists(i).map(d => i -> CacheScope.register(FacetSearch.topM(d, m).cache()))).toMap
     // Calibrate every uncalibrated facet's k-th candidate distance in ONE
-    // tagged Spark job (union only (f, d) so id types never conflict) —
-    // sequential per-facet collects would pay |facets| job overheads. The
-    // job also populates all the top-M caches in a single pass.
-    val needScale = specs.zipWithIndex.filter { case (s, i) =>
-      s.scale.isEmpty && dists(i).isDefined }
-    val kth: Map[Int, Double] =
-      if (needScale.isEmpty) Map.empty
-      else needScale.map { case (_, i) =>
-        topMCache(i).orderBy(col("d"), col("id")).limit(k)
-          .select(lit(i).as("f"), col("d"))
-      }.reduce(_ union _)
-        .groupBy(col("f")).agg(max(col("d")).as("dk"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    // tagged Spark job — sequential per-facet collects would pay |facets|
+    // job overheads. The job also populates all the top-M caches in a
+    // single pass.
+    val kth = RankAggregate.kthDistances(specs.indices
+      .filter(i => specs(i).scale.isEmpty && dists(i).isDefined)
+      .map(i => i -> topMCache(i)), k)
     def resolveWeights(s: SearchSpec, scored: => DataFrame): Seq[Double] =
       if (s.weights.size == nCombos) s.weights
       else if (s.weights.size == 1) Seq.fill(nCombos)(s.weights.head)
@@ -602,18 +595,13 @@ object SimSearchEngine {
     // hand them to search() via explicit SearchSpec.scale so neither pass
     // recomputes them. In-situ facets calibrate from their pushed bounded
     // top-k list instead of a local distance stream.
-    val need = specs.zipWithIndex.filter(_._1.scale.isEmpty)
-    val kth: Map[Int, Double] =
-      if (need.isEmpty) Map.empty
-      else need.map { case (s, i) =>
-        val dist = inSituByIdx.get(i) match {
+    val kth = RankAggregate.kthDistances(
+      specs.zipWithIndex.filter(_._1.scale.isEmpty).map { case (s, i) =>
+        i -> (inSituByIdx.get(i) match {
           case Some(f) => f.build(s, k).dist
           case None => distStream(catalog.get(s.column), s)
-        }
-        FacetSearch.topM(dist, k).select(lit(i).as("f"), col("d"))
-      }.reduce(_ union _)
-        .groupBy(col("f")).agg(max(col("d")).as("dk"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+        })
+      }, k)
     val scalesByIdx = specs.zipWithIndex.map { case (s, i) =>
       s.scale.getOrElse {
         val dk = kth.getOrElse(i, 0.0)

@@ -244,8 +244,9 @@ object Dedup {
     * the planner was broadcasting wholesale — the stream is filtered
     * against the HOT complement, bounded by occurrences/maxDf at any
     * scale (same kept rows: every fingerprint of the stream has a df, so
-    * rare and hot partition it; null never occurs but is excluded either
-    * way, as the inner join did). Inside a CacheScope the hot set is
+    * rare and hot partition it; a null fingerprint matches nothing, so it
+    * is dropped once, before any path, as the inner join did). Inside a
+    * CacheScope the hot set is
     * MEASURED — the probe job doubles as the materializer of the cached
     * stream, replacing the bare eager count — and, when it has at most
     * [[graft.api.Knobs.DedupHotFpInlineMax]] entries, inlined as a
@@ -254,12 +255,14 @@ object Dedup {
     * sides). A larger measured hot set, or an unmeasured (lazy,
     * out-of-scope) composition, anti-joins instead — scale-safe
     * unconditionally. */
-  private def dropHotFingerprints(occ: DataFrame, hot: DataFrame): DataFrame = {
+  private[graft] def dropHotFingerprints(occ: DataFrame, hot: DataFrame): DataFrame = {
     val inlineMax = occ.sparkSession.conf
       .get(graft.api.Knobs.DedupHotFpInlineMax, "65536").toInt
+    val live = occ.where(col("fp").isNotNull)
     val inlined =
       if (graft.util.CacheScope.inScope && inlineMax > 0) {
-        val h = hot.limit(inlineMax + 1).collect().map(_.getLong(0))
+        val h = hot.where(col("fp").isNotNull)
+          .limit(inlineMax + 1).collect().map(_.getLong(0))
         if (h.length <= inlineMax) Some(h.toSeq) else None
       } else {
         // no probe ran: keep the deterministic-cost contract for the
@@ -269,10 +272,9 @@ object Dedup {
         None
       }
     inlined match {
-      case Some(hs) if hs.isEmpty => occ
-      case Some(hs) => occ.where(!col("fp").isInCollection(hs))
-      case None =>
-        occ.where(col("fp").isNotNull).join(hot, Seq("fp"), "left_anti")
+      case Some(hs) if hs.isEmpty => live
+      case Some(hs) => live.where(!col("fp").isInCollection(hs))
+      case None => live.join(hot, Seq("fp"), "left_anti")
     }
   }
 

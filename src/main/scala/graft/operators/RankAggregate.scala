@@ -20,9 +20,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (100 TB): each facet's top-M is a shuffle-free
   * TakeOrderedAndProject over the facet scan; the candidate id-set
-  * (<= M * |facets| <= 50k * facets rows) is broadcast to the facet scans for
-  * the exact-scoring join, so no large table is ever shuffled; the final
-  * group-by/top-k runs over candidate rows only.
+  * (<= M * |facets| <= 50k * facets rows) is broadcast ONCE, to a join
+  * above the union of the per-facet exact-scoring streams, so the facet
+  * scans stream against it and no large table is ever shuffled; the final
+  * group-by/top-k runs over candidate rows only. A local facet whose cached
+  * top-M list holds every candidate (the list exhausted the facet, or it is
+  * the query's only facet) is scored from that list: the second full scan
+  * is paid only by facets the lists do not cover.
   */
 object RankAggregate {
 
@@ -48,7 +52,10 @@ object RankAggregate {
   /** `topMsIn`: pre-computed (and ideally cached) per-facet top-M candidate
     * frames, positionally matching `facets` — callers that already scanned
     * each facet for calibration (the engine's search path) pass them so
-    * phase 1 reads the caches instead of re-scanning every facet. */
+    * phase 1 reads the caches instead of re-scanning every facet. Each list
+    * must be the facet's (d, id)-ordered top-`m` (similarity-descending for
+    * a pre-scored facet): phase 2 scores a facet from its list alone when
+    * the list has fewer than `m` rows or is the only one. */
   def topK(spark: SparkSession, facets: Seq[BoundFacet], k: Int, m: Int,
       topMsIn: Option[Seq[DataFrame]] = None): DataFrame =
     run(spark, facets, k, m, detailed = false, topMsIn)
@@ -67,7 +74,7 @@ object RankAggregate {
     * per-facet top-M candidate lists in a single pass of the source through
     * the custom [[graft.plans.MultiTopM]] operator, instead of one
     * `orderBy.limit` scan per facet. Phase 2 (exact scoring of the
-    * candidate union) still reads the full per-facet distance streams, so
+    * candidate union) is [[topK]]'s, so
     * results are identical to [[topK]] for null-free distance streams (the
     * mount contract, P4 na.drop). For a NULLABLE distance expression the
     * two differ: MultiTopM excludes null distances from the candidates,
@@ -126,15 +133,8 @@ object RankAggregate {
     val topMs = facets.map(f => graft.util.CacheScope.register(
       FacetSearch.topM(source.select(id.as("id"),
         f.dist.cast("double").as("d")), m).cache()))
-    val needScale = facets.zipWithIndex.filter(_._1.scale.isEmpty)
-    val kth: Map[Int, Double] =
-      if (needScale.isEmpty) Map.empty
-      else needScale.map { case (_, i) =>
-        topMs(i).orderBy(col("d"), col("id")).limit(k)
-          .select(lit(i).as("f"), col("d"))
-      }.reduce(_ union _)
-        .groupBy(col("f")).agg(max(col("d")).as("dk"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val kth = kthDistances(
+      facets.indices.filter(facets(_).scale.isEmpty).map(i => i -> topMs(i)), k)
     val scales = facets.zipWithIndex.map { case (f, i) =>
       f.scale.getOrElse {
         val dk = kth.getOrElse(i, 0.0)
@@ -156,14 +156,9 @@ object RankAggregate {
     // [[run]]'s sMth, restricted to the shared-source facet shape (no
     // pre-scored facets possible here).
     lazy val sMth: Seq[Double] = {
-      val stats = topMs.zipWithIndex.map { case (tm, i) =>
-        tm.select(lit(i).as("f"), col("d"))
-      }.reduce(_ union _)
-        .groupBy(col("f"))
-        .agg(count(lit(1)).as("n"), max(col("d")).as("maxd"))
-        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      val stats = listStats(topMs)
       facets.zip(scales).zipWithIndex.map { case ((f, sc), i) =>
-        val (n, maxd) = stats.getOrElse(i, (0L, 0.0))
+        val (n, maxd, _) = stats.getOrElse(i, (0L, 0.0, 0.0))
         if (n < m) 0.0
         else if (f.jaccard && maxd == 1.0) 0.0
         else math.exp(-f.decay * maxd / sc)
@@ -202,24 +197,14 @@ object RankAggregate {
       graft.util.CacheScope.register(
         (if (f.preScored) f.dist.orderBy(col("d").desc, col("id")).limit(m)
          else FacetSearch.topM(f.dist, m)).cache())))
-    // Calibrate every facet's scale in ONE Spark job: tag each facet's
-    // deterministic top-k with its index, union, and take max(d) per facet
-    // (= the k-th candidate distance; boundary ties make the value
-    // independent of which tied ids the limit keeps). The reference runs one
-    // thread per facet for the same reason (SearchHandler.java:717-720);
-    // one tagged job beats |facets| separate jobs on per-job overhead and
-    // populates all the topM caches in a single pass. Only (f, d) is
-    // unioned so facets with different id types still combine.
-    val needScale = facets.zipWithIndex.filter { case (f, _) =>
-      f.scale.isEmpty && !f.preScored } // NRA facets have no distance to calibrate
-    val kth: Map[Int, Double] =
-      if (needScale.isEmpty) Map.empty
-      else needScale.map { case (_, i) =>
-        topMs(i).orderBy(col("d"), col("id")).limit(k)
-          .select(lit(i).as("f"), col("d"))
-      }.reduce(_ union _)
-        .groupBy(col("f")).agg(max(col("d")).as("dk"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    // Calibrate every facet's scale in ONE Spark job ([[kthDistances]]).
+    // The reference runs one thread per facet for the same reason
+    // (SearchHandler.java:717-720); one tagged job beats |facets| separate
+    // jobs on per-job overhead and populates all the topM caches in a
+    // single pass.
+    val kth = kthDistances(facets.indices.filter { i =>
+      facets(i).scale.isEmpty && !facets(i).preScored // NRA facets have no distance to calibrate
+    }.map(i => i -> topMs(i)), k)
     val scales = facets.zipWithIndex.map { case (f, i) =>
       f.scale.getOrElse {
         val dk = kth.getOrElse(i, 0.0) // absent = empty facet -> guard
@@ -227,13 +212,27 @@ object RankAggregate {
       }
     }
     val cands = topMs.map(_.select(col("id"))).reduce(_ union _).distinct()
+    // (count, max d, min d) of every cached list, in one tagged job that
+    // runs at most once, before phase 2: it decides which facets phase 2
+    // scores from their list and, in detailed mode, bounds the unseen
+    // entities (sMth below)
+    lazy val stats = listStats(topMs)
+    // A list holds every candidate's facet row when it exhausted the facet
+    // (fewer than m rows) or when it is the query's only list (the
+    // candidates ARE its ids).
+    def listCovers(i: Int): Boolean =
+      facets.size == 1 || stats.get(i).forall(_._1 < m)
 
-    // Phase 2: exact score for every candidate on every facet. Inner join per
-    // facet (broadcast the small candidate set); ids missing from a facet
-    // simply contribute no row => similarity 0 in the sum below, matching the
-    // reference's missing-value contract (RankAggregator.java:239-242).
-    // This is the only pass that scans the facets in full ("random access"
-    // becomes a broadcast-semi join pushed into the scan).
+    // Phase 2: exact score for every candidate on every facet; ids missing
+    // from a facet simply contribute no row => similarity 0 in the sum
+    // below, matching the reference's missing-value contract
+    // (RankAggregator.java:239-242). The per-facet streams are unioned and
+    // the union joins the broadcast candidate set ONCE ("random access"
+    // becomes one broadcast-semi join over the facet scans). A local facet
+    // whose cached list covers the candidates is scored from that list, so
+    // only facets their lists do not cover are scanned a second time.
+    // When every stream is a list, every row is already a candidate and
+    // the join is skipped.
     val perFacet = facets.zipWithIndex.map { case (f, i) =>
       // NRA facets join their bounded ranked list (their whole knowledge);
       // full facets stream their complete decayed scores; bounded facets
@@ -280,13 +279,18 @@ object RankAggregate {
               if (missing.isEmpty) dist
               else dist.union(dedupFetched(fetch(missing).toDF("id", "d")))
             FacetSearch.decayedWithScale(f.copy(dist = completed), scales(i))
+          case None if listCovers(i) =>
+            FacetSearch.decayedWithScale(f.copy(dist = topMs(i)), scales(i))
           case None => FacetSearch.decayedWithScale(f, scales(i))
         }
-      stream
-        .join(broadcast(cands), Seq("id"))
-        .select(col("id"), lit(i).as("f"), col("s"))
+      stream.select(col("id"), lit(i).as("f"), col("s"))
     }
-    val all = perFacet.reduce(_ union _)
+    val listsOnly = facets.indices.forall(i =>
+      facets(i).lookup.isEmpty && (facets(i).preScored || listCovers(i)))
+    val union = perFacet.reduce(_ union _)
+    val all =
+      if (listsOnly) union
+      else union.join(broadcast(cands), Seq("id"))
 
     // Pivot to one row per candidate with one similarity column per facet.
     // Each conditional sum collapses at most ONE row, so it is exact and
@@ -306,17 +310,10 @@ object RankAggregate {
     // unseen entity's facet similarity (decay is monotone in distance). A
     // result with score >= tau is provably in the true top-k; mirrors the
     // reference's per-result `exact` flag (RankedResult.setExact).
-    lazy val sMth: Seq[Double] = {
-      // one tagged job for all facets' (count, max d, min d) over the
-      // cached topMs; full facets bound unseen entities via the decayed
-      // M-th DISTANCE (max d), pre-scored facets directly via the M-th
-      // (minimum) listed SIMILARITY
-      val stats = topMs.zipWithIndex.map { case (tm, i) =>
-        tm.select(lit(i).as("f"), col("d"))
-      }.reduce(_ union _)
-        .groupBy(col("f"))
-        .agg(count(lit(1)).as("n"), max(col("d")).as("maxd"), min(col("d")).as("mind"))
-        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
+    // Full facets bound unseen entities via the decayed M-th DISTANCE
+    // (max d), pre-scored facets directly via the M-th (minimum) listed
+    // SIMILARITY.
+    lazy val sMth: Seq[Double] =
       facets.zip(scales).zipWithIndex.map { case ((f, sc), i) =>
         val (n, maxd, mind) = stats.getOrElse(i, (0L, 0.0, 0.0))
         if (f.preScored) {
@@ -330,11 +327,35 @@ object RankAggregate {
         else if (f.jaccard && maxd == 1.0) 0.0
         else math.exp(-f.decay * maxd / sc)
       }
-    }
 
     finish(pivoted, facets.map(f => (f.name, f.weightPerCombo)), k, nCombos,
       detailed, if (detailed) Some(sMth) else None)
   }
+
+  /** The k-th smallest distance d_k of each indexed `(id, d)` stream, in
+    * ONE Spark job: each stream's deterministic top-k is tagged with its
+    * index, the tagged lists are unioned, and max(d) is taken per index
+    * (boundary ties make the value independent of which tied ids the limit
+    * keeps). Only (f, d) is unioned, so streams with different id types
+    * still combine. An index whose stream is empty is absent from the
+    * result. Callers turn d_k into their own decay scale. */
+  private[graft] def kthDistances(dists: Seq[(Int, DataFrame)], k: Int): Map[Int, Double] =
+    if (dists.isEmpty) Map.empty
+    else dists.map { case (i, dist) =>
+      FacetSearch.topM(dist, k).select(lit(i).as("f"), col("d"))
+    }.reduce(_ union _)
+      .groupBy(col("f")).agg(max(col("d")).as("dk"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+
+  /** (row count, max d, min d) of each candidate list, keyed by position,
+    * in ONE tagged Spark job. A list with no rows is absent. */
+  private def listStats(lists: Seq[DataFrame]): Map[Int, (Long, Double, Double)] =
+    lists.zipWithIndex.map { case (tm, i) =>
+      tm.select(lit(i).as("f"), col("d"))
+    }.reduce(_ union _)
+      .groupBy(col("f"))
+      .agg(count(lit(1)).as("n"), max(col("d")).as("maxd"), min(col("d")).as("mind"))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
 
   /** Shared ranking tail: pivoted (id, s_0..s_n) -> per-combo global top-k.
     * All combos in ONE pass: per-combo scores become an exploded

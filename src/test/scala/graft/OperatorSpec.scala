@@ -109,9 +109,10 @@ class OperatorSpec extends SparkTestBase {
 
   test("RankAggregate.topKDetailed: s_<facet> values and exact flags match " +
     "a brute-force recomputation (3 facets, 2 combos, jaccard, missing ids)") {
+    // plus inputs whose cached lists cover the candidates: every facet's,
+    // one facet's beside two longer ones, and a single facet's
     val rnd = new scala.util.Random(23)
     val n = 60
-    val (k, m) = (5, 8)
     // f0 numeric, f1 jaccard (some disjoint d = 1.0), f2 covers 2 ids in 3
     val d0 = (0 until n).map(i => i.toLong -> rnd.nextDouble() * 50)
     val d1 = (0 until n).map(i => i.toLong ->
@@ -119,57 +120,74 @@ class OperatorSpec extends SparkTestBase {
     val d2 = (0 until n).filter(_ % 3 != 0).map(i => i.toLong -> rnd.nextDouble() * 5)
     val ws = Seq(Seq(0.6, 0.2), Seq(0.3, 0.9), Seq(0.5, 0.5))
     val jac = Seq(false, true, false)
-    val data = Seq(d0, d1, d2)
-    val facets = data.indices.map(i => BoundFacet(s"f$i", data(i).toDF("id", "d"),
-      ws(i), jaccard = jac(i)))
-    val got = RankAggregate.topKDetailed(spark, facets, k, m)
-    assert(got.columns.toSeq ==
-      Seq("id", "combo", "score", "rank", "exact", "s_f0", "s_f1", "s_f2"))
-
-    // brute force in plain Scala: per-facet (d, id)-ordered top-m, scale =
-    // k-th candidate distance, exact scores over the candidate union
     val decay = SimKernels.DefaultDecay
-    val topMs = data.map(_.sortBy { case (id, d) => (d, id) }.take(m))
-    val scales = topMs.map { tm =>
-      val dk = tm.take(k).map(_._2).max
-      if (dk <= 0) 1.0 else dk
-    }
-    def sim(i: Int, d: Double): Double =
-      if (jac(i) && d == 1.0) 0.0 else StrictMath.exp(-decay * d / scales(i))
-    val cands = topMs.flatMap(_.map(_._1)).distinct
-    val sims: Map[Long, Seq[Double]] = cands.map { id =>
-      id -> data.indices.map(i => data(i).find(_._1 == id).map(r => sim(i, r._2)).getOrElse(0.0))
-    }.toMap
     def round6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    // an unseen entity's facet similarity is bounded by the M-th candidate's
-    val sMth = data.indices.map { i =>
-      val maxd = topMs(i).map(_._2).max
-      if (topMs(i).size < m) 0.0
-      else if (jac(i) && maxd == 1.0) 0.0
-      else StrictMath.exp(-decay * maxd / scales(i))
-    }
-    val expected = (0 until 2).flatMap { c =>
-      val w = ws.map(_(c))
-      val tau = w.zip(sMth).map { case (a, b) => a * b }.sum / w.sum
-      cands.map { id =>
-        val s = sims(id)
-        (id, round6(w.zip(s).map { case (a, b) => a * b }.reduce(_ + _) / w.sum))
-      }.sortBy { case (id, sc) => (-sc, id) }.take(k).zipWithIndex.map {
-        case ((id, sc), r) => (c.toLong, r + 1L, id, sc, sc >= tau, sims(id))
+
+    /** Runs topKDetailed over facets 0..data.size-1 and compares it with a
+      * plain-Scala recomputation; returns the ranked rows and candidates. */
+    def check(data: Seq[Seq[(Long, Double)]], k: Int, m: Int) = {
+      val names = data.indices.map(i => s"s_f$i")
+      val facets = data.indices.map(i => BoundFacet(s"f$i", data(i).toDF("id", "d"),
+        ws(i), jaccard = jac(i)))
+      val got = RankAggregate.topKDetailed(spark, facets, k, m)
+      assert(got.columns.toSeq == Seq("id", "combo", "score", "rank", "exact") ++ names)
+
+      // brute force in plain Scala: per-facet (d, id)-ordered top-m, scale =
+      // k-th candidate distance, exact scores over the candidate union
+      val topMs = data.map(_.sortBy { case (id, d) => (d, id) }.take(m))
+      val scales = topMs.map { tm =>
+        val dk = tm.take(k).map(_._2).max
+        if (dk <= 0) 1.0 else dk
       }
+      def sim(i: Int, d: Double): Double =
+        if (jac(i) && d == 1.0) 0.0 else StrictMath.exp(-decay * d / scales(i))
+      val cands = topMs.flatMap(_.map(_._1)).distinct
+      val sims: Map[Long, Seq[Double]] = cands.map { id =>
+        id -> data.indices.map(i => data(i).find(_._1 == id).map(r => sim(i, r._2)).getOrElse(0.0))
+      }.toMap
+      // an unseen entity's facet similarity is bounded by the M-th candidate's
+      val sMth = data.indices.map { i =>
+        val maxd = topMs(i).map(_._2).max
+        if (topMs(i).size < m) 0.0
+        else if (jac(i) && maxd == 1.0) 0.0
+        else StrictMath.exp(-decay * maxd / scales(i))
+      }
+      val expected = (0 until 2).flatMap { c =>
+        val w = data.indices.map(ws(_)(c))
+        val tau = w.zip(sMth).map { case (a, b) => a * b }.sum / w.sum
+        cands.map { id =>
+          val s = sims(id)
+          (id, round6(w.zip(s).map { case (a, b) => a * b }.reduce(_ + _) / w.sum))
+        }.sortBy { case (id, sc) => (-sc, id) }.take(k).zipWithIndex.map {
+          case ((id, sc), r) => (c.toLong, r + 1L, id, sc, sc >= tau, sims(id))
+        }
+      }
+      val rows = got.collect().map(r => (r.getAs[Long]("combo"), r.getAs[Long]("rank"),
+        r.getAs[Long]("id"), r.getAs[Double]("score"), r.getAs[Boolean]("exact"),
+        names.map(r.getAs[Double](_))))
+        .sortBy(r => (r._1, r._2)).toSeq
+      assert(rows.map(r => (r._1, r._2, r._3, r._4, r._5)) ==
+        expected.map(e => (e._1, e._2, e._3, e._4, e._5)))
+      rows.zip(expected).foreach { case (g, e) =>
+        g._6.zip(e._6).foreach { case (a, b) => assert(math.abs(a - b) <= 1e-12, (g, e)) }
+      }
+      (rows, cands)
     }
-    val rows = got.collect().map(r => (r.getAs[Long]("combo"), r.getAs[Long]("rank"),
-      r.getAs[Long]("id"), r.getAs[Double]("score"), r.getAs[Boolean]("exact"),
-      Seq("s_f0", "s_f1", "s_f2").map(r.getAs[Double](_))))
-      .sortBy(r => (r._1, r._2)).toSeq
-    assert(rows.map(r => (r._1, r._2, r._3, r._4, r._5)) ==
-      expected.map(e => (e._1, e._2, e._3, e._4, e._5)))
-    rows.zip(expected).foreach { case (g, e) =>
-      g._6.zip(e._6).foreach { case (a, b) => assert(math.abs(a - b) <= 1e-12, (g, e)) }
-    }
+
+    // every list shorter than its facet: all three facets scanned again
+    val (rows, cands) = check(Seq(d0, d1, d2), 5, 8)
     // the fixture exercises both flag values and a candidate f2 lacks
     assert(rows.exists(_._5) && rows.exists(!_._5), rows)
     assert(cands.exists(_ % 3 == 0))
+    // m >= every facet's rows: every facet is scored from its list
+    check(Seq(d0, d1, d2), 5, n)
+    // one list (f2's 7 rows) exhausts its facet beside two longer facets
+    val short2 = d2.filter(_._1 < 11)
+    assert(short2.size == 7)
+    check(Seq(d0, d1, short2), 5, 8)
+    // a single facet: its list holds every candidate, whatever m is
+    check(Seq(d0), 5, 5)
+    check(Seq(d1), 3, 10)
   }
 
   test("RankAggregate: missing facet value contributes similarity 0") {

@@ -819,6 +819,35 @@ class PipelineOpsSpec extends SparkTestBase {
     }
   }
 
+  test("dropHotFingerprints: null fingerprints are dropped on every path — " +
+    "the empty inlined hot set, the inlined InSet filter and the anti-join") {
+    import graft.operators.Dedup
+    val occ = Seq[(Long, java.lang.Long)]((1L, 10L), (2L, 10L), (3L, 20L),
+      (4L, null), (5L, null)).toDF("id", "fp")
+    def kept(hot: Seq[java.lang.Long], scoped: Boolean): Set[(Long, Long)] = {
+      def body = Dedup.dropHotFingerprints(occ, hot.toDF("fp"))
+        .select("id", "fp").as[(Long, Long)].collect().toSet
+      if (scoped) graft.util.CacheScope.withScope(body) else body
+    }
+    def antiJoinInScope(hot: Seq[java.lang.Long]): Set[(Long, Long)] = {
+      spark.conf.set(graft.api.Knobs.DedupHotFpInlineMax, "0")
+      try kept(hot, scoped = true)
+      finally spark.conf.unset(graft.api.Knobs.DedupHotFpInlineMax)
+    }
+    val all = Set((1L, 10L), (2L, 10L), (3L, 20L))
+    // an empty hot set: inlined (scoped) and anti-joined (unscoped, or
+    // inlining disabled)
+    val none = Seq.empty[java.lang.Long]
+    assert(kept(none, scoped = true) == all)
+    assert(kept(none, scoped = false) == all)
+    assert(antiJoinInScope(none) == all)
+    // a hot fingerprint, and a null in the hot set itself
+    val hot = Seq[java.lang.Long](20L, null)
+    assert(kept(hot, scoped = true) == all - ((3L, 20L)))
+    assert(kept(hot, scoped = false) == all - ((3L, 20L)))
+    assert(antiJoinInScope(hot) == all - ((3L, 20L)))
+  }
+
   test("winnowSpans: recovers WHERE the copied passage sits in both " +
     "documents, on the correct alignment diagonal") {
     import graft.operators.Dedup

@@ -55,6 +55,52 @@ class PlanSpec extends SparkTestBase {
     assert(pivots.size == 1, s"${pivots.size} pivot aggregations: ${plan.treeString.take(800)}")
   }
 
+  test("served rank aggregation: ONE candidate broadcast for four facets, " +
+    "and a facet whose cached list covers the candidates is not scanned again") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import graft.api.{AttributeSpec, Facet, SimOp}
+    import graft.engine.SimSearchEngine
+    import graft.engine.SimSearchEngine.{Catalog, SearchSpec}
+    // k = 1 gives m = 1000 per list: facets a-c (1500 rows) are not covered
+    // by their lists, d (400 rows) is exhausted by its list
+    val rows = Seq("a" -> 1500, "b" -> 1500, "c" -> 1500, "d" -> 400)
+    val facets = rows.zipWithIndex.map { case ((name, n), j) =>
+      Facet(AttributeSpec(name, SimOp.Numerical),
+        (1 to n).map(i => (i.toLong, ((i * (j + 3)) % 101).toDouble)).toDF("id", "value"))
+    }
+    def broadcasts(df: org.apache.spark.sql.DataFrame): Int =
+      (df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).collect { case b: BroadcastExchangeExec => b }.size
+    // reads of a facet's resident (mount-time) cache entry; the top-M
+    // lists are cache entries of their own
+    def facetScans(df: org.apache.spark.sql.DataFrame, f: Facet): Int = {
+      val resident = f.df.select(col("*")).queryExecution.withCachedData
+        .collect { case r: InMemoryRelation => r.cacheBuilder }.head
+      df.queryExecution.optimizedPlan.collect {
+        case r: InMemoryRelation if r.cacheBuilder eq resident => r
+      }.size
+    }
+    val catalog = new Catalog(facets)
+    try graft.util.CacheScope.withScope {
+      val res = SimSearchEngine.search(spark, catalog, 1,
+        rows.map { case (name, _) => SearchSpec(name, 50.0, Seq(0.5)) }, detailed = true)
+      assert(broadcasts(res) == 1, res.queryExecution.executedPlan.treeString.take(2000))
+      assert(facets.map(facetScans(res, _)) == Seq(1, 1, 1, 0),
+        res.queryExecution.optimizedPlan.treeString.take(2000))
+      assert(res.count() == 1)
+      // a single facet's list holds every candidate: no facet is scanned
+      // again, and no candidate set is broadcast at all
+      val single = SimSearchEngine.search(spark, catalog, 1,
+        Seq(SearchSpec("a", 50.0, Seq(1.0))), detailed = true)
+      assert(broadcasts(single) == 0 && facetScans(single, facets.head) == 0,
+        single.queryExecution.executedPlan.treeString.take(2000))
+    } finally catalog.close()
+  }
+
   test("multimodal pipeline: every near-dup stage is a bucketed " +
     "equi-join and every keep-survivors step an anti-join — no cartesian " +
     "product or nested-loop join anywhere in the composition") {
