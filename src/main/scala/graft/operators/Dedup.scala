@@ -47,13 +47,6 @@ object Dedup {
     if (splits < par / 2) df.repartition(par) else df
   }
 
-  /** (id, shingles) -> near-duplicate pairs (a, b, j) with Jaccard >= minJ.
-    *
-    * Plan: shingle -> 16 md5 MinHash signatures -> 4 banded bucket keys ->
-    * explode -> self-equi-join on (band, key) with a < b -> distinct pairs ->
-    * re-join the shingle sets -> exact Jaccard verification. Probability a
-    * true pair with similarity s collides: 1 - (1 - s^4)^4 (~1.0 at s>=0.9).
-    */
   /** The guarded (id, g) shingle frame every banded operator starts from:
     * project-and-CACHE first, filter the empties on top of the cached
     * array. The order is a measured 13x: `select(g).where(size(g) > 0)`
@@ -68,6 +61,31 @@ object Dedup {
     val all = graft.util.CacheScope.register(
       spread(docs).select(col(id).as("id"), shingles.as("g")).cache())
     (all, all.where(size(col("g")) > 0))
+  }
+
+  /** (id, g) shingle frame -> (id, band, bv) exploded MinHash band keys:
+    * native one-pass band keys, bit-identical to the composed
+    * shingleHashes -> minhashSig -> bandKey chain (NativeKernelSpec). */
+  private def minhashBands(sh: DataFrame): DataFrame =
+    sh.select(col("id"), posexplode(
+        graft.functions.NativeKernels.bandKeys(col("g"), NumHashes, NumBands, RowsPerBand))
+      .as(Seq("band", "bv")))
+
+  /** Candidate-then-verify over MinHash band rows: the (a = x id,
+    * b = y id) pairs of `bx` and `by` that share a (band, bv) key and pass
+    * `idCond`, each once, verified by the exact Jaccard of the shingle
+    * sets `shA` / `shB`: (a, b, j) with j >= minJ. */
+  private def verifyJaccard(bx: DataFrame, by: DataFrame, idCond: Option[Column],
+      shA: DataFrame, shB: DataFrame, minJ: Double): DataFrame = {
+    val onKey = col("x.band") === col("y.band") && col("x.bv") === col("y.bv")
+    bx.as("x").join(by.as("y"), idCond.fold(onKey)(onKey && _))
+      .select(col("x.id").as("a"), col("y.id").as("b"))
+      .distinct()
+      .join(shA.select(col("id").as("a"), col("g").as("ga")), Seq("a"))
+      .join(shB.select(col("id").as("b"), col("g").as("gb")), Seq("b"))
+      .select(col("a"), col("b"),
+        SimKernels.jaccardSimDistinct(col("ga"), col("gb")).as("j"))
+      .where(col("j") >= minJ)
   }
 
   /** Near-duplicate pairs BETWEEN two corpora — (a = left id, b = right
@@ -87,22 +105,16 @@ object Dedup {
     require(minJ > 0, s"minJ must be positive, got $minJ")
     val (_, shL) = shingleFrame(left, idL, shinglesL)
     val (_, shR) = shingleFrame(right, idR, shinglesR)
-    def banded(sh: DataFrame) = sh.select(col("id"), posexplode(
-        graft.functions.NativeKernels.bandKeys(col("g"), NumHashes, NumBands, RowsPerBand))
-        .as(Seq("band", "bv")))
-    val cands = banded(shL).as("x")
-      .join(banded(shR).as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv"))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-      .distinct()
-    cands
-      .join(shL.select(col("id").as("a"), col("g").as("ga")), Seq("a"))
-      .join(shR.select(col("id").as("b"), col("g").as("gb")), Seq("b"))
-      .select(col("a"), col("b"),
-        SimKernels.jaccardSimDistinct(col("ga"), col("gb")).as("j"))
-      .where(col("j") >= minJ)
+    verifyJaccard(minhashBands(shL), minhashBands(shR), None, shL, shR, minJ)
   }
 
+  /** (id, shingles) -> near-duplicate pairs (a, b, j) with Jaccard >= minJ.
+    *
+    * Plan: shingle -> 16 md5 MinHash signatures -> 4 banded bucket keys ->
+    * explode -> self-equi-join on (band, key) with a < b -> distinct pairs ->
+    * re-join the shingle sets -> exact Jaccard verification. Probability a
+    * true pair with similarity s collides: 1 - (1 - s^4)^4 (~1.0 at s>=0.9).
+    */
   def minhashPairs(docs: DataFrame, id: String, shingles: Column, minJ: Double): DataFrame = {
     require(minJ > 0, s"minJ must be positive, got $minJ")
     // Cache the shingle sets and band keys: the LSH self-join and the
@@ -116,25 +128,8 @@ object Dedup {
     // only for the verify to discard every pair (jaccard with an empty
     // set is 0 < minJ). Same guard as simhashPairs' all-zero fingerprint.
     val (_, sh) = shingleFrame(docs, id, shingles)
-    // native one-pass band keys (bit-identical to the composed
-    // shingleHashes -> minhashSig -> bandKey chain, NativeKernelSpec)
-    val banded = sh
-      .select(col("id"), posexplode(
-        graft.functions.NativeKernels.bandKeys(col("g"), NumHashes, NumBands, RowsPerBand))
-        .as(Seq("band", "bv")))
-      .cache()
-      .pipe(graft.util.CacheScope.register(_))
-    val pairs = banded.as("x")
-      .join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-      .distinct()
-    pairs
-      .join(sh.select(col("id").as("a"), col("g").as("ga")), Seq("a"))
-      .join(sh.select(col("id").as("b"), col("g").as("gb")), Seq("b"))
-      .select(col("a"), col("b"), SimKernels.jaccardSimDistinct(col("ga"), col("gb")).as("j"))
-      .where(col("j") >= minJ)
+    val banded = minhashBands(sh).cache().pipe(graft.util.CacheScope.register(_))
+    verifyJaccard(banded, banded, Some(col("x.id") < col("y.id")), sh, sh, minJ)
   }
 
   // ------------------------------------------------- incremental (indexed)
@@ -183,9 +178,7 @@ object Dedup {
       // forever. (The streaming batchId path self-heals either way: the
       // replay dynamic-overwrites both tables.)
       write(sh, "shingles")
-      write(sh.select(col("id"), posexplode(
-          graft.functions.NativeKernels.bandKeys(col("g"), NumHashes, NumBands, RowsPerBand))
-          .as(Seq("band", "bv"))), "bands")
+      write(minhashBands(sh), "bands")
     } finally shAll.unpersist()
   }
 
@@ -216,25 +209,11 @@ object Dedup {
     // see minhashPairs: empty shingle sets all share one constant band key
     // (cache-then-filter order per shingleFrame)
     val (_, sh) = shingleFrame(newDocs, id, shingles)
-    val banded = sh.select(col("id"), posexplode(
-        graft.functions.NativeKernels.bandKeys(col("g"), NumHashes, NumBands, RowsPerBand))
-        .as(Seq("band", "bv")))
     val idx = IndexIO.excludeBatch(
       spark.read.parquet(s"$indexPath/bands"), excludeBatch)
-    val cands = broadcast(banded).as("x")
-      .join(idx.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-          col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-      .distinct()
-    cands
-      .join(sh.select(col("id").as("a"), col("g").as("ga")), Seq("a"))
-      .join(IndexIO.excludeBatch(
-          spark.read.parquet(s"$indexPath/shingles"), excludeBatch)
-        .select(col("id").as("b"), col("g").as("gb")), Seq("b"))
-      .select(col("a"), col("b"),
-        SimKernels.jaccardSimDistinct(col("ga"), col("gb")).as("j"))
-      .where(col("j") >= minJ)
+    verifyJaccard(broadcast(minhashBands(sh)), idx, Some(col("x.id") =!= col("y.id")),
+      sh, IndexIO.excludeBatch(spark.read.parquet(s"$indexPath/shingles"), excludeBatch),
+      minJ)
   }
 
   /** Drop occurrence rows whose fingerprint is corpus-HOT (df above the
@@ -438,17 +417,11 @@ object Dedup {
   /** (id, tokens) -> near-duplicate pairs (a, b, hamming) with 64-bit
     * SimHash hamming distance <= maxHamming (<= 3 is exhaustive).
     *
-    * Plan: one-pass 64-bit SimHash signed bit-sums -> 4 x 16-bit band
-    * values -> exact-fingerprint collapse (the [[hammingPairs]] hot-band
-    * skew guard): the band self-equi-join runs over DISTINCT fingerprints
-    * only, with hamming = sum of per-band bit_count(xor) verified INSIDE
-    * the join; verified fingerprint pairs expand back to doc pairs
-    * through two linear joins, and each repeated fingerprint's carrier
-    * pairs (hamming 0) come from a plain fingerprint-equi self-join AQE
-    * can skew-split — k boilerplate docs cost the band join one row, not
-    * k per band. By pigeonhole, two fingerprints within hamming 3 agree
-    * on at least one of the 4 bands, so maxHamming <= 3 misses nothing;
-    * the 16-bit band space (65536 values/band) keeps buckets sparse at
+    * Plan: one-pass 64-bit SimHash signed bit-sums -> [[hammingPairs]] over
+    * the 64-bit code, i.e. the banded core [[bandedCarrierPairs]]: 4 x
+    * 16-bit bands, hamming = bit_count(xor) verified INSIDE the join, and
+    * the adaptive exact-fingerprint collapse for repeated fingerprints.
+    * The 16-bit band space (65536 values/band) keeps buckets sparse at
     * corpus scale — the same never-all-pairs discipline as
     * [[minhashPairs]]. Unlike MinHash (set Jaccard), SimHash hamming
     * tracks weighted feature overlap and runs one cheap verify op per
@@ -473,26 +446,116 @@ object Dedup {
     * text fingerprints, factored out for signatures computed elsewhere
     * (perceptual image dHash from
     * [[graft.multimodal.Multimodal.imageHash]], an externally-computed
-    * SimHash, any 64-bit locality-preserving code).
+    * SimHash, any 64-bit locality-preserving code). maxHamming <= 3 is
+    * exhaustive. The all-zero signature is excluded (the degenerate
+    * contentless code — a flat image, an empty document).
     *
-    * Plan (exact-signature collapse — the hot-band skew guard): the band
-    * join runs over DISTINCT signatures only. 1) collapse carriers to
-    * their distinct signatures; 2) band the distinct signatures (4 x
-    * 16-bit shift/mask Catalyst expressions), self-equi-join on
-    * (band, value), verify hamming = bit_count(xor) INSIDE the join
-    * ([[distinctSigPairs]]); 3) expand verified signature pairs back to
-    * id pairs through two linear joins on the signature, plus the
-    * hamming-0 pairs of each multi-carrier signature group. Pigeonhole:
-    * two signatures within hamming 3 agree on at least one band, so
-    * maxHamming <= 3 is exhaustive — capture is IDENTICAL to banding
-    * every carrier, but a corpus-wide boilerplate signature (a constant
-    * white frame, a site-wide intro card) with k carriers now costs the
-    * band join ONE row instead of k rows per band: verify work is
-    * quadratic in distinct signatures per bucket, never in carriers, and
-    * the k(k-1)/2 hamming-0 carrier pairs (the operator's actual output)
-    * are produced by a plain sig-equi self-join AQE can skew-split. The
-    * all-zero signature is still excluded (the degenerate contentless
-    * code — a flat image, an empty document). */
+    * Plan: [[bandedCarrierPairs]] — the exact-signature collapse or direct
+    * banding, chosen by the measured carrier histogram (sig, n). */
+  def hammingPairs(sigs: DataFrame, id: String, sig: String,
+      maxHamming: Int = 3): DataFrame = {
+    require(maxHamming <= 3, s"4 bands of 16 bits only guarantee capture up to hamming 3, got $maxHamming")
+    // Input contract: ONE signature row per id (every producer — one hash
+    // per image/clip/document — satisfies it). Under it no pair can
+    // repeat, so there is NO distinct over the (possibly cohort-quadratic)
+    // output, and no input dedup either. Duplicate input rows would emit
+    // duplicate pairs.
+    val base = carrierFrame(sigs, id, None, sig)
+    // one aggregate yields the carrier histogram steering the adaptive
+    // guard, the distinct signatures for the collapse's band join, AND the
+    // multi-carrier groups whose hamming-0 SELF pairs ride the expansion
+    // joins (cached narrow; its probe job materializes `base` too)
+    val sigStats = base.groupBy("sig").agg(count(lit(1)).as("n"))
+    val hot = collapseNeeded(sigs,
+      measuredMaxima(sigStats, max(col("n"))).map(_.head))
+    bandedCarrierPairs(base, sigStats, hot, maxHamming)
+  }
+
+  /** Near-duplicate pairs between SEQUENCES of 64-bit signatures —
+    * (a, b, d, n_match): documents a < b share `n_match` positions whose
+    * signatures lie within `maxHamming`, all on alignment diagonal
+    * d = pos_a - pos_b. The video near-dup back end (per-frame dHash
+    * sequences from [[graft.multimodal.Multimodal.videoFrameHashes]]):
+    * a re-encoded copy matches every sampled frame at d = 0; a trimmed
+    * copy matches on one shifted diagonal — the same diagonal-run idea as
+    * [[winnowSpans]], with banded-Hamming frame matching in place of
+    * fingerprint equality. Works unchanged for any signature sequence
+    * (audio energy windows, shingled page hashes).
+    *
+    * Plan: the matched frame pairs of [[bandedCarrierPairs]] (each
+    * emitted exactly once — one signature per (id, pos) is the producers'
+    * contract) -> one map-side-combined count per (a, b, diagonal). Never
+    * all-pairs; a boilerplate frame shared by k clips costs the collapse's
+    * band join ONE row instead of k x 4. The all-zero signature stays
+    * excluded. `minMatch` drops coincidental single-frame collisions.
+    *
+    * `maxDf` is the boilerplate policy (the [[winnowPairs]] df-cap,
+    * recall trade documented there): a signature carried by more than
+    * `maxDf` DISTINCT documents — a site-wide intro card, a constant
+    * white frame, identical silence windows — contributes no match
+    * evidence. Without it the carrier expansion of that one signature is
+    * k(k-1)/2 frame pairs that minMatch then discards almost entirely;
+    * with it the expansion is bounded by maxDf^2 per signature. The
+    * default (4096) is far above any genuine re-encode group and far
+    * below corpus boilerplate carrier counts; a pair that IS a true
+    * near-dup loses only its ultra-common frames' votes and still
+    * matches on the rest of its schedule. */
+  def frameSigPairs(frames: DataFrame, id: String, pos: String, sig: String,
+      maxHamming: Int = 3, minMatch: Long = 2, maxDf: Long = 4096): DataFrame = {
+    require(maxHamming <= 3, s"4 bands of 16 bits only guarantee capture up to hamming 3, got $maxHamming")
+    require(minMatch >= 1, s"minMatch must be at least 1, got $minMatch")
+    require(maxDf >= 1, s"maxDf must be at least 1, got $maxDf")
+    val base0 = carrierFrame(frames, id, Some(pos), sig)
+    // ONE aggregate serves the boilerplate cap, the distinct-sig frame
+    // the collapse's band join runs on, the multi-carrier groups whose
+    // same-signature frame pairs ride the same expansion joins as the
+    // cross pairs, AND the histograms steering the adaptive guard (df
+    // counts DISTINCT documents — a signature repeating within one clip,
+    // a static shot, must not count toward the cap).
+    val sigStatsAll = base0.groupBy("sig")
+      .agg(count_distinct(col("id")).as("df"), count(lit(1)).as("n"))
+    // Measured (inside a scope; the probe job materializes base0 too):
+    // is the boilerplate cap binding at all, and does any CAP-SURVIVING
+    // signature's carrier cohort make band-bucket work quadratic?
+    val maxima = measuredMaxima(sigStatsAll, max(col("df")),
+      max(when(col("df") <= maxDf, col("n"))))
+    // unmeasured -> assume the cap binds and the collapse is needed; a
+    // cap that does not bind skips the filter and the semi-join too
+    val capNeeded = maxima.forall(_.head > maxDf)
+    val sigStats =
+      if (capNeeded) sigStatsAll.where(col("df") <= maxDf) else sigStatsAll
+    val base =
+      if (capNeeded) base0.join(sigStats.select(col("sig")), Seq("sig"), "left_semi")
+      else base0
+    bandedCarrierPairs(base, sigStats,
+        collapseNeeded(frames, maxima.map(_(1))), maxHamming)
+      .groupBy(col("a"), col("b"), (col("pa") - col("pb")).as("d"))
+      .agg(count(lit(1)).as("n_match"))
+      .where(col("n_match") >= minMatch)
+  }
+
+  /** The guarded (id, [pos,] sig) projection every banded-Hamming path
+    * starts from: positions and signatures cast to long, null and
+    * all-zero signatures excluded (the zero code is the degenerate
+    * contentless one — k stored or joined zeros would candidate-join each
+    * other k times). */
+  private[graft] def guardedSigs(df: DataFrame, id: String, pos: Option[String],
+      sig: String): DataFrame =
+    spread(df)
+      .select(col(id).as("id") +: pos.map(col(_).cast("long").as("pos")).toSeq :+
+        col(sig).cast("long").as("sig"): _*)
+      .where(col("sig").isNotNull && col("sig") =!= 0L)
+
+  /** [[guardedSigs]], cached unless the producer already owns its cache
+    * ([[ownsCache]]): the banded operators read it from several consumers
+    * (histogram aggregate + join sides). */
+  private def carrierFrame(df: DataFrame, id: String, pos: Option[String],
+      sig: String): DataFrame = {
+    val projected = guardedSigs(df, id, pos, sig)
+    if (ownsCache(projected)) graft.util.CacheScope.register(projected.cache())
+    else projected
+  }
+
   /** The banded joins read their guarded signature projection from
     * several consumers (histogram aggregate + join sides), so a producer
     * handing a RAW decode/hash chain gets it cached (the deterministic-
@@ -501,26 +564,27 @@ object Dedup {
     * already-cached relation owns materialization itself: a second cache
     * + materialization job per near-dup stage would be pure overhead.
     * "Trivial" is checked structurally — only column-shuffling Projects
-    * (attribute / cast / struct-field / literal expressions), Filters and
-    * repartitions may sit between the root and the cache; an expensive
-    * uncached map ABOVE a deep cache (a decode projection over a cached
-    * scan fragment) still gets the guard, which the blunt any-cache-
-    * anywhere test this replaces (r16) did not guarantee. */
+    * (attribute / cast / struct-field / literal expressions), Filters
+    * whose condition is a boolean combination of null tests and
+    * comparisons over such expressions, and repartitions may sit between
+    * the root and the cache. An expensive uncached map ABOVE a deep cache
+    * (a decode projection over a cached scan fragment, a higher-order or
+    * UDF predicate over a cached frame) still gets the guard. */
   private[graft] def ownsCache(projected: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Expression, GetStructField, Literal}
+    import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.plans.logical
     def trivial(e: Expression): Boolean = e match {
       case _: AttributeReference | _: Literal => true
-      case a: Alias => trivial(a.child)
-      case c: Cast => trivial(c.child)
-      case g: GetStructField => trivial(g.child)
+      case _: Alias | _: Cast | _: GetStructField | _: Not | _: IsNull |
+          _: IsNotNull | _: And | _: Or | _: BinaryComparison =>
+        e.children.forall(trivial)
       case _ => false
     }
     def rootedInCache(p: logical.LogicalPlan): Boolean = p match {
       case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
       case pr: logical.Project if pr.projectList.forall(trivial) =>
         rootedInCache(pr.child)
-      case f: logical.Filter => rootedInCache(f.child)
+      case f: logical.Filter if trivial(f.condition) => rootedInCache(f.child)
       case r: logical.RepartitionOperation => rootedInCache(r.child)
       case _ => false
     }
@@ -545,197 +609,84 @@ object Dedup {
       Some(aggs.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i)))
     }
 
-  private def hotSigThreshold(df: DataFrame): Long =
-    df.sparkSession.conf.get(graft.api.Knobs.DedupHotSigCarriers, "1024").toLong
+  /** The adaptive guard's decision from the measured largest carrier
+    * cohort of any signature: collapse when it passes
+    * Knobs.DedupHotSigCarriers (a threshold <= 0 always collapses).
+    * Unmeasured (None, outside a scope), the collapse stays on. */
+  private def collapseNeeded(df: DataFrame, maxCarriers: Option[Long]): Boolean = {
+    val t = df.sparkSession.conf.get(graft.api.Knobs.DedupHotSigCarriers, "1024").toLong
+    maxCarriers.forall(m => t <= 0 || m > t)
+  }
 
-  def hammingPairs(sigs: DataFrame, id: String, sig: String,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3, s"4 bands of 16 bits only guarantee capture up to hamming 3, got $maxHamming")
-    // Input contract: ONE signature row per id (every producer — one hash
-    // per image/clip/document — satisfies it). Under it no pair can
-    // repeat: cross pairs appear once per distinct-signature pair, within
-    // pairs once per carrier pair — so there is NO distinct over the
-    // (possibly cohort-quadratic) output, and no input dedup either.
-    // Duplicate input rows would emit duplicate pairs.
-    val projected = spread(sigs)
-      .select(col(id).as("id"), col(sig).cast("long").as("sig"))
-      .where(col("sig").isNotNull && col("sig") =!= 0L)
-    val base =
-      if (ownsCache(projected)) graft.util.CacheScope.register(projected.cache())
-      else projected
-    // one aggregate yields the carrier histogram steering the adaptive
-    // guard, the distinct signatures for the collapse's band join, AND the
-    // multi-carrier groups whose hamming-0 SELF pairs ride the expansion
-    // joins (cached narrow; its probe job materializes `base` too)
-    val sigStats = base.groupBy("sig").agg(count(lit(1)).as("n"))
-    // Adaptive hot-band skew guard (r17): the exact-signature collapse
-    // protects the band join from carrier cohorts whose bucket work is
-    // quadratic in carriers — but when the MEASURED histogram shows no
-    // signature past the Knobs.DedupHotSigCarriers threshold, the
-    // collapse's aggregate + two expansion joins are pure overhead and the
-    // carrier rows are banded directly (identical output by construction:
-    // both paths emit each colliding pair once from its first agreeing
-    // band). Unmeasured (outside a scope), the collapse stays on.
-    val hot = measuredMaxima(sigStats, max(col("n"))) match {
-      case Some(Seq(maxCarriers)) =>
-        val t = hotSigThreshold(sigs); t <= 0 || maxCarriers > t
-      case _ => true
-    }
+  /** The banded-Hamming core of [[hammingPairs]] and [[frameSigPairs]]:
+    * the matched carrier pairs (a, b, [pa, pb,] hamming), a < b, of a
+    * guarded (id, [pos,] sig) frame ([[guardedSigs]]), given its carrier
+    * histogram `sigStats` (sig, n, ...) and the guard's decision `hot`
+    * ([[collapseNeeded]]). Each pair is emitted once (one signature per
+    * id, or per (id, pos), is the producers' contract): no distinct.
+    * Pigeonhole: two signatures within hamming 3 agree on at least one of
+    * the 4 x 16-bit bands, so maxHamming <= 3 misses nothing, and both
+    * paths keep a pair from its first agreeing band only
+    * ([[firstAgreeingBandOnly]]): their outputs are identical.
+    *
+    * Hot — the exact-signature collapse (the hot-band skew guard): the
+    * band join runs over DISTINCT signatures, verifying hamming =
+    * bit_count(xor) INSIDE the join ([[distinctSigPairs]]); verified
+    * signature pairs, plus the hamming-0 self pair of each multi-carrier
+    * signature, expand back to carrier pairs through two linear joins on
+    * the signature. A boilerplate signature (a constant white frame, a
+    * site-wide intro card) with k carriers costs the band join ONE row,
+    * not k per band, and its k(k-1)/2 carrier pairs come from a plain
+    * sig-equi join AQE can skew-split.
+    *
+    * Cold — direct banding: when the MEASURED histogram shows no cohort
+    * past the threshold, the collapse's aggregate and expansion joins are
+    * pure overhead; the carrier rows are banded, self-equi-joined on
+    * (band, value) with a < b and verified row-locally. */
+  private def bandedCarrierPairs(base: DataFrame, sigStats: DataFrame,
+      hot: Boolean, maxHamming: Int): DataFrame = {
+    val seq = base.columns.contains("pos")
     if (hot) {
       val selfPairs = sigStats.where(col("n") >= 2)
         .select(col("sig").as("sa"), col("sig").as("sb"), lit(0L).as("hamming"))
       val sigPairs = distinctSigPairs(sigStats.select(col("sig")), maxHamming)
         .union(selfPairs)
-      sigPairs
-        .join(base.select(col("sig").as("sa"), col("id").as("ia")), "sa")
-        .join(base.select(col("sig").as("sb"), col("id").as("ib")), "sb")
+      def side(s: String) = base.select(col("sig").as(s"s$s") +:
+        col("id").as(s"i$s") +: (if (seq) Seq(col("pos").as(s"q$s")) else Nil): _*)
+      val flip = col("ia") < col("ib")
+      def ordered(x: String, y: String, as: String, bs: String) = Seq(
+        when(flip, col(x)).otherwise(col(y)).as(as),
+        when(flip, col(y)).otherwise(col(x)).as(bs))
+      sigPairs.join(side("a"), "sa").join(side("b"), "sb")
         .where((col("sa") =!= col("sb") && col("ia") =!= col("ib")) ||
           (col("sa") === col("sb") && col("ia") < col("ib")))
-        .select(least(col("ia"), col("ib")).as("a"),
-          greatest(col("ia"), col("ib")).as("b"), col("hamming"))
+        .select(ordered("ia", "ib", "a", "b") ++
+          (if (seq) ordered("qa", "qb", "pa", "pb") else Nil) :+ col("hamming"): _*)
     } else {
-      val banded = explodeBands(base)
+      val banded = bandRows(base)
       banded.as("x").join(banded.as("y"),
           col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
             col("x.id") < col("y.id"))
         .where(firstAgreeingBandOnly(col("x.sig"), col("y.sig"), col("x.band")))
-        .select(col("x.id").as("a"), col("y.id").as("b"),
-          bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).cast("long").as("hamming"))
+        .select(Seq(col("x.id").as("a"), col("y.id").as("b")) ++
+          (if (seq) Seq(col("x.pos").as("pa"), col("y.pos").as("pb")) else Nil) :+
+          bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).cast("long").as("hamming"): _*)
         .where(col("hamming") <= maxHamming)
     }
   }
 
-  /** Near-duplicate pairs between SEQUENCES of 64-bit signatures —
-    * (a, b, d, n_match): documents a < b share `n_match` positions whose
-    * signatures lie within `maxHamming`, all on alignment diagonal
-    * d = pos_a - pos_b. The video near-dup back end (per-frame dHash
-    * sequences from [[graft.multimodal.Multimodal.videoFrameHashes]]):
-    * a re-encoded copy matches every sampled frame at d = 0; a trimmed
-    * copy matches on one shifted diagonal — the same diagonal-run idea as
-    * [[winnowSpans]], with banded-Hamming frame matching in place of
-    * fingerprint equality. Works unchanged for any signature sequence
-    * (audio energy windows, shingled page hashes).
-    *
-    * Plan (exact-signature collapse, as in [[hammingPairs]]): collapse
-    * frames to their DISTINCT signatures; band those (4 x 16 bits),
-    * self-equi-join on (band, value), verify hamming = bit_count(xor)
-    * INSIDE the join ([[distinctSigPairs]], pigeonhole-exhaustive at
-    * maxHamming <= 3); expand verified signature pairs back to frame
-    * pairs through two linear joins plus the cross-id frame pairs of
-    * each repeated-signature group (each matched frame pair emitted
-    * exactly once — one signature per (id, pos) is the producers'
-    * contract) -> one map-side-combined count per (a, b, diagonal). Never
-    * all-pairs, and — the skew guard — a boilerplate frame shared by k
-    * clips (a constant intro card, identical silence windows) costs the
-    * band join ONE row instead of k x 4: verify work is quadratic only
-    * in distinct signatures per bucket; the carrier expansion is a plain
-    * sig-equi join AQE can skew-split. The all-zero signature stays
-    * excluded. `minMatch` drops coincidental single-frame collisions.
-    *
-    * `maxDf` is the boilerplate policy (the [[winnowPairs]] df-cap,
-    * recall trade documented there): a signature carried by more than
-    * `maxDf` DISTINCT documents — a site-wide intro card, a constant
-    * white frame, identical silence windows — contributes no match
-    * evidence. Without it the carrier expansion of that one signature is
-    * k(k-1)/2 frame pairs that minMatch then discards almost entirely;
-    * with it the expansion is bounded by maxDf^2 per signature. The
-    * default (4096) is far above any genuine re-encode group and far
-    * below corpus boilerplate carrier counts; a pair that IS a true
-    * near-dup loses only its ultra-common frames' votes and still
-    * matches on the rest of its schedule. */
-  def frameSigPairs(frames: DataFrame, id: String, pos: String, sig: String,
-      maxHamming: Int = 3, minMatch: Long = 2, maxDf: Long = 4096): DataFrame = {
-    require(maxHamming <= 3, s"4 bands of 16 bits only guarantee capture up to hamming 3, got $maxHamming")
-    require(minMatch >= 1, s"minMatch must be at least 1, got $minMatch")
-    require(maxDf >= 1, s"maxDf must be at least 1, got $maxDf")
-    val projected = spread(frames)
-      .select(col(id).as("id"), col(pos).cast("long").as("pos"),
-        col(sig).cast("long").as("sig"))
-      .where(col("sig").isNotNull && col("sig") =!= 0L)
-    val base0 =
-      if (ownsCache(projected)) graft.util.CacheScope.register(projected.cache())
-      else projected
-    // ONE aggregate serves the boilerplate cap, the distinct-sig frame
-    // the collapse's band join runs on, the multi-carrier groups whose
-    // same-signature frame pairs ride the same expansion joins as the
-    // cross pairs, AND the histograms steering the adaptive guard (df
-    // counts DISTINCT documents — a signature repeating within one clip,
-    // a static shot, must not count toward the cap).
-    val sigStatsAll = base0.groupBy("sig")
-      .agg(count_distinct(col("id")).as("df"), count(lit(1)).as("n"))
-    // Measured (inside a scope; the probe job materializes base0 too):
-    // is the boilerplate cap binding at all, and does any CAP-SURVIVING
-    // signature's carrier cohort make band-bucket work quadratic?
-    val maxima = measuredMaxima(sigStatsAll, max(col("df")),
-      max(when(col("df") <= maxDf, col("n"))))
-    // unmeasured -> assume the cap binds and the collapse is needed
-    val capNeeded = maxima.forall(_.head > maxDf)
-    val sigStats =
-      if (capNeeded) sigStatsAll.where(col("df") <= maxDf) else sigStatsAll
-    val hot = maxima match {
-      case Some(Seq(_, maxCarriers)) =>
-        val t = hotSigThreshold(frames); t <= 0 || maxCarriers > t
-      case _ => true
-    }
-    if (hot) {
-      val okSigs = sigStats.select(col("sig"))
-      val selfPairs = sigStats.where(col("n") >= 2)
-        .select(col("sig").as("sa"), col("sig").as("sb"), lit(0L).as("hamming"))
-      val sigPairs = distinctSigPairs(okSigs, maxHamming).union(selfPairs)
-      val base =
-        if (capNeeded) base0.join(okSigs, Seq("sig"), "left_semi") else base0
-      val flip = col("ia") < col("ib")
-      // no distinct before the count: one signature per (id, pos) is the
-      // producers' contract, so each matched (a, b, pa, pb) is emitted
-      // exactly once — a distinct would shuffle the whole expansion again
-      sigPairs
-        .join(base.select(col("sig").as("sa"), col("id").as("ia"),
-          col("pos").as("qa")), "sa")
-        .join(base.select(col("sig").as("sb"), col("id").as("ib"),
-          col("pos").as("qb")), "sb")
-        .where((col("sa") =!= col("sb") && col("ia") =!= col("ib")) ||
-          (col("sa") === col("sb") && col("ia") < col("ib")))
-        .select(when(flip, col("ia")).otherwise(col("ib")).as("a"),
-          when(flip, col("ib")).otherwise(col("ia")).as("b"),
-          when(flip, col("qa")).otherwise(col("qb")).as("pa"),
-          when(flip, col("qb")).otherwise(col("qa")).as("pb"))
-        .groupBy(col("a"), col("b"), (col("pa") - col("pb")).as("d"))
-        .agg(count(lit(1)).as("n_match"))
-        .where(col("n_match") >= minMatch)
-    } else {
-      // Direct banding (no hot signature measured): band every carrier
-      // frame row, self-equi-join on (band, bv) with a < b, row-local
-      // first-agreeing-band + hamming verify — identical matched frame
-      // pairs, none of the collapse's expansion joins. The boilerplate
-      // cap still applies (identity when the measured max df is under
-      // the cap, so the semi-join is skipped too).
-      val capped =
-        if (capNeeded) base0.join(sigStats.select(col("sig")), Seq("sig"), "left_semi")
-        else base0
-      val banded = explodeBands(capped)
-      banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-            col("x.id") < col("y.id"))
-        .where(firstAgreeingBandOnly(col("x.sig"), col("y.sig"), col("x.band")))
-        .where(bit_count(col("x.sig").bitwiseXOR(col("y.sig"))) <= maxHamming)
-        .groupBy(col("x.id").as("a"), col("y.id").as("b"),
-          (col("x.pos") - col("y.pos")).as("d"))
-        .agg(count(lit(1)).as("n_match"))
-        .where(col("n_match") >= minMatch)
-    }
-  }
+  /** Band `j` (bits [16j, 16j+16)) of a 64-bit signature. */
+  private def bandVal(sig: Column, j: Int): Column =
+    shiftrightunsigned(sig, j * 16).bitwiseAND(lit(0xffffL))
 
-  /** Fan an already-guarded carrier frame (id, [pos,] sig) out to its 4
-    * 16-bit band rows (band i = bits [16i, 16i+16)), every input column
-    * riding along — the direct-banding path of the adaptive skew guard,
-    * where carrier rows are banded without the exact-signature
-    * collapse. */
-  private def explodeBands(base: DataFrame): DataFrame = {
-    val keep = base.columns.map(col)
-    base.select(keep :+ explode(array((0 until 4).map(i =>
-        struct(lit(i).as("band"),
-          shiftrightunsigned(col("sig"), i * 16).bitwiseAND(lit(0xffffL))
-            .as("bv"))): _*)).as("bb"): _*)
+  /** Fan a frame with a 64-bit `sig` column out to its 4 16-bit band rows
+    * (band, bv), every input column riding along — the one band explode
+    * of the core's direct path, [[sigBandCandidates]] and the Hamming
+    * index writer and probe. */
+  private def bandRows(df: DataFrame): DataFrame = {
+    val keep = df.columns.map(col)
+    df.select(keep :+ explode(array((0 until 4).map(i =>
+        struct(lit(i).as("band"), bandVal(col("sig"), i).as("bv"))): _*)).as("bb"): _*)
       .select(keep :+ col("bb.band") :+ col("bb.bv"): _*)
   }
 
@@ -745,12 +696,9 @@ object Dedup {
     * this row-local filter, eliminating the distinct pass (an Exchange +
     * two HashAggregates over every verified pair) the banded joins once
     * paid (r16; the output set is provably identical). */
-  private def firstAgreeingBandOnly(sa: Column, sb: Column, band: Column): Column = {
-    def bandVal(c: Column, j: Int) =
-      shiftrightunsigned(c, j * 16).bitwiseAND(lit(0xffffL))
+  private def firstAgreeingBandOnly(sa: Column, sb: Column, band: Column): Column =
     (0 until 3).map(j => band <= j || bandVal(sa, j) =!= bandVal(sb, j))
       .reduce(_ && _)
-  }
 
   /** Candidate pairs (sa, sb), sa < sb, of a one-column `sig` frame of
     * DISTINCT 64-bit signatures that collide in at least one of the 4 x
@@ -760,11 +708,7 @@ object Dedup {
     * distinct-signature pairs per bucket, independent of how many
     * carriers each signature has. */
   private[graft] def sigBandCandidates(distinctSigs: DataFrame): DataFrame = {
-    val ex = distinctSigs.select(col("sig"),
-        explode(array((0 until 4).map(i => struct(lit(i).as("band"),
-          shiftrightunsigned(col("sig"), i * 16).bitwiseAND(lit(0xffffL))
-            .as("bv"))): _*)).as("bb"))
-      .select(col("sig"), col("bb.band"), col("bb.bv"))
+    val ex = bandRows(distinctSigs)
     ex.as("x")
       .join(ex.as("y"),
         col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
@@ -819,14 +763,7 @@ object Dedup {
   /** (id, sig, band, bv) exploded band rows of a signature frame, zero
     * signatures excluded — shared by the index writer and the probe. */
   private def bandedSigs(sigs: DataFrame, id: String, sig: String): DataFrame =
-    spread(sigs)
-      .select(col(id).as("id"), col(sig).cast("long").as("sig"))
-      .where(col("sig").isNotNull && col("sig") =!= 0L)
-      .select(col("id"), col("sig"),
-        explode(array((0 until 4).map(i => struct(lit(i).as("band"),
-          shiftrightunsigned(col("sig"), i * 16).bitwiseAND(lit(0xffffL))
-            .as("bv"))): _*)).as("bb"))
-      .select(col("id"), col("sig"), col("bb.band"), col("bb.bv"))
+    bandRows(guardedSigs(sigs, id, None, sig))
 
   /** Near-duplicate pairs (a = new-batch id, b = indexed id, hamming)
     * between a NEW batch's 64-bit signatures and a persisted

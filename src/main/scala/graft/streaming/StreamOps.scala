@@ -551,29 +551,37 @@ object StreamOps {
   private[graft] def videoBatch(batch: DataFrame, batchId: Long,
       everyMs: Long, indexPath: String, maxHamming: Int, minMatch: Long,
       writeBatch: (DataFrame, Long) => Unit): Unit =
+    frameSeqBatch(batch, batchId, indexPath, maxHamming, minMatch, writeBatch) {
+      media => graft.multimodal.Multimodal.videoFrameHashes(media, everyMs).toDF()
+        .where(col("decoded"))
+        .select(col("id"), col("frame_idx"), col("dhash"))
+    }
+
+  /** The micro-batch body [[videoBatch]] and [[audioSeqBatch]] share
+    * (crash contract in [[videoDedupStream]]): `decode` maps the (id,
+    * kind, data) payloads to the decoded frames' three signature columns
+    * (id, pos, sig). */
+  private def frameSeqBatch(batch: DataFrame, batchId: Long, indexPath: String,
+      maxHamming: Int, minMatch: Long, writeBatch: (DataFrame, Long) => Unit)
+      (decode: DataFrame => DataFrame): Unit =
     graft.util.CacheScope.withScope {
       import graft.operators.{Dedup, IndexIO}
       val spark = batch.sparkSession
       IndexIO.recoverSwap(spark, indexPath)
       val hasIndex = IndexIO.hasData(spark, s"$indexPath/bands")
-      val frames = graft.multimodal.Multimodal.videoFrameHashes(
-          batch.select(col("id"), col("kind"), col("data")), everyMs).toDF()
-        .where(col("decoded"))
-        .select(col("id"), col("frame_idx"), col("dhash"))
-        .cache()
-      val inBatch = Dedup.frameSigPairs(frames, "id", "frame_idx", "dhash",
-        maxHamming, minMatch)
+      val frames = decode(batch.select(col("id"), col("kind"), col("data"))).cache()
+      val Seq(id, pos, sig) = frames.columns.toSeq
+      val inBatch = Dedup.frameSigPairs(frames, id, pos, sig, maxHamming, minMatch)
       val pairs = (if (hasIndex)
-          inBatch.union(Dedup.incrementalFrameSigPairs(frames, "id",
-            "frame_idx", "dhash", indexPath, maxHamming, minMatch,
-            excludeBatch = Some(batchId)))
+          inBatch.union(Dedup.incrementalFrameSigPairs(frames, id, pos, sig,
+            indexPath, maxHamming, minMatch, excludeBatch = Some(batchId)))
         else inBatch).cache()
       try {
         pairs.count() // pin results before the index grows (see dedupBatch)
         writeBatch(pairs, batchId)
         if (!frames.isEmpty) // an all-undecodable batch must not commit
-          Dedup.writeFrameSigIndex(frames, "id", "frame_idx", "dhash",
-            indexPath, batchId = Some(batchId))
+          Dedup.writeFrameSigIndex(frames, id, pos, sig, indexPath,
+            batchId = Some(batchId))
       } finally { pairs.unpersist(); frames.unpersist() }
     }
 
@@ -607,30 +615,10 @@ object StreamOps {
   private[graft] def audioSeqBatch(batch: DataFrame, batchId: Long,
       windowMs: Long, indexPath: String, maxHamming: Int, minMatch: Long,
       writeBatch: (DataFrame, Long) => Unit): Unit =
-    graft.util.CacheScope.withScope {
-      import graft.operators.{Dedup, IndexIO}
-      val spark = batch.sparkSession
-      IndexIO.recoverSwap(spark, indexPath)
-      val hasIndex = IndexIO.hasData(spark, s"$indexPath/bands")
-      val wins = graft.multimodal.Multimodal.audioSeqSignatures(
-          batch.select(col("id"), col("kind"), col("data")), windowMs).toDF()
+    frameSeqBatch(batch, batchId, indexPath, maxHamming, minMatch, writeBatch) {
+      media => graft.multimodal.Multimodal.audioSeqSignatures(media, windowMs).toDF()
         .where(col("decoded"))
         .select(col("id"), col("window_idx"), col("sig"))
-        .cache()
-      val inBatch = Dedup.frameSigPairs(wins, "id", "window_idx", "sig",
-        maxHamming, minMatch)
-      val pairs = (if (hasIndex)
-          inBatch.union(Dedup.incrementalFrameSigPairs(wins, "id",
-            "window_idx", "sig", indexPath, maxHamming, minMatch,
-            excludeBatch = Some(batchId)))
-        else inBatch).cache()
-      try {
-        pairs.count() // pin results before the index grows (see dedupBatch)
-        writeBatch(pairs, batchId)
-        if (!wins.isEmpty) // an all-undecodable batch must not commit
-          Dedup.writeFrameSigIndex(wins, "id", "window_idx", "sig",
-            indexPath, batchId = Some(batchId))
-      } finally { pairs.unpersist(); wins.unpersist() }
     }
 
   /** Streaming corpus profiling: every micro-batch appends its

@@ -1083,6 +1083,61 @@ class PipelineOpsSpec extends SparkTestBase {
       .as[(Long, Long, Long, Long)].collect().toSet)
     assert(cappedDirect == cappedCollapse)
     assert(cappedCollapse != collapseFrm) // the cap actually bound
+
+    // near matches, against a brute-force count over (a < b,
+    // d = pos_a - pos_b): 8 clips open on one boilerplate frame; clips 0-3
+    // carry one source sequence with 0-3 seeded bit flips per frame
+    // (clips 2 and 3 trimmed by one frame); clip 4 repeats a signature
+    // inside the clip, and clip 5 carries that signature once
+    val rnd = new scala.util.Random(17)
+    def flipBits(s: Long, k: Int) = rnd.shuffle((0 until 64).toList).take(k)
+      .foldLeft(s)((x, bit) => x ^ (1L << bit))
+    val boiler = 0x00ffcc11aa22bb33L
+    val source = Seq.fill(5)(rnd.nextLong() | 1L)
+    val rep = rnd.nextLong() | 1L
+    val near: Seq[(Long, Long, Long)] = (0 until 8).flatMap { c =>
+      val body: Seq[Long] =
+        if (c < 4) source.drop(c / 2).map(s => flipBits(s, rnd.nextInt(4)))
+        else if (c == 4) Seq(rep, rnd.nextLong() | 1L, rep)
+        else if (c == 5) Seq(rnd.nextLong() | 1L, rep)
+        else Seq.fill(3)(rnd.nextLong() | 1L)
+      (boiler +: body).zipWithIndex.map { case (s, p) => (c.toLong, p.toLong, s) }
+    }
+    val nearRows = near.toDF("id", "frame_idx", "sig")
+    val carriers = near.groupBy(_._3).map { case (s, fs) => s -> fs.map(_._1).distinct.size }
+    var nearHit = false
+    for (maxH <- Seq(0, 2, 3); minMatch <- Seq(1L, 2L); maxDf <- Seq(4096L, 5L)) {
+      val live = near.filter { case (_, _, s) => carriers(s) <= maxDf }
+      val matched = (for {
+        (ia, pa, sa) <- live; (ib, pb, sb) <- live if ia < ib
+        h = java.lang.Long.bitCount(sa ^ sb) if h <= maxH
+      } yield ((ia, ib, pa - pb), h)).groupBy(_._1)
+        .filter(_._2.size >= minMatch)
+      val expected = matched.map { case ((a, b, d), ms) => (a, b, d, ms.size.toLong) }.toSet
+      nearHit ||= matched.values.exists(_.exists(_._2 > 0))
+      def run() = Dedup.frameSigPairs(nearRows, "id", "frame_idx", "sig",
+          maxH, minMatch, maxDf)
+        .as[(Long, Long, Long, Long)].collect().toSet
+      val label = s"maxHamming=$maxH minMatch=$minMatch maxDf=$maxDf"
+      assert(run() == expected, s"collapse, $label")
+      assert(inScope(run()) == expected, s"direct, $label")
+    }
+    assert(nearHit, "the fixture must match a frame pair at hamming > 0")
+  }
+
+  test("ownsCache: the guarded projection over a cached frame owns its " +
+    "cache; a higher-order or UDF predicate over it, or an uncached " +
+    "chain, gets the guard's cache") {
+    val cached = Seq((1L, 5L, Seq(1, 2)), (2L, 0L, Seq(3)))
+      .toDF("id", "sig", "xs").cache()
+    try {
+      assert(!Dedup.ownsCache(Dedup.guardedSigs(cached, "id", None, "sig")))
+      assert(Dedup.ownsCache(cached.where(exists(col("xs"), x => x > 2))))
+      val odd = udf((x: Long) => x % 2 == 1)
+      assert(Dedup.ownsCache(cached.where(odd(col("sig")))))
+      assert(Dedup.ownsCache(Dedup.guardedSigs(
+        spark.range(10).select(col("id"), col("id").as("sig")), "id", None, "sig")))
+    } finally cached.unpersist()
   }
 
   test("compactHammingIndex maxDf drops corpus-boilerplate signatures " +
