@@ -1,8 +1,6 @@
 package graft
 import scala.util.chaining._
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A failed query is reported as -1 (and named in
   * "errors") instead of silently contributing a near-zero time. */
@@ -19,13 +17,7 @@ object Bench {
     df.write.format("noop").mode("overwrite").save()
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.LocalSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Warm up the JVM/codegen/JIT paths so the first timed query is not
     // charged for one-time initialization: md5 + higher-order array ops
@@ -235,6 +227,12 @@ object Bench {
         (if (second.sentinelSpread < first.sentinelSpread) second else first, 2)
       } else (first, 1)
     val noisy = chosen.sentinelSpread > NoisySpread
+    // stop BEFORE any output: nothing (a late executor WARN line, a
+    // stop-time log) may land on stdout after the summary — it must be the
+    // literal last line of the process for the collector's last-line JSON
+    // parse (sbt's own decoration is disabled in build.sbt). A failed stop
+    // is recorded in the file artifact, never in the frozen summary line.
+    val stopFailed = stopFails(spark.stop())
     // index builds memoize per-JVM, so a retry's setup phase re-measures a
     // no-op: always report the FIRST attempt's build times
     val setupTimes = first.setupTimes
@@ -267,7 +265,7 @@ object Bench {
     val sentSummary = s""""sentinel_min":${r3(chosen.sentinelTimes.min)},""" +
       s""""sentinel_max":${r3(chosen.sentinelTimes.max)},""" +
       s""""sentinel_sec":$sentSec,"sentinel_loadavg":$sentLoad,""" +
-      s""""query_noise":$queryNoise,"git_sha":"$gitSha""""
+      s""""query_noise":$queryNoise,"git_sha":"$gitSha","stop_failed":$stopFailed"""
     val setup = setupTimes
       .map { case (k, t) => "\"" + k + "\":" + r3(t) }.mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_last":$qsLast,"index_build_sec":$setup,"reps":$reps,"noisy":$noisy,"attempts":$attempts,"rep_failures":$repFails,"loadavg":"$loadavg",$sentSummary,"errors":$errs,"sf":"$sfDir"}"""
@@ -332,11 +330,15 @@ object Bench {
       s""""sentinel_max":${r3(chosen.sentinelTimes.max)},""" +
       s""""n_query_noise":$nFlagged,"git_sha":"$gitSha",""" +
       s""""per_query_in":"bench/last_run.json","sf":"$sfDir"}"""
-    // stop BEFORE the final print: nothing (a late executor WARN line, a
-    // stop-time log) may land on the output after the summary — it must be
-    // the literal last line of the process for the collector's last-line
-    // JSON parse (sbt's own decoration is disabled in build.sbt)
-    try spark.stop() catch { case _: Throwable => () }
     println(summaryLine)
   }
+
+  /** Runs `stop` and reports whether it threw a non-fatal error (logged to
+    * stderr); a fatal one propagates. */
+  private[graft] def stopFails(stop: => Unit): Boolean =
+    try { stop; false }
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] spark.stop() failed: $e")
+      true
+    }
 }

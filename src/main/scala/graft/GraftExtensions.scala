@@ -18,8 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.functions.NativeKernels.sqlFunctions.foreach(ext.injectFunction)
     GraftExtensions.composedFunctions.foreach(ext.injectFunction)
-    // whole-operator extension: fused multi-facet top-M (plans/MultiTopM)
-    ext.injectPlannerStrategy(_ => graft.plans.MultiTopM.Strategy)
   }
 }
 

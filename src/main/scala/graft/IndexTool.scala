@@ -58,11 +58,7 @@ object IndexTool {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { println(usage); sys.exit(2) }
-    val spark = SparkSession.builder()
-      .appName(s"graft-index-tool-${args.head}")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .getOrCreate()
+    val spark = graft.util.LocalSession(s"graft-index-tool-${args.head}")
     try {
       val rc = run(spark, args)
       if (rc != 0) sys.exit(rc)

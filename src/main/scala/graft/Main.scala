@@ -18,13 +18,7 @@ import graft.engine.SimSearchEngine.Catalog
 object Main {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-simsearch")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.util.LocalSession("graft-simsearch")
     spark.sparkContext.setLogLevel("WARN")
     try repl(spark, new BufferedReader(new java.io.InputStreamReader(System.in)), System.out)
     finally spark.stop() // even when stdin dies mid-session

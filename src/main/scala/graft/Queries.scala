@@ -215,14 +215,9 @@ object Queries {
     .parse("1997-06-15T00:00:00").toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
 
   /** The three order facets over ONE cached codegen'd distance projection.
-    * Returned both as the shared frame + SharedFacet columns (for the
-    * MultiTopM paths) and buildable as per-facet BoundFacets below.
-    *
-    * Candidate generation strategy is m-dependent (measured, DebugAB):
-    * the fused MultiTopM scan wins when m << rows-per-partition (the 100 TB
-    * shape, and the k=5 calibration here); at m = 10000 ~ 2x the local
-    * partition row count the bounded heaps cannot prune, so the aggregation
-    * queries keep the per-facet TakeOrderedAndProject passes over the cache. */
+    * Returned both as the shared frame + SharedFacet columns (for
+    * [[RankAggregate.topKSharedScan]]) and buildable as per-facet
+    * BoundFacets below. */
   private def orderShared(s: SparkSession, dir: String, combos: Seq[Seq[Double]])
       : (DataFrame, Column, Seq[RankAggregate.SharedFacet]) = {
     val o = spread(t(s, dir, "orders")).select(col("o_orderkey"),
@@ -245,7 +240,7 @@ object Queries {
     val (o, id, fs) = orderShared(s, dir, combos)
     fs.zipWithIndex.map { case (f, i) =>
       BoundFacet(f.name, o.select(id.as("id"), col(s"d$i").as("d")),
-        f.weightPerCombo, f.decay, f.scale, f.jaccard)
+        f.weightPerCombo, f.decay, jaccard = f.jaccard)
     }
   }
 
@@ -326,23 +321,24 @@ object Queries {
   private val simMatrix: (SparkSession, String) => DataFrame = (s, dir) => {
     val (o, oid, fs) = orderShared(s, dir, combos1)
     val k = 5
-    // calibrate all three facet scales in ONE fused MultiTopM scan, then
-    // hand them to topKShared so the aggregation does not recompute them
-    val kth = graft.plans.MultiTopM(o, oid, fs.map(_.dist), k)
-      .groupBy(col("facet")).agg(max(col("d")).as("dk"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val scales = fs.indices.map { i =>
-      val dk = kth.getOrElse(i, 0.0)
-      if (dk <= 0.0) 1.0 else dk
-    }
-    val cal = fs.zip(scales).map { case (f, sc) => f.copy(scale = Some(sc)) }
     // k <= K_MAX = 50 ids: collect them once so the k x k matrix job filters
     // the value scan directly instead of re-executing the whole rank-agg DAG
     // as a join input (the reference's ResultMatrix also works off the
     // already-materialized ranked list, ResultMatrix.java:62-71); fused
     // shared-source scoring (optimization r16, see multiFacet)
-    val ids = RankAggregate.topKSharedScan(s, o, oid, cal, k, 1000 * k)
+    val ids = RankAggregate.topKSharedScan(s, o, oid, fs, k, 1000 * k)
       .select(col("id")).collect().map(_.getLong(0)).toSeq
+    // the matrix decays with the same per-facet scales the aggregation
+    // calibrated (the k-th distance of each facet), read in one tagged job
+    // from the projection the aggregation left resident. Calibrating BEFORE
+    // the aggregation would scan the not-yet-materialized cache once per
+    // facet: one more Spark job for the query.
+    val kth = RankAggregate.kthDistances(fs.zipWithIndex.map { case (f, i) =>
+      i -> o.select(oid.as("id"), f.dist.cast("double").as("d")) }, k)
+    val scales = fs.indices.map { i =>
+      val dk = kth.getOrElse(i, 0.0)
+      if (dk <= 0.0) 1.0 else dk
+    }
     val vals = t(s, dir, "orders").select(col("o_orderkey").as("id"),
       col("o_totalprice").as("v0"),
       unix_micros(col("o_orderdate").cast("timestamp")).cast("double").as("v1"),

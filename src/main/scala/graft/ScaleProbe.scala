@@ -18,13 +18,8 @@ import graft.operators._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.LocalSession("graft-scale-probe")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("md5(cast(id as string))").count() // warmup
 
@@ -124,12 +119,12 @@ object ScaleProbe {
       val docs = (0 until mult).map { i =>
         docs0.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
           regexp_replace(col("text"), "([a-z]+)", s"r$i$$1").as("text"))
-      }.reduce(_ union _).repartition(cpus.toInt).cache()
+      }.reduce(_ union _).repartition(cpus).cache()
       docs.count() // materialize outside the timer
 
       val emb = (0 until mult).map { i =>
         emb0.select((col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("v"))
-      }.reduce(_ union _).repartition(cpus.toInt).cache()
+      }.reduce(_ union _).repartition(cpus).cache()
       emb.count()
 
       val tMinhash = timeIt {
@@ -331,7 +326,7 @@ object ScaleProbe {
         emb0.select((col("vec_id") + lit(i * 10000000L)).as("vec_id"),
           org.apache.spark.sql.functions.transform(col("v"),
             (x, j) => when(j === 0, x + lit(i * 8.0)).otherwise(x)).as("v"))
-      }.reduce(_ union _).repartition(cpus.toInt).cache()
+      }.reduce(_ union _).repartition(cpus).cache()
       embShift.count()
       // centroids sampled HASH-UNIFORMLY across the whole (shifted) corpus:
       // taking the k smallest ids would draw every centroid from replica 0,

@@ -164,12 +164,7 @@ object Dedup {
     val (shAll, sh) = shingleFrame(docs, id, shingles)
     try {
       def write(df: DataFrame, sub: String): Unit =
-        if (batchId.isDefined)
-          IndexIO.writeBatch(df, s"$path/$sub", batchId, Seq.empty)
-        else
-          df.withColumn(IndexIO.BatchCol, lit(-1L))
-            .write.mode(if (append) "append" else "overwrite")
-            .partitionBy(IndexIO.BatchCol).parquet(s"$path/$sub")
+        IndexIO.writeBatch(df, s"$path/$sub", batchId, Seq.empty, append)
       // shingles commit FIRST: the two tables are two writes, and a crash
       // between them must fail CLOSED. Orphan shingle rows (shingles
       // committed, bands not) are inert — no band key ever references
@@ -751,13 +746,7 @@ object Dedup {
     val spark = sigs.sparkSession
     IndexIO.recoverSwap(spark, path)
     if (IndexIO.alreadyCompacted(spark, path, batchId)) return
-    val rows = bandedSigs(sigs, id, sig)
-    if (batchId.isDefined)
-      IndexIO.writeBatch(rows, s"$path/bands", batchId, Seq.empty)
-    else
-      rows.withColumn(IndexIO.BatchCol, lit(-1L))
-        .write.mode(if (append) "append" else "overwrite")
-        .partitionBy(IndexIO.BatchCol).parquet(s"$path/bands")
+    IndexIO.writeBatch(bandedSigs(sigs, id, sig), s"$path/bands", batchId, Seq.empty, append)
   }
 
   /** (id, sig, band, bv) exploded band rows of a signature frame, zero
@@ -930,10 +919,7 @@ object Dedup {
     if (graft.operators.IndexIO.alreadyCompacted(docs.sparkSession, path, batchId)) return
     val fps = spread(docs)
       .select(TextKernels.fingerprint(text).as("fp"), col(id).as("id"))
-    if (batchId.isDefined) IndexIO.writeBatch(fps, path, batchId, Seq.empty)
-    else fps.withColumn(IndexIO.BatchCol, lit(-1L))
-      .write.mode(if (append) "append" else "overwrite")
-      .partitionBy(IndexIO.BatchCol).parquet(path)
+    IndexIO.writeBatch(fps, path, batchId, Seq.empty, append)
   }
 
   /** Exact duplicates of a NEW batch against a persisted
@@ -1078,7 +1064,7 @@ object Dedup {
     IndexIO.recoverSwap(spark, path) // a crashed swap leaves the index at __old
     val tmp = path + "__compacting"
     val folded = Seq("bands", "shingles")
-      .map(sub => compactTable(spark, s"$path/$sub", s"$tmp/$sub", through)).max
+      .map(sub => IndexIO.compactTable(spark, s"$path/$sub", s"$tmp/$sub", through)).max
     IndexIO.writeMeta(spark, tmp,
       IndexIO.metaWithCompactedThrough(spark, path, folded))
     IndexIO.swapDirs(spark, path, tmp)
@@ -1098,10 +1084,6 @@ object Dedup {
     IndexIO.compactFlatTable(spark, path, through)
     if (hadBloom) writeFingerprintBloom(spark, path)
   }
-
-  private def compactTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String, tmp: String, through: Option[Long]): Long =
-    IndexIO.compactTable(spark, dir, tmp, through)
 
   /** Connected components over a near-duplicate pair list: (node, cluster)
     * where cluster = the minimum node id reachable through the pair graph.

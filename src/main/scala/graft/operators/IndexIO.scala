@@ -88,18 +88,20 @@ private[graft] object IndexIO {
     mapper.writeValueAsString(node)
   }
 
-  /** Append `df` under the batch partition level: dynamic-overwrite of the
-    * batch's own directories when `batchId` is set (replay-idempotent),
-    * plain append into `batch=-1` otherwise. `partitionCols` are the
-    * partition levels ABOVE batch (e.g. the ANN bucket). */
+  /** Commit `df` under the batch partition level: dynamic-overwrite of the
+    * batch's own directories when `batchId` is set (replay-idempotent, and
+    * `append` is ignored — the batch directory is the unit of commit);
+    * otherwise into `batch=-1`, appended to the table or, with `append`
+    * false, replacing it. `partitionCols` are the partition levels ABOVE
+    * batch (e.g. the ANN bucket). */
   def writeBatch(df: DataFrame, path: String, batchId: Option[Long],
-      partitionCols: Seq[String]): Unit = {
+      partitionCols: Seq[String], append: Boolean = true): Unit = {
     val out = df.withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
       .write.partitionBy(partitionCols :+ BatchCol: _*)
     batchId match {
       case Some(_) => out.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic").parquet(path)
-      case None => out.mode("append").parquet(path)
+      case None => out.mode(if (append) "append" else "overwrite").parquet(path)
     }
   }
 

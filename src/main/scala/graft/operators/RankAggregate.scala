@@ -60,44 +60,14 @@ object RankAggregate {
       topMsIn: Option[Seq[DataFrame]] = None): DataFrame =
     run(spark, facets, k, m, detailed = false, topMsIn)
 
-  /** One facet of a [[topKShared]] query: a distance COLUMN over the shared
-    * source (instead of a standalone dist frame). */
+  /** One facet of a [[topKSharedScan]] query: a distance COLUMN over the
+    * shared source (instead of a standalone dist frame). */
   final case class SharedFacet(
       name: String,
       dist: org.apache.spark.sql.Column,
       weightPerCombo: Seq[Double],
       decay: Double = graft.functions.SimKernels.DefaultDecay,
-      scale: Option[Double] = None,
       jaccard: Boolean = false)
-
-  /** As [[topK]] for facets sharing ONE source frame: phase 1 computes ALL
-    * per-facet top-M candidate lists in a single pass of the source through
-    * the custom [[graft.plans.MultiTopM]] operator, instead of one
-    * `orderBy.limit` scan per facet. Phase 2 (exact scoring of the
-    * candidate union) is [[topK]]'s, so
-    * results are identical to [[topK]] for null-free distance streams (the
-    * mount contract, P4 na.drop). For a NULLABLE distance expression the
-    * two differ: MultiTopM excludes null distances from the candidates,
-    * while a composed orderBy would rank them first (ASC = NULLS FIRST) —
-    * the exclusion is the intended semantics.
-    *
-    * Choose this when m is well under the source's rows-per-partition (the
-    * large-cluster shape: |facets| full scans collapse into one); when m is
-    * comparable to partition row counts the per-task heaps cannot prune and
-    * [[topK]]'s codegen'd per-facet TakeOrdered passes over a cached
-    * projection measure faster (DebugAB). */
-  def topKShared(spark: SparkSession, source: DataFrame,
-      id: org.apache.spark.sql.Column, facets: Seq[SharedFacet],
-      k: Int, m: Int, detailed: Boolean = false): DataFrame = {
-    val multi = graft.util.CacheScope.register(
-      graft.plans.MultiTopM(source, id, facets.map(_.dist), m).cache())
-    val topMs = facets.indices.map(i =>
-      multi.where(col("facet") === i).select(col("id"), col("d")))
-    val bound = facets.map(f => BoundFacet(f.name,
-      source.select(id.as("id"), f.dist.cast("double").as("d")),
-      f.weightPerCombo, f.decay, f.scale, f.jaccard))
-    run(spark, bound, k, m, detailed, Some(topMs))
-  }
 
   /** As [[topK]] for facets sharing ONE source frame, with a FUSED exact-
     * scoring phase: because every facet is a distance COLUMN over the same
@@ -111,14 +81,12 @@ object RankAggregate {
     * candidate id appears exactly once per facet stream either way, so the
     * pivot's conditional sum was a no-op re-expression of the same decayed
     * similarity — asserted row-for-row against [[topK]] in OperatorSpec).
-    * PRECONDITION (as in [[topKShared]]): the facet distance expressions
-    * must be null-free over the source — [[run]]'s pivot coalesces a
-    * missing facet score to 0.0, while the fused weighted sum would carry
-    * a null distance into a null score.
+    * PRECONDITION: the facet distance expressions must be null-free over
+    * the source (the mount contract, P4 na.drop) — [[run]]'s pivot
+    * coalesces a missing facet score to 0.0, while the fused weighted sum
+    * would carry a null distance into a null score.
     * Phase 1 stays the per-facet codegen'd TakeOrderedAndProject over the
-    * (typically cached) source — the measured winner at m comparable to
-    * rows-per-partition (see [[topKShared]]'s scaladoc for the MultiTopM
-    * alternative at m << rows-per-partition). */
+    * (typically cached) source. */
   def topKSharedScan(spark: SparkSession, source: DataFrame,
       id: org.apache.spark.sql.Column, facets: Seq[SharedFacet],
       k: Int, m: Int, detailed: Boolean = false): DataFrame = {
@@ -133,13 +101,10 @@ object RankAggregate {
     val topMs = facets.map(f => graft.util.CacheScope.register(
       FacetSearch.topM(source.select(id.as("id"),
         f.dist.cast("double").as("d")), m).cache()))
-    val kth = kthDistances(
-      facets.indices.filter(facets(_).scale.isEmpty).map(i => i -> topMs(i)), k)
-    val scales = facets.zipWithIndex.map { case (f, i) =>
-      f.scale.getOrElse {
-        val dk = kth.getOrElse(i, 0.0)
-        if (dk <= 0.0) 1.0 else dk
-      }
+    val kth = kthDistances(facets.indices.map(i => i -> topMs(i)), k)
+    val scales = facets.indices.map { i =>
+      val dk = kth.getOrElse(i, 0.0)
+      if (dk <= 0.0) 1.0 else dk
     }
     val cands = topMs.map(_.select(col("id"))).reduce(_ union _).distinct()
     // Phase 2 (fused): one broadcast-semi pass computes all facet scores.

@@ -27,22 +27,22 @@ object Word2Vec {
     * @param dict     (term, vector: array<double>) — lower-case terms
     * @param dim      vector dimensionality */
   def transform(tokensDf: DataFrame, dict: DataFrame, dim: Int): DataFrame = {
-    // dim-length dictionary vectors are the join-boundary contract: the
-    // parallel dim sums below read element_at(_v, 1..dim), and a SHORT
-    // vector would silently contribute null dimensions (and throw under
-    // spark.sql.ansi.enabled) where the old posexplode shape produced a
-    // short output vector. Enforce loudly instead of diverging.
     val d = dict.select(col("term").as("_t"), col("vector").as("_v"))
-      .select(col("_t"),
-        when(size(col("_v")) >= dim, col("_v"))
-          .otherwise(raise_error(concat(lit(s"word2vec: dictionary vector shorter than dim=$dim for term "),
-            col("_t")))).as("_v"))
     val terms = tokensDf.select(col("id"), size(col("tokens")).as("ntok"),
       explode(col("tokens")).as("term"))
     val comps = terms.select(col("id"), col("ntok"),
       size(split(col("term"), "\\+")).as("ncomp"),
       explode(split(col("term"), "\\+")).as("c"))
+    // dim-length dictionary vectors are the join-boundary contract: the
+    // parallel dim sums below read element_at(_v, 1..dim), and a SHORT
+    // vector would silently contribute null dimensions (and throw under
+    // spark.sql.ansi.enabled) where the old posexplode shape produced a
+    // short output vector. Enforce loudly instead of diverging — on the
+    // matched rows only, so a ragged entry no document uses stays inert.
     val joined = comps.join(broadcast(d), lower(col("c")) === col("_t"))
+      .withColumn("_v", when(size(col("_v")) >= dim, col("_v"))
+        .otherwise(raise_error(concat(lit(s"word2vec: dictionary vector shorter than dim=$dim for term "),
+          col("_t")))))
     // one aggregation with `dim` parallel sums instead of posexplode (a
     // dim-x row blow-up) -> (id, pos) aggregate -> (id) collect_list +
     // sort: same addends per (id, dimension), one exchange instead of

@@ -27,10 +27,4 @@ object GraftColumnBridge {
   def applyFunctionExtensions(ext: SparkSessionExtensions, spark: SparkSession): Unit =
     ext.registerFunctions(
       spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry)
-
-  /** `Dataset.ofRows` is `private[sql]`: needed to lift a custom
-    * LogicalPlan node into a user-facing DataFrame. */
-  def ofRows(spark: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

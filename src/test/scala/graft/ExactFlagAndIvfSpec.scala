@@ -97,7 +97,7 @@ class ExactFlagAndIvfSpec extends SparkTestBase {
     // the sf0.1 corpus plus 10 planted near-neighbors of the query
     // (deterministic noise, cos ~ 0.995 — the near-dup shape ANN hunts at
     // scale; the raw synthetic corpus is near-random, so a random query
-    // has no true neighbors to recall, see DebugLshRecall's measurements)
+    // has no true neighbors to recall)
     val e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val q = e.where(col("vec_id") === 0).head.getSeq[Double](1)

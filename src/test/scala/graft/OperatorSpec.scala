@@ -69,7 +69,7 @@ class OperatorSpec extends SparkTestBase {
       RankAggregate.SharedFacet("f2", col("d2"), combos.map(_(2)), jaccard = true))
     val bound = shared.zipWithIndex.map { case (f, i) =>
       BoundFacet(f.name, src.select(col("id"), col(s"d$i").as("d")),
-        f.weightPerCombo, f.decay, f.scale, f.jaccard)
+        f.weightPerCombo, f.decay, jaccard = f.jaccard)
     }
     val (k, m) = (7, 25)
     def rowsOf(df: org.apache.spark.sql.DataFrame) =

@@ -12,6 +12,9 @@ class Word2VecSpec extends SparkTestBase {
   private def vecOf(df: org.apache.spark.sql.DataFrame, id: Long): Seq[Double] =
     df.where(col("id") === id).head.getSeq[Double](1)
 
+  private def messagesOf(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messagesOf(x.getCause))
+
   test("transform: mean of found vectors; missing tokens count in the divisor") {
     val dict = Seq(("alpha", Seq(1.0, 2.0)), ("beta", Seq(3.0, 4.0)))
       .toDF("term", "vector")
@@ -38,9 +41,20 @@ class Word2VecSpec extends SparkTestBase {
     val e = intercept[Exception] {
       Word2Vec.transform(docs, dict, 2).collect()
     }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("shorter than dim")), e.toString)
+    assert(messagesOf(e).exists(_.contains("shorter than dim")), e.toString)
+  }
+
+  test("transform: the dim contract binds matched terms only — a ragged " +
+    "row no document uses is inert, a used one still fails") {
+    val dict = Seq(("alpha", Seq(1.0, 2.0)), ("unused", Seq(9.0)), ("short", Seq(7.0)))
+      .toDF("term", "vector")
+    val clean = Seq((1L, Seq("alpha", "missing"))).toDF("id", "tokens")
+    assert(vecOf(Word2Vec.transform(clean, dict, 2), 1L) == Seq(0.5, 1.0))
+    val ragged = Seq((1L, Seq("alpha")), (2L, Seq("new+SHORT"))).toDF("id", "tokens")
+    val e = intercept[Exception] {
+      Word2Vec.transform(ragged, dict, 2).collect()
+    }
+    assert(messagesOf(e).exists(_.contains("shorter than dim=2 for term short")), e.toString)
   }
 
   test("transform: compound '+' tokens average their components") {
