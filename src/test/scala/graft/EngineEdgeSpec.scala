@@ -101,7 +101,7 @@ class EngineEdgeSpec extends SparkTestBase {
   }
 
   test("A4: z-normalized mount transforms data and query consistently") {
-    val f = CsvMount.mount(spark, "/root/reference/data/gdelt",
+    val f = CsvMount.mount(spark, GenGdeltFixture.path,
       MountSpec("numerical_topk", "sample.csv", "article_id",
         Seq("positive_sentiment"), normalized = Some("z")))
     val st = f.spec.stats.get
@@ -124,7 +124,7 @@ class EngineEdgeSpec extends SparkTestBase {
   }
 
   test("F12 regression: 'max' keyword on a normalized facet is not re-normalized") {
-    val f = CsvMount.mount(spark, "/root/reference/data/gdelt",
+    val f = CsvMount.mount(spark, GenGdeltFixture.path,
       MountSpec("numerical_topk", "sample.csv", "article_id",
         Seq("positive_sentiment"), normalized = Some("z")))
     // top-1 for "max" must be the entity holding the maximum raw value
@@ -191,7 +191,7 @@ class EngineEdgeSpec extends SparkTestBase {
   }
 
   test("P5: max_lines caps ingestion") {
-    val f = CsvMount.mount(spark, "/root/reference/data/gdelt",
+    val f = CsvMount.mount(spark, GenGdeltFixture.path,
       MountSpec("numerical_topk", "sample.csv", "article_id",
         Seq("positive_sentiment"), maxLines = Some(10)))
     assert(f.df.count() <= 10)

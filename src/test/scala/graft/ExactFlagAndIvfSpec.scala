@@ -32,7 +32,7 @@ class ExactFlagAndIvfSpec extends SparkTestBase {
     val catalog = new Catalog(Seq(
       MountSpec("numerical_topk", "sample.csv", "article_id", Seq("positive_sentiment")),
       MountSpec("numerical_topk", "sample.csv", "article_id", Seq("negative_sentiment"))
-    ).map(CsvMount.mount(spark, "/root/reference/data/gdelt", _)))
+    ).map(CsvMount.mount(spark, GenGdeltFixture.path, _)))
     val res = SimSearchEngine.search(spark, catalog, 5, Seq(
       SearchSpec("positive_sentiment", 2.5, Seq(0.6)),
       SearchSpec("negative_sentiment", 3.5, Seq(0.4))), detailed = true)
@@ -235,7 +235,7 @@ class ExactFlagAndIvfSpec extends SparkTestBase {
   test("engine similarity matrix: k x k, symmetric ids, self-similarity 1") {
     val catalog = new Catalog(Seq(
       MountSpec("numerical_topk", "sample.csv", "article_id", Seq("positive_sentiment"))
-    ).map(CsvMount.mount(spark, "/root/reference/data/gdelt", _)))
+    ).map(CsvMount.mount(spark, GenGdeltFixture.path, _)))
     val m = SimSearchEngine.similarityMatrix(spark, catalog, 4,
       Seq(SearchSpec("positive_sentiment", 2.5, Seq(1.0)))).collect()
     assert(m.length == 16)

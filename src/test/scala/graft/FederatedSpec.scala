@@ -7,13 +7,14 @@ import graft.service.SimSearchService
 import graft.sources.Federated
 
 /** Federated search (SURVEY §2 S10/Q8): two instances mounted over DISJOINT
-  * halves of the GDELT sample (horizontal shards) must, under a pinned
+  * halves of the GDELT-shaped fixture (fixtures/gdelt_synth; horizontal
+  * shards) must, under a pinned
   * common decay scale, merge to EXACTLY the ranking a single instance over
   * the full corpus produces. Instances are real REST endpoints (one
   * HttpServer, one catalog per api key). */
 class FederatedSpec extends SparkTestBase {
 
-  private val gdelt = "/root/reference/data/gdelt"
+  private val gdelt = GenGdeltFixture.path
 
   private def writeShard(dir: java.nio.file.Path, lines: Seq[String]): Unit = {
     Files.createDirectories(dir)

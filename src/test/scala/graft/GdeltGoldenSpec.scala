@@ -12,7 +12,9 @@ import graft.sources.CsvMount.MountSpec
 /** Golden replay of the reference's committed standalone fixture:
   * mounts data/gdelt/sample.csv per sources.json, runs search.json, and
   * compares ids + ranks exactly and aggregate scores to 1e-9 against
-  * search_results.json (FIXTURES.md §2 comparison policy).
+  * search_results.json (FIXTURES.md §2 comparison policy). The replay needs
+  * the reference's own files; the mount checks read the GDELT-shaped
+  * fixtures/gdelt_synth ([[GenGdeltFixture]]).
   */
 class GdeltGoldenSpec extends SparkTestBase {
 
@@ -63,12 +65,12 @@ class GdeltGoldenSpec extends SparkTestBase {
   }
 
   test("mount: numerical ingest stats present; datetime chain parses compact format") {
-    val f = CsvMount.mount(spark, gdelt,
+    val f = CsvMount.mount(spark, GenGdeltFixture.path,
       MountSpec("numerical_topk", "sample.csv", "article_id", Seq("positive_sentiment")))
     val st = f.spec.stats.get
     assert(st.count > 900 && st.min >= 0.0 && st.max > st.min && st.stddev > 0)
 
-    val t = CsvMount.mount(spark, gdelt,
+    val t = CsvMount.mount(spark, GenGdeltFixture.path,
       MountSpec("temporal_topk", "sample.csv", "article_id", Seq("timestamp")))
     val ms = t.df.where(org.apache.spark.sql.functions.col("id") === "20190201151500-2748")
       .head.getDouble(1)

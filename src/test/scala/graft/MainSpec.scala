@@ -4,12 +4,13 @@ import java.io.{BufferedReader, ByteArrayOutputStream, PrintStream, StringReader
 import java.nio.charset.StandardCharsets
 
 /** Drives the standalone terminal (reference: Runner.java menu) through a
-  * scripted session: mount the GDELT fixture, list the catalog, run the
-  * golden search, use the SQL terminal, delete an attribute, exit. */
+  * scripted session: mount the GDELT-shaped fixture (fixtures/gdelt_synth),
+  * list the catalog, run the golden search, use the SQL terminal, delete an
+  * attribute, exit. */
 class MainSpec extends SparkTestBase {
 
   test("scripted standalone session: mount -> catalog -> search -> SQL -> delete") {
-    val gdelt = "/root/reference/data/gdelt"
+    val gdelt = GenGdeltFixture.path
     // rewrite the committed sources.json to this host's absolute path
     val sources = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$gdelt/standalone/sources.json")), StandardCharsets.UTF_8)
@@ -40,8 +41,9 @@ class MainSpec extends SparkTestBase {
     assert(out.contains("Mounted 5 attribute(s)"), out.take(500))
     assert(out.contains("position: Spatial") || out.contains("position: spatial"),
       out.take(800))
-    // golden search: top result id of the committed fixture
-    assert(out.contains("20191104154500-1733"))
+    // golden search: combination 0's rank-1 id, as the brute-force oracle
+    // in GenGdeltFixture ranked it (standalone/search_expected.json)
+    assert(out.contains(GenGdeltFixture.expectedTop(0)))
     assert(out.contains("\"exact\""))
     // SQL terminal: listing, a ranked result table, and the non-SQL rejection
     assert(out.contains("SQL > "))

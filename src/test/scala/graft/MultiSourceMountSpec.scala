@@ -21,7 +21,7 @@ import graft.service.SimSearchService
 class MultiSourceMountSpec extends SparkTestBase {
 
   private val mapper = new ObjectMapper()
-  private val gdelt = "/root/reference/data/gdelt"
+  private val gdelt = GenGdeltFixture.path
   private val derbyUrl = "jdbc:derby:memory:graftmulti;create=true"
 
   override def beforeAll(): Unit = {

@@ -6,18 +6,22 @@ import graft.engine.SimSearchEngine
 import graft.engine.SimSearchEngine.{Catalog, SearchSpec}
 
 /** Mount-time word2vec transform (transform_by, reference:
-  * Coordinator.java:608-672) and pivot_based coordinate attributes, replayed
-  * from the reference's OWN committed sources_pivot.json: one GloVe
-  * vector_dictionary + five pivot_based attributes (2-column position,
-  * GloVe-transformed organizations, epoch-ms timestamp, two sentiments). */
+  * Coordinator.java:608-672) and pivot_based coordinate attributes, mounted
+  * from a sources_pivot.json: one GloVe vector_dictionary + five
+  * pivot_based attributes (2-column position, GloVe-transformed
+  * organizations, epoch-ms timestamp, two sentiments). The replay of the
+  * reference's committed search_pivot.json mounts the reference's OWN
+  * files; every other test mounts the GDELT-shaped fixtures/gdelt_synth
+  * ([[GenGdeltFixture]]), whose sources_pivot.json has that shape. */
 class PivotMountSpec extends SparkTestBase {
 
   private val gdelt = "/root/reference/data/gdelt"
+  private val fixture = GenGdeltFixture.path
 
-  private def mountPivot(): Catalog = {
+  private def mountPivot(dir: String = gdelt): Catalog = {
     val sources = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$gdelt/standalone/sources_pivot.json")), "UTF-8")
-      .replace("./data/gdelt/", s"$gdelt/")
+      java.nio.file.Paths.get(s"$dir/standalone/sources_pivot.json")), "UTF-8")
+      .replace("./data/gdelt/", s"$dir/")
     val tmp = java.nio.file.Files.createTempFile("graft-pivot", ".json")
     java.nio.file.Files.write(tmp, sources.getBytes("UTF-8"))
     try {
@@ -28,7 +32,7 @@ class PivotMountSpec extends SparkTestBase {
   }
 
   test("sources_pivot.json mounts 5 pivot attributes; the dictionary is consumed, not listed") {
-    val cat = mountPivot()
+    val cat = mountPivot(fixture)
     assert(cat.size == 5)
     val ops = cat.list.toMap
     assert(ops.keySet == Set("position", "organizations", "timestamp",
@@ -41,7 +45,7 @@ class PivotMountSpec extends SparkTestBase {
   }
 
   test("transform_by derives a queryable vector attribute from the keyword column") {
-    val cat = mountPivot()
+    val cat = mountPivot(fixture)
     val orgs = cat.get("organizations")
     // GloVe vectors are 50-dimensional in the committed dictionary
     val dims = orgs.df.select(size(col("value")).as("n")).distinct()
@@ -69,7 +73,7 @@ class PivotMountSpec extends SparkTestBase {
   }
 
   test("multi-metric pivot search aggregates transformed + coordinate facets") {
-    val cat = mountPivot()
+    val cat = mountPivot(fixture)
     val res = SimSearchEngine.search(spark, cat, 5, Seq(
       SearchSpec("position", Seq(-74.94, 42.15), Seq(0.4)),
       SearchSpec("organizations", Seq("united nations"), Seq(0.3)),
@@ -109,7 +113,7 @@ class PivotMountSpec extends SparkTestBase {
   }
 
   test("extra columns on a transformed attribute display the raw keywords") {
-    val cat = mountPivot()
+    val cat = mountPivot(fixture)
     val res = SimSearchEngine.search(spark, cat, 3,
       Seq(SearchSpec("organizations", Seq("united+nations"), Seq(1.0))))
     val proj = graft.engine.SimSql.projectExtras(cat, res, Seq("organizations"))
@@ -152,24 +156,42 @@ class PivotMountSpec extends SparkTestBase {
   }
 
   test("pivot search plan: TakeOrdered candidates broadcast into the facet scan") {
-    val cat = mountPivot()
-    val plan = SimSearchEngine.search(spark, cat, 5,
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val cat = mountPivot(fixture)
+    val res = SimSearchEngine.search(spark, cat, 5,
       Seq(SearchSpec("position", Seq(-74.94, 42.15), Seq(1.0))))
-      .queryExecution.executedPlan.toString
+    val executed = res.queryExecution.executedPlan
+    val plan = executed.toString
     // candidate generation is a shuffle-free TakeOrdered heap over the
-    // pruned scan; the candidate set broadcasts back into the facet scan
-    // (never a shuffle or cartesian of the corpus) — the only Exchanges
-    // move <= k candidate rows into the pivot aggregate / combo window
+    // pruned scan (never a shuffle or cartesian of the corpus). A query
+    // with one facet is scored from that facet's cached top-M list, which
+    // holds every candidate (RankAggregate's listCovers): no candidate set
+    // is broadcast, and the facet's resident relation is read by the
+    // top-M scan only, never a second time by the scoring plan — the
+    // shape PlanSpec locks for the served single-facet search
     assert(plan.contains("TakeOrderedAndProject"),
       "metric top-M must be a TakeOrdered heap:\n" + plan.take(600))
-    assert(plan.contains("BroadcastHashJoin"),
-      "candidates must broadcast into the facet scan:\n" + plan.take(600))
+    val broadcasts = (executed match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case b: BroadcastExchangeExec => b }.size
+    assert(broadcasts == 0, "a single facet's list needs no candidate broadcast:\n" +
+      executed.treeString.take(2000))
+    val resident = cat.get("position").df.select(col("*")).queryExecution.withCachedData
+      .collect { case r: InMemoryRelation => r.cacheBuilder }.head
+    val residentReads = res.queryExecution.optimizedPlan.collect {
+      case r: InMemoryRelation if r.cacheBuilder eq resident => r
+    }.size
+    assert(residentReads == 0, "the scoring plan must read the cached top-M list, " +
+      "not the facet:\n" + res.queryExecution.optimizedPlan.treeString.take(2000))
     assert(!plan.contains("SortMergeJoin"), "the corpus must never key-shuffle")
     assert(!plan.contains("CartesianProduct"))
   }
 
   test("timestamp pivot coordinate parses through the datetime chain") {
-    val cat = mountPivot()
+    val cat = mountPivot(fixture)
     val ts = cat.get("timestamp")
     // epoch-ms doubles, 1-dimensional
     val row = ts.df.select(element_at(col("value"), 1)).head

@@ -10,11 +10,12 @@ import graft.sources.CsvMount
 import graft.sources.CsvMount.MountSpec
 
 /** S6: remote CSV mount — a local JDK HttpServer stands in for the remote
-  * host (zero-egress environment), serving the committed GDELT sample; the
+  * host (zero-egress environment), serving the committed GDELT-shaped
+  * sample (fixtures/gdelt_synth, [[GenGdeltFixture]]); the
   * http-mounted facet must answer identically to the file-mounted one. */
 class RemoteCsvSpec extends SparkTestBase {
 
-  private val gdelt = "/root/reference/data/gdelt"
+  private val gdelt = GenGdeltFixture.path
 
   test("S6: http-mounted facet answers identically to the local mount") {
     val bytes = java.nio.file.Files.readAllBytes(

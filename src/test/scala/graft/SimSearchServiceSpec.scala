@@ -7,9 +7,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.service.SimSearchService
 
-/** Drives the REST surface end-to-end over a real socket: mount the GDELT
-  * fixture via POST /index, search via POST /search with the committed
-  * search.json body, list and unmount attributes. */
+/** Drives the REST surface end-to-end over a real socket: mount the
+  * GDELT-shaped fixture (fixtures/gdelt_synth) via POST /index, search via
+  * POST /search with the committed search.json body, list and unmount
+  * attributes. */
 class SimSearchServiceSpec extends SparkTestBase {
 
   private def http(method: String, url: String, body: Option[String],
@@ -33,7 +34,7 @@ class SimSearchServiceSpec extends SparkTestBase {
     val port = svc.start()
     try {
       val base = s"http://127.0.0.1:$port/simsearch/api"
-      val gdelt = "/root/reference/data/gdelt"
+      val gdelt = GenGdeltFixture.path
 
       // /index with the committed sources.json, directory rewritten to this host
       val sources = new String(java.nio.file.Files.readAllBytes(
@@ -62,7 +63,10 @@ class SimSearchServiceSpec extends SparkTestBase {
       val resp = new ObjectMapper().readTree(b3)
       assert(resp.size() == 2) // one response per weight combination
       assert(resp.get(0).get("rankedResults").size() == 5)
-      assert(resp.get(0).get("rankedResults").get(0).get("id").asText() == "20191104154500-1733")
+      // combination 0's rank-1 id, as the brute-force oracle in
+      // GenGdeltFixture ranked it (standalone/search_expected.json)
+      assert(resp.get(0).get("rankedResults").get(0).get("id").asText() ==
+        GenGdeltFixture.expectedTop(0))
       // detailed mode computed a real per-result exact flag (not asserted true)
       assert(resp.get(0).get("rankedResults").get(0).get("exact").isBoolean)
       // ... and the per-attribute similarity map (RankedResult.attributes)
@@ -131,7 +135,7 @@ class SimSearchServiceSpec extends SparkTestBase {
     val outDir = java.nio.file.Files.createTempDirectory("graft-out").toString + "/res.csv"
     try {
       val base = s"http://127.0.0.1:$port/simsearch/api"
-      val gdelt = "/root/reference/data/gdelt"
+      val gdelt = GenGdeltFixture.path
       val sources = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$gdelt/standalone/sources.json")), StandardCharsets.UTF_8)
         .replace("./data/gdelt/", gdelt)
@@ -175,7 +179,7 @@ class SimSearchServiceSpec extends SparkTestBase {
     val port = svc.start()
     try {
       val base = s"http://127.0.0.1:$port/simsearch/api"
-      val gdelt = "/root/reference/data/gdelt"
+      val gdelt = GenGdeltFixture.path
       val sources = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$gdelt/standalone/sources.json")), StandardCharsets.UTF_8)
         .replace("./data/gdelt/", gdelt)
@@ -265,7 +269,7 @@ class SimSearchServiceSpec extends SparkTestBase {
       assert(kept == Set(1L, 3L), b2)
 
       // mount the GDELT fixture (also the api_key for authenticated writes)
-      val gdelt = "/root/reference/data/gdelt"
+      val gdelt = GenGdeltFixture.path
       val sources = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$gdelt/standalone/sources.json")), StandardCharsets.UTF_8)
         .replace("./data/gdelt/", gdelt)
@@ -1040,7 +1044,7 @@ class SimSearchServiceSpec extends SparkTestBase {
     val port = svc.start()
     try {
       val base = s"http://127.0.0.1:$port/simsearch/api"
-      val gdelt = "/root/reference/data/gdelt"
+      val gdelt = GenGdeltFixture.path
       val admin = Map("admin_api_key" -> "root-key")
 
       // admin gating: wrong/missing admin key is rejected

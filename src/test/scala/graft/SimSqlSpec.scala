@@ -9,12 +9,14 @@ import graft.sources.CsvMount.MountSpec
 
 /** SQL front-end tests: parse the reference's queries.sql corpus (including
   * its two designed-to-fail statements) and execute the reachable ones
-  * against the mounted GDELT catalog. */
+  * against the reference's mounted GDELT catalog. The tests that need no
+  * statement of the corpus mount the same five attributes from the
+  * GDELT-shaped fixtures/gdelt_synth ([[GenGdeltFixture]]). */
 class SimSqlSpec extends SparkTestBase {
 
   private val gdelt = "/root/reference/data/gdelt"
 
-  private lazy val catalog: Catalog = new Catalog(Seq(
+  private def catalogOf(dir: String): Catalog = new Catalog(Seq(
     MountSpec("spatial_knn", "sample.csv", "article_id",
       Seq("longitude", "latitude"), aliasColumn = Some("position")),
     MountSpec("categorical_topk", "sample.csv", "article_id",
@@ -22,7 +24,10 @@ class SimSqlSpec extends SparkTestBase {
     MountSpec("temporal_topk", "sample.csv", "article_id", Seq("timestamp")),
     MountSpec("numerical_topk", "sample.csv", "article_id", Seq("positive_sentiment")),
     MountSpec("numerical_topk", "sample.csv", "article_id", Seq("negative_sentiment"))
-  ).map(CsvMount.mount(spark, gdelt, _)))
+  ).map(CsvMount.mount(spark, dir, _)))
+
+  private lazy val catalog: Catalog = catalogOf(gdelt)
+  private lazy val fixtureCatalog: Catalog = catalogOf(GenGdeltFixture.path)
 
   private def fixtureStatements: Seq[String] = {
     val txt = new String(java.nio.file.Files.readAllBytes(
@@ -141,7 +146,7 @@ class SimSqlSpec extends SparkTestBase {
           Seq(("20191104154500-1733", 1.0), ("20191104230000-326", 0.5)).toDF("id", "d"),
           Seq(1.0), preScored = true)
       })
-    val cat2 = new Catalog(Seq(catalog.get("positive_sentiment")), Seq(stub))
+    val cat2 = new Catalog(Seq(fixtureCatalog.get("positive_sentiment")), Seq(stub))
     val res = SimSql.run(spark, cat2, sql)
     assert(res.count() == 3)
     assert(receivedFilters.toSeq == Seq(Some("""{"term": {"source": "cnn"}}""")))
@@ -150,10 +155,10 @@ class SimSqlSpec extends SparkTestBase {
   test("residual boolean filter restricts the searchable entities (P3)") {
     val sql = """SELECT * WHERE position ~= 'POINT(-74.94 42.15)'
                  AND positive_sentiment > 2.75 LIMIT 5"""
-    val res = SimSql.run(spark, catalog, sql)
+    val res = SimSql.run(spark, fixtureCatalog, sql)
     val ids = res.select("id").collect().map(_.getString(0)).toSeq
     assert(ids.nonEmpty && ids.size <= 5)
-    val ps = catalog.get("positive_sentiment").df
+    val ps = fixtureCatalog.get("positive_sentiment").df
       .where(col("id").isin(ids: _*)).select("value").collect().map(_.getDouble(0))
     assert(ps.length == ids.size && ps.forall(_ > 2.75))
   }

@@ -67,11 +67,11 @@ class Word2VecSpec extends SparkTestBase {
 
   test("GloVe dictionary mount + transform over GDELT organizations") {
     val dict = CsvMount.mountVectorDictionary(spark,
-      "/root/reference/data/gdelt/glove_dictionary.csv")
+      s"${GenGdeltFixture.path}/glove_dictionary.csv")
     assert(dict.head.getSeq[Double](1).size == 50)
     val cnn = dict.where(col("term") === "cnn").head.getSeq[Double](1)
 
-    val orgs = spark.read.option("header", "true").csv("/root/reference/data/gdelt/sample.csv")
+    val orgs = spark.read.option("header", "true").csv(s"${GenGdeltFixture.path}/sample.csv")
       .select(col("article_id").as("id"),
         SimKernels.tokenize(col("organizations"), ";").as("tokens"))
       .na.drop(Seq("id"))
