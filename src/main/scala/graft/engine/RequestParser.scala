@@ -118,7 +118,10 @@ object RequestParser {
           searchColumns = searchCols,
           aliasColumn = opt("alias_column"),
           separator = opt("separator").getOrElse(","),
-          tokenDelimiter = opt("token_delimiter").getOrElse(";"),
+          // a vector_dictionary's delimiter splits its vectors: `,` by
+          // default (CsvMount.mountVectorDictionary's and the reference's)
+          tokenDelimiter = opt("token_delimiter").getOrElse(
+            if (m.get("operation").asText() == "vector_dictionary") "," else ";"),
           header = opt("header").forall(_.toBoolean),
           qgram = opt("qgram").map(_.toInt).getOrElse(3),
           normalized = opt("normalized"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,8 +47,84 @@ object AnnIndex {
 
   final case class LshMeta(dim: Int, nBits: Int, seed: Long)
 
-  private def readMeta(spark: SparkSession, path: String) =
-    IndexIO.readMeta(spark, path)
+  /** (label, builder) of each index kind, for the error messages. */
+  private val Kinds = Map("lsh" -> ("LSH", "buildLsh"), "ivf" -> ("IVF", "buildIvf"),
+    "ivfpq" -> ("IVF-PQ", "buildIvfPq"))
+
+  /** The stored sidecar of a `kind` index, parsed; None for a pre-sidecar
+    * index, and a loud failure for an index of another kind. */
+  private def readKind[T](spark: SparkSession, path: String, kind: String)
+      (parse: JsonNode => T): Option[T] =
+    IndexIO.readMeta(spark, path).map { n =>
+      requireKind(n, path, kind)
+      parse(n)
+    }
+
+  private def requireKind(n: JsonNode, path: String, kind: String): Unit =
+    require(n.path("kind").asText() == kind,
+      s"index at $path is a ${n.path("kind").asText()} index, not ${Kinds(kind)._1}")
+
+  private def lshParams(n: JsonNode) =
+    LshMeta(n.path("dim").asInt(), n.path("nBits").asInt(), n.path("seed").asLong())
+
+  /** A JSON array of vectors as a Seq of vectors. */
+  private def vectors(n: JsonNode): Seq[Seq[Double]] = {
+    import scala.jdk.CollectionConverters._
+    n.elements().asScala.map(c => c.elements().asScala.map(_.asDouble()).toSeq).toSeq
+  }
+
+  private def codebooks(n: JsonNode): Seq[Seq[Seq[Double]]] = {
+    import scala.jdk.CollectionConverters._
+    n.path("codebooks").elements().asScala.map(vectors).toSeq
+  }
+
+  /** Vectors as a JSON array. Double.toString round-trips exactly through
+    * Jackson's parse, so stored centroids compare bit-equal with the
+    * build's list. */
+  private def json(vs: Seq[Seq[Double]]): String =
+    vs.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
+
+  /** The stored rows (id, vec | codes, bucket) of `emb` for the index its
+    * sidecar `meta` describes — signed, assigned and encoded with the
+    * index's OWN parameters, so a build and every later append bucket the
+    * same vector the same way. */
+  private def indexRows(emb: DataFrame, id: String, vec: Column, path: String,
+      meta: JsonNode): DataFrame =
+    meta.path("kind").asText() match {
+      case "lsh" =>
+        val m = lshParams(meta)
+        emb.select(col(id), vec.as("vec"),
+          AnnSearch.signatureRandom(vec, m.dim, m.nBits, m.seed).as(BucketCol))
+      case "ivf" =>
+        emb.select(col(id), vec.as("vec"),
+          AnnSearch.ivfCluster(vec, vectors(meta.path("centroids"))).as(BucketCol))
+      case "ivfpq" =>
+        emb.select(col(id),
+          graft.functions.NativeKernels.pqEncode(vec, codebooks(meta)).as("codes"),
+          AnnSearch.ivfCluster(vec, vectors(meta.path("centroids"))).as(BucketCol))
+      case other => throw new IllegalArgumentException(
+        s"index sidecar at $path has unrecognized kind '$other' — " +
+          "expected 'lsh', 'ivf', or 'ivfpq'")
+    }
+
+  /** Write a whole index — the base (`batch=-1`) rows of `emb` under the
+    * sidecar `meta`, then the sidecar — the one writer the builds and
+    * [[rebuild]] share. Each bucket is co-located before the partitioned
+    * write: without that, EVERY task writes a file into every bucket
+    * directory it touches — O(tasks x buckets) small files; with it, one
+    * task owns a bucket's rows and each directory gets one well-sized file
+    * (AQE coalesces the shuffle where buckets are small). The static
+    * overwrite clears the whole path, including any stale batch
+    * directories and sidecar from a previous index, so the sidecar is
+    * written after the parquet commit. */
+  private def writeIndex(emb: DataFrame, id: String, vec: Column, path: String,
+      meta: String): Unit = {
+    val rows = indexRows(emb, id, vec, path,
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta))
+    IndexIO.writeBatch(rows.repartition(col(BucketCol)), path, None, Seq(BucketCol),
+      append = false)
+    IndexIO.writeMeta(emb.sparkSession, path, meta)
+  }
 
   /** Build a persisted LSH index: one full scan computing the seeded
     * random-hyperplane signature, written as one directory per bucket
@@ -55,53 +132,40 @@ object AnnIndex {
     * land in exactly one bucket, so the index is the corpus size, not a
     * replicated copy. */
   def buildLsh(emb: DataFrame, id: String, vec: Column, dim: Int, path: String,
-      nBits: Int = 8, seed: Long = 42L): Unit = {
-    emb.select(col(id), vec.as("vec"),
-        AnnSearch.signatureRandom(vec, dim, nBits, seed).as(BucketCol),
-        lit(-1L).as(IndexIO.BatchCol))
-      // co-locate each bucket before the partitioned write: without this,
-      // EVERY task writes a file into every bucket directory it touches —
-      // O(tasks x buckets) small files; with it, one task owns a bucket's
-      // rows and each directory gets one well-sized file (AQE coalesces
-      // the shuffle where buckets are small)
-      .repartition(col(BucketCol))
-      // static overwrite clears the whole path, including any stale batch
-      // directories and sidecar from a previous index
-      .write.mode("overwrite").partitionBy(BucketCol, IndexIO.BatchCol).parquet(path)
-    // after the parquet commit (overwrite clears the directory first)
-    IndexIO.writeMeta(emb.sparkSession, path,
+      nBits: Int = 8, seed: Long = 42L): Unit =
+    writeIndex(emb, id, vec, path,
       s"""{"kind": "lsh", "dim": $dim, "nBits": $nBits, "seed": $seed}""")
-  }
 
   /** The LSH index's stored build parameters, or None for a pre-sidecar
     * index. */
   def readLshMeta(spark: SparkSession, path: String): Option[LshMeta] =
-    readMeta(spark, path).map { n =>
-      require(n.path("kind").asText() == "lsh",
-        s"index at $path is a ${n.path("kind").asText()} index, not LSH")
-      LshMeta(n.path("dim").asInt(), n.path("nBits").asInt(), n.path("seed").asLong())
-    }
+    readKind(spark, path, "lsh")(lshParams)
 
-  /** Append a vector batch to a persisted index of EITHER flavor: the
-    * sidecar's `kind` decides between [[appendLsh]] and [[appendIvf]] —
-    * self-describing indexes exist precisely so ingestion code need not
-    * carry build-time parameters (or even know the flavor). A crashed
-    * compaction swap is repaired first ([[IndexIO.recoverSwap]]), so an
-    * index stranded at `__old` is restored instead of read as absent. */
+  /** Append a vector batch to a persisted index of ANY flavor: the
+    * sidecar's `kind` decides between [[appendLsh]], [[appendIvf]] and
+    * [[appendIvfPq]] — self-describing indexes exist precisely so
+    * ingestion code need not carry build-time parameters (or even know the
+    * flavor). */
   def append(emb: DataFrame, id: String, vec: Column, path: String,
-      batchId: Option[Long] = None): Unit = {
-    IndexIO.recoverSwap(emb.sparkSession, path)
-    IndexIO.readMeta(emb.sparkSession, path).map(_.path("kind").asText()) match {
-      case Some("lsh") => appendLsh(emb, id, vec, path, batchId)
-      case Some("ivf") => appendIvf(emb, id, vec, path, batchId)
-      case Some("ivfpq") => appendIvfPq(emb, id, vec, path, batchId)
-      case Some(other) => throw new IllegalArgumentException(
-        s"index sidecar at $path has unrecognized kind '$other' — " +
-          "expected 'lsh', 'ivf', or 'ivfpq'")
-      case None => throw new IllegalArgumentException(
-        s"no index sidecar at $path — build with buildLsh/buildIvf/buildIvfPq first")
+      batchId: Option[Long] = None): Unit =
+    appendAs(None, emb, id, vec, path, batchId)
+
+  /** The appends' one body, behind the [[IndexIO.appendBatch]] replay guard
+    * (which also repairs a crashed compaction swap, so an index stranded
+    * at `__old` is restored instead of read as absent): the sidecar, read
+    * once, must exist and, for a flavor-specific append, be of that
+    * `kind`. */
+  private def appendAs(kind: Option[String], emb: DataFrame, id: String, vec: Column,
+      path: String, batchId: Option[Long]): Unit =
+    IndexIO.appendBatch(emb.sparkSession, path, batchId) { meta =>
+      val n = meta.getOrElse(throw new IllegalArgumentException(kind.fold(
+        s"no index sidecar at $path — build with buildLsh/buildIvf/buildIvfPq first")(
+        k => s"no ${Kinds(k)._1} index metadata at $path — build with ${Kinds(k)._2} first")))
+      kind.foreach(requireKind(n, path, _))
+      IndexIO.writeBatch(
+        indexRows(emb, id, vec, path, n).repartition(col(BucketCol)), // one file per touched bucket
+        path, batchId, Seq(BucketCol))
     }
-  }
 
   /** Grow a persisted LSH index with a new vector batch — the ANN twin of
     * the incremental-dedup ingestion loop ([[graft.operators.Dedup]]
@@ -119,17 +183,8 @@ object AnnIndex {
     * rows — served answers are unchanged by crash recovery. A batchId a
     * compaction already folded into the base no-ops (see [[compact]]). */
   def appendLsh(emb: DataFrame, id: String, vec: Column, path: String,
-      batchId: Option[Long] = None): Unit = {
-    val meta = readLshMeta(emb.sparkSession, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no LSH index metadata at $path — build with buildLsh first"))
-    if (IndexIO.alreadyCompacted(emb.sparkSession, path, batchId)) return
-    IndexIO.writeBatch(
-      emb.select(col(id), vec.as("vec"),
-          AnnSearch.signatureRandom(vec, meta.dim, meta.nBits, meta.seed).as(BucketCol))
-        .repartition(col(BucketCol)), // one well-sized file per touched bucket
-      path, batchId, Seq(BucketCol))
-  }
+      batchId: Option[Long] = None): Unit =
+    appendAs(Some("lsh"), emb, id, vec, path, batchId)
 
   /** Query a persisted LSH index with multi-probe: the probe buckets become
     * a partition-column `isin` filter, pruned at file listing — only
@@ -190,27 +245,12 @@ object AnnIndex {
     * codegen at any k), one directory per cluster, plus the centroid-list
     * sidecar. Build `centroids` with [[AnnSearch.kmeans]]. */
   def buildIvf(emb: DataFrame, id: String, vec: Column,
-      centroids: Seq[Seq[Double]], path: String): Unit = {
-    emb.select(col(id), vec.as("vec"),
-        AnnSearch.ivfCluster(vec, centroids).as(BucketCol),
-        lit(-1L).as(IndexIO.BatchCol))
-      .repartition(col(BucketCol)) // see buildLsh: one task per bucket
-      .write.mode("overwrite").partitionBy(BucketCol, IndexIO.BatchCol).parquet(path)
-    // Double.toString round-trips exactly through Jackson's parse, so the
-    // stored centroids compare bit-equal with the build's list
-    val cs = centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    IndexIO.writeMeta(emb.sparkSession, path, s"""{"kind": "ivf", "centroids": $cs}""")
-  }
+      centroids: Seq[Seq[Double]], path: String): Unit =
+    writeIndex(emb, id, vec, path, s"""{"kind": "ivf", "centroids": ${json(centroids)}}""")
 
   /** The IVF index's stored centroid list, or None for a pre-sidecar index. */
   def readIvfCentroids(spark: SparkSession, path: String): Option[Seq[Seq[Double]]] =
-    readMeta(spark, path).map { n =>
-      require(n.path("kind").asText() == "ivf",
-        s"index at $path is a ${n.path("kind").asText()} index, not IVF")
-      import scala.jdk.CollectionConverters._
-      n.path("centroids").elements().asScala
-        .map(c => c.elements().asScala.map(_.asDouble()).toSeq).toSeq
-    }
+    readKind(spark, path, "ivf")(n => vectors(n.path("centroids")))
 
   /** Grow a persisted IVF index with a new vector batch, assigned with the
     * index's OWN stored centroids — see [[appendLsh]]. The coarse
@@ -219,17 +259,8 @@ object AnnIndex {
     * silently shift cluster boundaries under existing data). `batchId`
     * makes the append replay-idempotent — see [[appendLsh]]. */
   def appendIvf(emb: DataFrame, id: String, vec: Column, path: String,
-      batchId: Option[Long] = None): Unit = {
-    val cs = readIvfCentroids(emb.sparkSession, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no IVF index metadata at $path — build with buildIvf first"))
-    if (IndexIO.alreadyCompacted(emb.sparkSession, path, batchId)) return
-    IndexIO.writeBatch(
-      emb.select(col(id), vec.as("vec"),
-          AnnSearch.ivfCluster(vec, cs).as(BucketCol))
-        .repartition(col(BucketCol)),
-      path, batchId, Seq(BucketCol))
-  }
+      batchId: Option[Long] = None): Unit =
+    appendAs(Some("ivf"), emb, id, vec, path, batchId)
 
   /** Query a persisted IVF index: the query's nProbe nearest centroids
     * become the pruned partition set. Identical answers to
@@ -355,53 +386,23 @@ object AnnIndex {
     * source table instead. */
   def buildIvfPq(emb: DataFrame, id: String, vec: Column,
       centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
-      path: String): Unit = {
-    emb.select(col(id),
-        graft.functions.NativeKernels.pqEncode(vec, codebooks).as("codes"),
-        AnnSearch.ivfCluster(vec, centroids).as(BucketCol),
-        lit(-1L).as(IndexIO.BatchCol))
-      .repartition(col(BucketCol)) // see buildLsh: one task per bucket
-      .write.mode("overwrite").partitionBy(BucketCol, IndexIO.BatchCol).parquet(path)
-    val cs = centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    val cb = codebooks.map(_.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")).mkString("[", ",", "]")
-    IndexIO.writeMeta(emb.sparkSession, path,
-      s"""{"kind": "ivfpq", "centroids": $cs, "codebooks": $cb}""")
-  }
+      path: String): Unit =
+    writeIndex(emb, id, vec, path, s"""{"kind": "ivfpq", "centroids": ${json(centroids)}, """ +
+      s""""codebooks": ${codebooks.map(json).mkString("[", ",", "]")}}""")
 
   /** The IVF-PQ index's stored (centroids, codebooks), or None for a
     * pre-sidecar index. */
   def readIvfPqMeta(spark: SparkSession, path: String)
       : Option[(Seq[Seq[Double]], Seq[Seq[Seq[Double]]])] =
-    readMeta(spark, path).map { n =>
-      require(n.path("kind").asText() == "ivfpq",
-        s"index at $path is a ${n.path("kind").asText()} index, not IVF-PQ")
-      import scala.jdk.CollectionConverters._
-      val cents = n.path("centroids").elements().asScala
-        .map(c => c.elements().asScala.map(_.asDouble()).toSeq).toSeq
-      val books = n.path("codebooks").elements().asScala
-        .map(_.elements().asScala
-          .map(c => c.elements().asScala.map(_.asDouble()).toSeq).toSeq).toSeq
-      (cents, books)
-    }
+    readKind(spark, path, "ivfpq")(n => (vectors(n.path("centroids")), codebooks(n)))
 
   /** Grow a persisted IVF-PQ index: the batch is encoded and assigned with
     * the index's OWN stored codebooks and centroids (both frozen, as in
     * [[appendIvf]] — re-training either means rebuilding). `batchId` makes
     * the append replay-idempotent — see [[appendLsh]]. */
   def appendIvfPq(emb: DataFrame, id: String, vec: Column, path: String,
-      batchId: Option[Long] = None): Unit = {
-    val (cs, books) = readIvfPqMeta(emb.sparkSession, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no IVF-PQ index metadata at $path — build with buildIvfPq first"))
-    if (IndexIO.alreadyCompacted(emb.sparkSession, path, batchId)) return
-    IndexIO.writeBatch(
-      emb.select(col(id),
-          graft.functions.NativeKernels.pqEncode(vec, books).as("codes"),
-          AnnSearch.ivfCluster(vec, cs).as(BucketCol))
-        .repartition(col(BucketCol)),
-      path, batchId, Seq(BucketCol))
-  }
+      batchId: Option[Long] = None): Unit =
+    appendAs(Some("ivfpq"), emb, id, vec, path, batchId)
 
   /** Query a persisted IVF-PQ index: the query's nProbe nearest centroids
     * prune the partition listing (as in [[ivfTopK]]); inside the probed
@@ -489,39 +490,6 @@ object AnnIndex {
     recalls.sum / recalls.length
   }
 
-  /** Compact a grown index (LSH or IVF): fold every appended batch back
-    * into the `batch=-1` base, restoring the build path's one-well-sized-
-    * file-per-bucket discipline. Per-batch appends write one file per
-    * touched bucket per batch; after thousands of micro-batches each bucket
-    * directory holds thousands of small files and LISTING comes to dominate
-    * the probe — eroding exactly the file-pruning advantage the index
-    * exists for. Answers are unchanged (same rows, same buckets; only file
-    * boundaries move).
-    *
-    * The rewrite lands in a temp sibling and swaps in atomically
-    * ([[IndexIO.swapDirs]]): a crash at any point leaves either the old or
-    * the new index fully intact. The sidecar is preserved, with
-    * `compactedThrough` set to the highest folded batchId so a committed
-    * batch re-delivered ACROSS the compaction no-ops instead of re-adding
-    * its rows.
-    *
-    * `through` bounds the fold to batchIds <= it, leaving newer batch
-    * partitions untouched. Offline (streams stopped cleanly, the default
-    * `None` = fold everything) every batch is committed and foldable; the
-    * streaming ingestion loop ([[graft.streaming.StreamOps
-    * .annIndexAppendStream]] with `compactEvery`) compacts from INSIDE
-    * batch N's `foreachBatch` and must pass `through = N - 1`: only
-    * batches before the current one are checkpoint-committed, and the
-    * current batch's own partition has to survive so an at-least-once
-    * re-delivery still dynamic-overwrites it (and, on the dedup twins,
-    * still finds it to EXCLUDE from the candidate read — folded-in rows
-    * would match the replayed batch against itself).
-    *
-    * Serving probes ride through the swap: [[lshTopK]]/[[ivfTopK]] execute
-    * under a bounded stale-listing retry, so a probe that listed files
-    * just before the swap re-lists and answers — answers before and after
-    * are identical, so which side of the swap a probe lands on is
-    * unobservable. */
   /** A probe against a missing index root throws FileNotFoundException —
     * NOT the "no sidecar" IllegalArgumentException — so the retry wrapper
     * classifies the mid-swap window (the root is briefly absent between
@@ -642,35 +610,38 @@ object AnnIndex {
         s"no IVF index metadata at $path — rebuild re-trains an IVF quantizer"))
     val df = spark.read.parquet(path)
     val maxBatch = df.agg(max(col(IndexIO.BatchCol).cast("long"))).head.getLong(0)
-    val through = math.max(maxBatch, IndexIO.compactedThrough(spark, path))
+    val through = math.max(maxBatch,
+      IndexIO.compactedThrough(IndexIO.readMeta(spark, path)))
     val cents = AnnSearch.kmeans(df, id, col("vec"), old.size, iters, trainPct)
     val tmp = path + "__compacting"
-    df.select(col(id), col("vec"),
-        AnnSearch.ivfCluster(col("vec"), cents).as(BucketCol),
-        lit(-1L).as(IndexIO.BatchCol))
-      .repartition(col(BucketCol)) // see buildLsh: one task per bucket
-      .write.mode("overwrite").partitionBy(BucketCol, IndexIO.BatchCol).parquet(tmp)
-    val cs = cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    IndexIO.writeMeta(spark, tmp,
-      s"""{"kind": "ivf", "centroids": $cs, "compactedThrough": $through}""")
+    writeIndex(df, id, col("vec"), tmp,
+      s"""{"kind": "ivf", "centroids": ${json(cents)}, "compactedThrough": $through}""")
     IndexIO.swapDirs(spark, path, tmp)
   }
 
+  /** Compact a grown index (any flavor): fold every appended batch back
+    * into the `batch=-1` base, restoring the build path's one-well-sized-
+    * file-per-bucket discipline. Per-batch appends write one file per
+    * touched bucket per batch; after thousands of micro-batches each bucket
+    * directory holds thousands of small files and LISTING comes to dominate
+    * the probe — eroding exactly the file-pruning advantage the index
+    * exists for. Answers are unchanged (same rows, same buckets; only file
+    * boundaries move).
+    *
+    * This is [[IndexIO.compact]] over the bucketed table: the rewrite
+    * lands in a temp sibling and swaps in atomically, and the sidecar is
+    * preserved with `compactedThrough` set so a committed batch re-delivered
+    * ACROSS the compaction no-ops. `through` bounds the fold to batchIds
+    * <= it: `None` offline, `batchId - 1` from inside an ingestion loop
+    * ([[graft.streaming.StreamOps.annIndexAppendStream]] with
+    * `compactEvery`) — the two rules are stated in [[IndexIO]].
+    *
+    * Serving probes ride through the swap: [[lshTopK]]/[[ivfTopK]] execute
+    * under a bounded stale-listing retry, so a probe that listed files
+    * just before the swap re-lists and answers — answers before and after
+    * are identical, so which side of the swap a probe lands on is
+    * unobservable. */
   def compact(spark: SparkSession, path: String,
-      through: Option[Long] = None): Unit = {
-    // a compact re-run after a crashed swap must first restore the index
-    // (path may be stranded at __old with a complete __compacting beside it)
-    IndexIO.recoverSwap(spark, path)
-    val df = spark.read.parquet(path)
-    val maxBatch = df.agg(max(col(IndexIO.BatchCol).cast("long"))).head.getLong(0)
-    val fold = math.min(through.getOrElse(maxBatch), maxBatch)
-    val tmp = path + "__compacting"
-    val b = col(IndexIO.BatchCol).cast("long")
-    df.withColumn(IndexIO.BatchCol, when(b <= fold, lit(-1L)).otherwise(b))
-      .repartition(col(BucketCol))
-      .write.mode("overwrite").partitionBy(BucketCol, IndexIO.BatchCol).parquet(tmp)
-    IndexIO.writeMeta(spark, tmp,
-      IndexIO.metaWithCompactedThrough(spark, path, fold))
-    IndexIO.swapDirs(spark, path, tmp)
-  }
+      through: Option[Long] = None): Unit =
+    IndexIO.compact(spark, path, through, partitionCols = Seq(BucketCol))
 }

@@ -148,34 +148,32 @@ object Dedup {
     * at-least-once re-delivery rewrites its own `batch=<id>` directories
     * instead of appending duplicate band rows (replay-idempotent; `append`
     * is ignored — the batch directory is the unit of commit); without one,
-    * batch = -1 with the plain append/overwrite semantics. A batchId a
-    * [[compactBandIndex]] already folded into the base no-ops. */
+    * batch = -1 with the plain append/overwrite semantics. The append goes
+    * through the [[IndexIO.appendBatch]] replay guard: a crashed compaction
+    * swap is repaired first, and a batchId a [[compactBandIndex]] already
+    * folded into the base no-ops. */
   def writeBandIndex(docs: DataFrame, id: String, shingles: Column,
-      path: String, append: Boolean = false, batchId: Option[Long] = None): Unit = {
-    // repair a crashed compaction swap first: with the index stranded at
-    // __old, alreadyCompacted would read "no sidecar" and the append would
-    // start a second, disjoint index at the bare path
-    IndexIO.recoverSwap(docs.sparkSession, path)
-    if (graft.operators.IndexIO.alreadyCompacted(docs.sparkSession, path, batchId)) return
-    // empty shingle sets stay out of the index — they would park the
-    // constant all-null band key in every band directory and every later
-    // batch's too-short docs would candidate-join against all of them
-    // (see minhashPairs; cache-then-filter order per shingleFrame)
-    val (shAll, sh) = shingleFrame(docs, id, shingles)
-    try {
-      def write(df: DataFrame, sub: String): Unit =
-        IndexIO.writeBatch(df, s"$path/$sub", batchId, Seq.empty, append)
-      // shingles commit FIRST: the two tables are two writes, and a crash
-      // between them must fail CLOSED. Orphan shingle rows (shingles
-      // committed, bands not) are inert — no band key ever references
-      // them. The reverse order would leave band keys whose verify join
-      // finds no shingle set, silently discarding that batch's pairs
-      // forever. (The streaming batchId path self-heals either way: the
-      // replay dynamic-overwrites both tables.)
-      write(sh, "shingles")
-      write(minhashBands(sh), "bands")
-    } finally shAll.unpersist()
-  }
+      path: String, append: Boolean = false, batchId: Option[Long] = None): Unit =
+    IndexIO.appendBatch(docs.sparkSession, path, batchId) { _ =>
+      // empty shingle sets stay out of the index — they would park the
+      // constant all-null band key in every band directory and every later
+      // batch's too-short docs would candidate-join against all of them
+      // (see minhashPairs; cache-then-filter order per shingleFrame)
+      val (shAll, sh) = shingleFrame(docs, id, shingles)
+      try {
+        def write(df: DataFrame, sub: String): Unit =
+          IndexIO.writeBatch(df, s"$path/$sub", batchId, Seq.empty, append)
+        // shingles commit FIRST: the two tables are two writes, and a crash
+        // between them must fail CLOSED. Orphan shingle rows (shingles
+        // committed, bands not) are inert — no band key ever references
+        // them. The reverse order would leave band keys whose verify join
+        // finds no shingle set, silently discarding that batch's pairs
+        // forever. (The streaming batchId path self-heals either way: the
+        // replay dynamic-overwrites both tables.)
+        write(sh, "shingles")
+        write(minhashBands(sh), "bands")
+      } finally shAll.unpersist()
+    }
 
   /** Near-duplicate pairs (a = new-batch id, b = indexed corpus id, j)
     * between a NEW batch and a persisted [[writeBandIndex]] corpus. The
@@ -739,15 +737,12 @@ object Dedup {
     *
     * Same commit discipline as [[writeBandIndex]]: a `batch` partition
     * level via [[IndexIO]] — streaming batchIds write as dynamic partition
-    * overwrites (replay-idempotent), batch = -1 otherwise; a crashed
-    * compaction swap is repaired before any write. */
+    * overwrites (replay-idempotent), batch = -1 otherwise, behind the same
+    * replay guard. */
   def writeHammingIndex(sigs: DataFrame, id: String, sig: String,
-      path: String, append: Boolean = false, batchId: Option[Long] = None): Unit = {
-    val spark = sigs.sparkSession
-    IndexIO.recoverSwap(spark, path)
-    if (IndexIO.alreadyCompacted(spark, path, batchId)) return
-    IndexIO.writeBatch(bandedSigs(sigs, id, sig), s"$path/bands", batchId, Seq.empty, append)
-  }
+      path: String, append: Boolean = false, batchId: Option[Long] = None): Unit =
+    IndexIO.appendBatch(sigs.sparkSession, path, batchId)(_ => IndexIO.writeBatch(
+      bandedSigs(sigs, id, sig), s"$path/bands", batchId, Seq.empty, append))
 
   /** (id, sig, band, bv) exploded band rows of a signature frame, zero
     * signatures excluded — shared by the index writer and the probe. */
@@ -884,22 +879,14 @@ object Dedup {
     * behavior. */
   def compactHammingIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, through: Option[Long] = None,
-      maxDf: Option[Long] = None): Unit = {
-    IndexIO.recoverSwap(spark, path)
-    val tmp = path + "__compacting"
-    val dropBoilerplate: DataFrame => DataFrame =
-      maxDf.fold(identity[DataFrame] _) { cap => df =>
+      maxDf: Option[Long] = None): Unit =
+    IndexIO.compact(spark, path, through, Seq("bands"),
+      transform = maxDf.fold(identity[DataFrame] _) { cap => df =>
         val keep = df.groupBy("sig")
           .agg(count_distinct(col("id")).as("df"))
           .where(col("df") <= cap).select(col("sig"))
         df.join(keep, Seq("sig"))
-      }
-    val folded = IndexIO.compactTable(spark, s"$path/bands", s"$tmp/bands",
-      through, dropBoilerplate)
-    IndexIO.writeMeta(spark, tmp,
-      IndexIO.metaWithCompactedThrough(spark, path, folded))
-    IndexIO.swapDirs(spark, path, tmp)
-  }
+      })
 
   /** Exact-duplicate groups by normalized-text fingerprint:
     * (fp, cnt, keeper = min id). */
@@ -912,15 +899,13 @@ object Dedup {
   /** Persist the exact-dup fingerprint index — the exact twin of
     * [[writeBandIndex]]: (fp, id) written once, `append = true` per
     * accepted batch, `batchId` for replay-idempotent streaming appends
-    * (the batch's `batch=<id>` directory is the unit of commit). */
+    * (the batch's `batch=<id>` directory is the unit of commit), behind
+    * the [[IndexIO.appendBatch]] replay guard. */
   def writeFingerprintIndex(docs: DataFrame, id: String, text: Column,
-      path: String, append: Boolean = false, batchId: Option[Long] = None): Unit = {
-    IndexIO.recoverSwap(docs.sparkSession, path) // see writeBandIndex
-    if (graft.operators.IndexIO.alreadyCompacted(docs.sparkSession, path, batchId)) return
-    val fps = spread(docs)
-      .select(TextKernels.fingerprint(text).as("fp"), col(id).as("id"))
-    IndexIO.writeBatch(fps, path, batchId, Seq.empty, append)
-  }
+      path: String, append: Boolean = false, batchId: Option[Long] = None): Unit =
+    IndexIO.appendBatch(docs.sparkSession, path, batchId)(_ => IndexIO.writeBatch(
+      spread(docs).select(TextKernels.fingerprint(text).as("fp"), col(id).as("id")),
+      path, batchId, Seq.empty, append))
 
   /** Exact duplicates of a NEW batch against a persisted
     * [[writeFingerprintIndex]] corpus: (id, fp, keeper = min indexed id
@@ -979,12 +964,7 @@ object Dedup {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try bf.writeTo(out) finally out.close()
-    val node = IndexIO.readMeta(spark, path)
-      .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
-      .getOrElse(new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode())
-    node.put("bloomUpTo", upTo)
-    IndexIO.writeMeta(spark, path,
-      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(node))
+    IndexIO.writeMeta(spark, path, IndexIO.editedMeta(spark, path)(_.put("bloomUpTo", upTo)))
   }
 
   /** The stored bloom + its high-water mark, if one was built. */
@@ -1051,24 +1031,15 @@ object Dedup {
 
   /** Compact a grown [[writeBandIndex]] index: fold every appended batch of
     * both tables back into `batch=-1`, rewritten to well-sized files (one
-    * per ~`maxPartitionBytes`), and atomically swap. Same rationale and
-    * crash-safety as [[AnnIndex.compact]]; `compactedThrough` in the
-    * root-level sidecar makes a committed batch re-delivered across the
-    * compaction a no-op. `through` bounds the fold to batchIds <= it —
-    * see [[AnnIndex.compact]] for why the streaming loop MUST pass the
-    * previous batchId (the current batch's partition has to survive both
-    * for dynamic-overwrite replay and for the candidate-read exclusion);
-    * offline (streams stopped cleanly) the default `None` folds all. */
+    * per ~`maxPartitionBytes`), and atomically swap ([[IndexIO.compact]];
+    * same rationale and crash-safety as [[AnnIndex.compact]]).
+    * `compactedThrough` in the root-level sidecar makes a committed batch
+    * re-delivered across the compaction a no-op. `through` bounds the fold
+    * to batchIds <= it — `None` offline, `batchId - 1` in-loop, by the two
+    * rules stated in [[IndexIO]]. */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      through: Option[Long] = None): Unit = {
-    IndexIO.recoverSwap(spark, path) // a crashed swap leaves the index at __old
-    val tmp = path + "__compacting"
-    val folded = Seq("bands", "shingles")
-      .map(sub => IndexIO.compactTable(spark, s"$path/$sub", s"$tmp/$sub", through)).max
-    IndexIO.writeMeta(spark, tmp,
-      IndexIO.metaWithCompactedThrough(spark, path, folded))
-    IndexIO.swapDirs(spark, path, tmp)
-  }
+      through: Option[Long] = None): Unit =
+    IndexIO.compact(spark, path, through, Seq("bands", "shingles"))
 
   /** Compact a grown [[writeFingerprintIndex]] index — the single-table
     * twin of [[compactBandIndex]]. An existing Bloom sidecar is REBUILT
@@ -1081,7 +1052,7 @@ object Dedup {
   def compactFingerprintIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       through: Option[Long] = None): Unit = {
     val hadBloom = readFingerprintBloom(spark, path).isDefined
-    IndexIO.compactFlatTable(spark, path, through)
+    IndexIO.compact(spark, path, through)
     if (hadBloom) writeFingerprintBloom(spark, path)
   }
 

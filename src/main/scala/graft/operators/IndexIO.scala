@@ -1,12 +1,16 @@
 package graft.operators
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared plumbing for the persisted incremental indexes ([[AnnIndex]],
-  * [[Dedup]]'s band/fingerprint indexes): the batch-partition layout that
-  * makes streaming appends replay-idempotent, the `_graft_meta.json`
-  * sidecar, and the compaction rewrite.
+  * [[Dedup]]'s band/Hamming/fingerprint indexes) and the streaming emission
+  * sink: the batch-partition layout that makes streaming appends
+  * replay-idempotent, the `_graft_meta.json` sidecar, and the one commit
+  * path every such table goes through — [[appendBatch]] to add a batch,
+  * [[compact]] to fold batches back into the base.
   *
   * Replay idempotence: `foreachBatch` is at-least-once — after a mid-batch
   * failure Structured Streaming re-delivers the SAME micro-batch (same
@@ -22,13 +26,23 @@ import org.apache.spark.sql.functions._
   *
   * Compaction: per-batch appends accumulate one file per touched partition
   * per batch; after thousands of micro-batches the file listing dominates
-  * the probe. [[AnnIndex.compact]] / [[Dedup.compactBandIndex]] fold all
-  * committed batches back into `batch=-1` (restoring the base build's
-  * one-well-sized-file discipline) and record the highest folded batchId as
-  * `compactedThrough` in the sidecar; an append whose batchId is <= that
-  * value is a committed batch re-delivered across the compaction and
-  * no-ops. Compact while ingestion streams are STOPPED CLEANLY (a clean
-  * stop commits its last batch, so nothing older can be re-delivered).
+  * the probe. [[compact]] folds committed batches back into `batch=-1`
+  * (restoring the base build's one-well-sized-file discipline) and records
+  * the highest folded batchId as `compactedThrough` in the sidecar; an
+  * append whose batchId is <= that value is a committed batch re-delivered
+  * across the compaction and no-ops. The fold's `through` bound has two
+  * rules, and every compaction entry point follows them:
+  *
+  *  - Offline, with the ingestion streams STOPPED CLEANLY (a clean stop
+  *    commits its last batch, so nothing older can be re-delivered), pass
+  *    `through = None` and every batch folds.
+  *  - In-loop, from inside batch N's `foreachBatch` (the streams'
+  *    `compactEvery`), pass `through = N - 1`: only batches before the
+  *    current one are checkpoint-committed. The current batch's partition
+  *    must survive so an at-least-once re-delivery still dynamic-overwrites
+  *    it, and so the dedup loops' candidate read can still EXCLUDE it —
+  *    folded into the base, a replayed batch would match its own rows and
+  *    re-emit its in-batch pairs as cross pairs.
   */
 private[graft] object IndexIO {
 
@@ -55,7 +69,7 @@ private[graft] object IndexIO {
   }
 
   def readMeta(spark: SparkSession, path: String)
-      : Option[com.fasterxml.jackson.databind.JsonNode] = {
+      : Option[JsonNode] = {
     val p = new org.apache.hadoop.fs.Path(path, MetaFile)
     val f = fs(spark, path)
     if (!f.exists(p)) None
@@ -65,27 +79,43 @@ private[graft] object IndexIO {
     }
   }
 
-  /** Highest batchId already folded into the base by a compaction; -1 when
-    * never compacted (no sidecar, or no field). */
-  def compactedThrough(spark: SparkSession, path: String): Long =
-    readMeta(spark, path).map(_.path("compactedThrough").asLong(-1L)).getOrElse(-1L)
+  /** Highest batchId already folded into the base by a compaction, read
+    * from a sidecar; -1 when never compacted (no sidecar, or no field). */
+  def compactedThrough(meta: Option[JsonNode]): Long =
+    meta.map(_.path("compactedThrough").asLong(-1L)).getOrElse(-1L)
 
   /** True when `batchId` names a streaming batch that a compaction already
     * folded into the base — the append must no-op, not re-add the rows. */
-  def alreadyCompacted(spark: SparkSession, path: String,
+  private def alreadyCompacted(meta: Option[JsonNode],
       batchId: Option[Long]): Boolean =
-    batchId.exists(_ <= compactedThrough(spark, path))
+    batchId.exists(_ <= compactedThrough(meta))
 
-  /** The sidecar content with `compactedThrough` set to
-    * max(existing, through) — all other fields preserved. A sidecar-less
-    * index (band/fingerprint) gets a fresh `{"compactedThrough": N}`. */
-  def metaWithCompactedThrough(spark: SparkSession, path: String,
-      through: Long): String = {
+  /** The sidecar content at `path` with `edit` applied — all other fields
+    * preserved; a sidecar-less table starts from `{}`. */
+  def editedMeta(spark: SparkSession, path: String)
+      (edit: ObjectNode => Unit): String = {
     val node = readMeta(spark, path)
-      .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
+      .collect { case o: ObjectNode => o }
       .getOrElse(mapper.createObjectNode())
-    node.put("compactedThrough", math.max(through, node.path("compactedThrough").asLong(-1L)))
+    edit(node)
     mapper.writeValueAsString(node)
+  }
+
+  /** The replay guard every append to a batch-partitioned table commits
+    * through — the indexes' appends and the emission sink alike. A crashed
+    * compaction swap is repaired first: with the table stranded at
+    * `__old`, the sidecar would read as absent, the guard would pass a
+    * batch the compaction already folded, and the write would start a
+    * second, disjoint table at the bare path (which the next
+    * [[recoverSwap]] then keeps, deleting the stranded history). Then a
+    * batch the sidecar's `compactedThrough` already covers no-ops; any
+    * other runs `commit`, handed the sidecar read once here (None when the
+    * table has none). */
+  def appendBatch(spark: SparkSession, root: String, batchId: Option[Long])
+      (commit: Option[JsonNode] => Unit): Unit = {
+    recoverSwap(spark, root)
+    val meta = readMeta(spark, root)
+    if (!alreadyCompacted(meta, batchId)) commit(meta)
   }
 
   /** Commit `df` under the batch partition level: dynamic-overwrite of the
@@ -111,41 +141,47 @@ private[graft] object IndexIO {
   def excludeBatch(df: DataFrame, batchId: Option[Long]): DataFrame =
     batchId.fold(df)(b => df.where(col(BatchCol).cast("long") =!= b))
 
-  /** Rewrite one batch-partitioned table at `tmp`, folding batchIds <=
-    * `through` (all, when None) into `batch=-1` sized to ~one file per
-    * `maxPartitionBytes`, newer batch partitions carried over unchanged;
-    * returns the highest folded batchId. */
-  private[graft] def compactTable(spark: SparkSession,
-      dir: String, tmp: String, through: Option[Long],
-      transform: DataFrame => DataFrame = identity): Long = {
-    val df = spark.read.parquet(dir)
-    val maxBatch = df.agg(max(col(BatchCol).cast("long"))).head.getLong(0)
-    val fold = math.min(through.getOrElse(maxBatch), maxBatch)
-    val nFiles = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-        math.max(1L, (l.relation.sizeInBytes + maxSplit - 1) / maxSplit).toInt
-    }.getOrElse(1)
-    val b = col(BatchCol).cast("long")
-    transform(df).withColumn(BatchCol, when(b <= fold, lit(-1L)).otherwise(b))
-      .repartition(nFiles)
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(tmp)
-    fold
-  }
-
-  /** Compact one flat batch-partitioned table in place: fold committed
-    * batches into the base ([[compactTable]]), stamp `compactedThrough` in
-    * the sidecar, atomically swap ([[swapDirs]]) — the whole discipline the
-    * fingerprint index and the streaming emission sink share. Repairs a
-    * previously crashed swap first, so re-running a failed compaction
-    * works. */
-  private[graft] def compactFlatTable(spark: SparkSession, path: String,
-      through: Option[Long]): Unit = {
-    recoverSwap(spark, path) // a crashed swap leaves the table at __old
-    val tmp = path + "__compacting"
-    val folded = compactTable(spark, path, tmp, through)
-    writeMeta(spark, tmp, metaWithCompactedThrough(spark, path, folded))
-    swapDirs(spark, path, tmp)
+  /** Compact a batch-partitioned table in place — the one fold-and-swap
+    * every index and the sink share. Repairs a previously crashed swap
+    * first, so re-running a failed compaction works. Each of `tables`
+    * (subdirectories of `root`; "" = the root itself) is rewritten under
+    * `<root>__compacting` with batchIds <= `through` (all, when None; see
+    * the object doc for which bound a caller passes) folded into
+    * `batch=-1` and newer batch partitions carried over; then
+    * the highest folded batchId is stamped as `compactedThrough` and the
+    * rewrite swaps in atomically ([[swapDirs]]).
+    *
+    * File layout: with `partitionCols` (the levels above batch, e.g. the
+    * ANN bucket) each partition's rows are co-located and land in one
+    * file; a flat table is sized to ~one file per `maxPartitionBytes`.
+    * `transform` runs over each whole table, newer partitions included,
+    * before the fold (the Hamming index's df cap). */
+  private[graft] def compact(spark: SparkSession, root: String,
+      through: Option[Long], tables: Seq[String] = Seq(""),
+      partitionCols: Seq[String] = Seq.empty,
+      transform: DataFrame => DataFrame = identity): Unit = {
+    recoverSwap(spark, root)
+    val tmp = root + "__compacting"
+    def under(dir: String, table: String) = if (table.isEmpty) dir else s"$dir/$table"
+    val folded = tables.map { table =>
+      val df = spark.read.parquet(under(root, table))
+      val maxBatch = df.agg(max(col(BatchCol).cast("long"))).head.getLong(0)
+      val fold = math.min(through.getOrElse(maxBatch), maxBatch)
+      val b = col(BatchCol).cast("long")
+      val out = transform(df).withColumn(BatchCol, when(b <= fold, lit(-1L)).otherwise(b))
+      (if (partitionCols.nonEmpty) out.repartition(partitionCols.map(col): _*)
+       else out.repartition(df.queryExecution.analyzed.collectFirst {
+         case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+           val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
+           math.max(1L, (l.relation.sizeInBytes + maxSplit - 1) / maxSplit).toInt
+       }.getOrElse(1)))
+        .write.mode("overwrite").partitionBy(partitionCols :+ BatchCol: _*)
+        .parquet(under(tmp, table))
+      fold
+    }.max
+    writeMeta(spark, tmp, editedMeta(spark, root)(n => n.put("compactedThrough",
+      math.max(folded, n.path("compactedThrough").asLong(-1L)))))
+    swapDirs(spark, root, tmp)
   }
 
   /** Atomically replace `path` with the rewritten `tmp`: the old directory

@@ -199,13 +199,14 @@ object StreamOps {
     def tap(f: A => Unit): A = { f(a); a }
   }
 
-  /** Streaming vector ingestion into a persisted LSH ANN index
+  /** Streaming vector ingestion into a persisted ANN index
     * ([[graft.operators.AnnIndex]]): each micro-batch is signed with the
     * index's stored sidecar parameters and appended into its bucket
     * directories — the ANN twin of [[incrementalDedupStream]]'s accept
-    * step. Works against either flavor: the sidecar's `kind` routes to
-    * the LSH or IVF append (the IVF quantizer stays frozen by design). Served probes (`AnnIndex.lshTopK`) see every committed batch;
-    * the index must exist (`buildLsh`) before the stream starts.
+    * step. Works against any flavor: the sidecar's `kind` routes to the
+    * LSH, IVF or IVF-PQ append (the IVF quantizer stays frozen by design).
+    * Served probes (`AnnIndex.lshTopK`) see every committed batch; the
+    * index must exist (`buildLsh`) before the stream starts.
     *
     * The append is keyed on the micro-batch id, so `foreachBatch`'s
     * at-least-once re-delivery after a crash REWRITES the batch's own
@@ -215,23 +216,31 @@ object StreamOps {
     * `compactEvery` = N > 0 folds the accumulated batch partitions back
     * into the base every N batches ([[graft.operators.AnnIndex.compact]]),
     * keeping files-per-bucket bounded over an unbounded run instead of
-    * growing one file per touched bucket per batch forever. The fold is
-    * bounded to `through = batchId - 1`: earlier batches are
-    * checkpoint-committed (their `foreachBatch` completed before this one
-    * started), while the CURRENT batch's partition must survive so an
-    * at-least-once re-delivery still overwrites it in place. The
-    * compaction runs inside the micro-batch (that interval blocks for its
-    * duration — size N to taste); its crash-safety is the atomic swap. */
+    * growing one file per touched bucket per batch forever — see
+    * [[ingestLoop]]. */
   def annIndexAppendStream(vectors: DataFrame, idCol: String, vecCol: String,
       indexPath: String, compactEvery: Int = 0)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestLoop(vectors, compactEvery)(
+      (batch, batchId) => graft.operators.AnnIndex.append(batch, idCol, col(vecCol),
+        indexPath, batchId = Some(batchId)),
+      graft.operators.AnnIndex.compact(_, indexPath, _))
+
+  /** The one ingestion-loop driver every index-backed stream here runs on:
+    * `foreachBatch` runs `body` on each micro-batch, then, every
+    * `compactEvery`-th batchId (batch 0 has nothing older to fold),
+    * `compact` with `through = batchId - 1` — the in-loop bound
+    * [[graft.operators.IndexIO]] states. The compaction runs inside the
+    * micro-batch (that interval blocks for its duration — size the cadence
+    * to taste); its crash-safety is the atomic swap. */
+  private def ingestLoop(input: DataFrame, compactEvery: Int)(
+      body: (DataFrame, Long) => Unit,
+      compact: (org.apache.spark.sql.SparkSession, Option[Long]) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ce = resolveCompactEvery(vectors, compactEvery)
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.operators.AnnIndex.append(batch, idCol, col(vecCol), indexPath,
-        batchId = Some(batchId))
-      if (compactDue(ce, batchId))
-        graft.operators.AnnIndex.compact(batch.sparkSession, indexPath,
-          through = Some(batchId - 1))
+    val ce = resolveCompactEvery(input, compactEvery)
+    input.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      body(batch, batchId)
+      if (compactDue(ce, batchId)) compact(batch.sparkSession, Some(batchId - 1))
     }.start()
   }
 
@@ -258,6 +267,50 @@ object StreamOps {
     if (given != 0) math.max(given, 0)
     else df.sparkSession.conf.get(graft.api.Knobs.AnnIndexCompactEvery, "0").toInt
 
+  /** The per-batch crash contract the index-backed pair loops share
+    * ([[dedupBatch]], [[annDedupBatch]], [[signatureBatch]], the frame
+    * sequence loops and [[exactBatch]]), written once:
+    *
+    *  1. repair a crashed compaction swap, then test the `probed` table
+    *     for data — a bare exists() would read an index stranded at
+    *     `__old` as "no index yet" and silently restart the corpus from
+    *     this batch, and a file-less directory (an empty batch's commit)
+    *     must likewise read as absent, not wedge every later read on
+    *     schema inference;
+    *  2. union the in-batch result with the result against the index —
+    *     only when the index has data; `vsIndex`'s read must exclude the
+    *     in-flight `batchId` (on a replay its first attempt's rows may
+    *     already be committed);
+    *  3. cache and count the union BEFORE the index grows: the index read
+    *     is lazy, and appending first would make the batch collide with
+    *     its own just-written rows;
+    *  4. emit it to `writeBatch`;
+    *  5. `accept` (commit to the index) only a non-empty input — an empty
+    *     batch must not commit a file-less directory;
+    *  6. unpersist.
+    *
+    * `prepare` maps the batch to the cached input the steps share; `merge`
+    * folds the union before it is pinned. */
+  private def pinThenCommit(batch: DataFrame, batchId: Long, indexRoot: String,
+      probed: String, writeBatch: (DataFrame, Long) => Unit)(
+      inBatch: DataFrame => DataFrame, vsIndex: DataFrame => DataFrame,
+      accept: DataFrame => Unit, prepare: DataFrame => DataFrame = identity,
+      merge: DataFrame => DataFrame = identity): Unit = {
+    val spark = batch.sparkSession
+    graft.operators.IndexIO.recoverSwap(spark, indexRoot)
+    val hasIndex = graft.operators.IndexIO.hasData(spark, probed)
+    val in = prepare(batch).cache()
+    try {
+      val out = merge(if (hasIndex) inBatch(in).union(vsIndex(in)) else inBatch(in))
+        .cache()
+      try {
+        out.count()
+        writeBatch(out, batchId)
+        if (!in.isEmpty) accept(in)
+      } finally out.unpersist()
+    } finally in.unpersist()
+  }
+
   /** EXACTLY-ONCE parquet emission sink for the streaming loops'
     * `writeBatch` parameter — closes the last at-least-once edge of the
     * ingestion story with zero consumer burden.
@@ -266,27 +319,29 @@ object StreamOps {
     * micro-batch (same batchId, same rows — the loops' emissions are
     * deterministic and replay-idempotent on the index side) is delivered
     * again, so a plain append sink would hold the batch's rows twice. This
-    * sink applies the very discipline [[graft.operators.IndexIO
-    * .writeBatch]] applies to the indexes, to the EMITTED rows: each batch
-    * lands in its own `batch=<id>` partition via dynamic partition
-    * overwrite, so a re-delivery rewrites its own directories with the
-    * same rows — the sink's contents after any number of replays equal the
-    * contents of one clean run. An empty batch writes nothing (a file-less
-    * parquet directory would wedge later schema inference).
+    * sink commits the EMITTED rows through the very replay guard the
+    * indexes commit through ([[graft.operators.IndexIO.appendBatch]]):
+    * each batch lands in its own `batch=<id>` partition via dynamic
+    * partition overwrite, so a re-delivery rewrites its own directories
+    * with the same rows — the sink's contents after any number of replays
+    * equal the contents of one clean run. An empty batch writes nothing (a
+    * file-less parquet directory would wedge later schema inference).
     *
     * Read the sink with [[readSink]]; bound its directory growth over an
     * unbounded run with [[compactSink]] (batches a compaction folded are
-    * no-opped on re-delivery via the sidecar's `compactedThrough`, same as
-    * the indexes). The emitted frame must not itself carry a `batch`
-    * column. */
+    * no-opped on re-delivery via the sidecar's `compactedThrough`, and a
+    * sink stranded at `__old` by a crashed compaction is repaired before
+    * the write, same as the indexes). The emitted frame must not itself
+    * carry a `batch` column. */
   def parquetSink(path: String): (DataFrame, Long) => Unit =
     (batch, batchId) => {
       require(!batch.columns.contains(graft.operators.IndexIO.BatchCol),
         s"the emitted frame already has a '${graft.operators.IndexIO.BatchCol}' " +
           "column — the sink needs that name for its replay partition")
-      if (!graft.operators.IndexIO.alreadyCompacted(batch.sparkSession, path,
-          Some(batchId)) && !batch.isEmpty)
-        graft.operators.IndexIO.writeBatch(batch, path, Some(batchId), Seq.empty)
+      graft.operators.IndexIO.appendBatch(batch.sparkSession, path, Some(batchId)) { _ =>
+        if (!batch.isEmpty)
+          graft.operators.IndexIO.writeBatch(batch, path, Some(batchId), Seq.empty)
+      }
     }
 
   /** The rows a [[parquetSink]] holds, without the internal replay
@@ -297,13 +352,11 @@ object StreamOps {
   /** Fold a [[parquetSink]]'s accumulated batch partitions into its base —
     * the sink twin of the index compactions: per-batch dynamic overwrites
     * leave one directory per batch, and an unbounded run would grow an
-    * unbounded listing. Same rules as the index folds: offline (stream
-    * stopped cleanly) fold everything; from inside the loop pass
-    * `through = batchId - 1` so the current batch's partition survives for
-    * its own possible re-delivery. */
+    * unbounded listing. Same `through` rules as the index folds
+    * ([[graft.operators.IndexIO]]). */
   def compactSink(spark: org.apache.spark.sql.SparkSession, path: String,
       through: Option[Long] = None): Unit =
-    graft.operators.IndexIO.compactFlatTable(spark, path, through)
+    graft.operators.IndexIO.compact(spark, path, through)
 
   /** Streaming incremental near-dup dedup — the production ingestion loop
     * over a persisted band index. Per accepted micro-batch:
@@ -320,10 +373,9 @@ object StreamOps {
     * The union of all emitted pair sets equals one batch `minhashPairs`
     * over the whole corpus, up to pair orientation (cross pairs emit as
     * (new id, indexed id)) — StreamOpsSpec proves it. The pair frame is
-    * materialized (cached + counted) BEFORE step 3 appends: the candidate
-    * join reads the index parquet lazily, and appending first would make
-    * the batch collide with its own just-written keys. `indexPath` must
-    * not already exist unless resuming an earlier run of the same stream.
+    * materialized BEFORE step 3 appends ([[pinThenCommit]]). `indexPath`
+    * must not already exist unless resuming an earlier run of the same
+    * stream.
     *
     * Crash recovery: the INDEX is replay-idempotent — the accept step
     * dynamic-overwrites the batch's own `batch=<id>` partition, and the
@@ -336,23 +388,14 @@ object StreamOps {
     * upsert by (batchId, pair) or be otherwise idempotent.
     *
     * `compactEvery` = N > 0 folds committed batch partitions into the base
-    * every N batches, bounded to `through = batchId - 1` — see
-    * [[annIndexAppendStream]]; here the bound is doubly load-bearing: the
-    * candidate read EXCLUDES the current batch's partition, and folding it
-    * into the base would make a replayed batch match against its own rows
-    * and re-emit its in-batch pairs as cross pairs. */
+    * every N batches ([[ingestLoop]]). */
   def incrementalDedupStream(docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, minJ: Double, compactEvery: Int = 0)
       (writeBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ce = resolveCompactEvery(docs, compactEvery)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      dedupBatch(batch, batchId, idCol, textCol, indexPath, minJ, writeBatch)
-      if (compactDue(ce, batchId))
-        graft.operators.Dedup.compactBandIndex(batch.sparkSession, indexPath,
-          through = Some(batchId - 1))
-    }.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestLoop(docs, compactEvery)(
+      dedupBatch(_, _, idCol, textCol, indexPath, minJ, writeBatch),
+      graft.operators.Dedup.compactBandIndex(_, indexPath, _))
 
   /** One [[incrementalDedupStream]] micro-batch — package-visible so the
     * replay-idempotence spec can re-deliver a batch exactly as
@@ -360,29 +403,14 @@ object StreamOps {
   private[graft] def dedupBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, indexPath: String, minJ: Double,
       writeBatch: (DataFrame, Long) => Unit): Unit = {
-    import graft.functions.TextKernels
     import graft.operators.Dedup
-    val spark = batch.sparkSession
     val shingles = graft.functions.NativeKernels.wordShingles2(col(textCol))
-    // repair a crashed compaction swap BEFORE the exists check — a bare
-    // exists() would read an index stranded at __old as "no index yet" and
-    // silently restart the corpus from this batch; a file-less directory
-    // (an empty batch's commit) must likewise read as absent, not wedge
-    // every later read on schema inference
-    graft.operators.IndexIO.recoverSwap(spark, indexPath)
-    val hasIndex = graft.operators.IndexIO.hasData(spark, s"$indexPath/bands")
-    val b = batch.cache()
-    val inBatch = Dedup.minhashPairs(b, idCol, shingles, minJ)
-    val pairs = (if (hasIndex)
-        inBatch.union(Dedup.incrementalPairs(b, idCol, shingles, indexPath, minJ,
-          excludeBatch = Some(batchId)))
-      else inBatch).cache()
-    try {
-      pairs.count() // pin results before the index grows (see scaladoc)
-      writeBatch(pairs, batchId)
-      if (!b.isEmpty) // an empty micro-batch must not commit a file-less dir
-        Dedup.writeBandIndex(b, idCol, shingles, indexPath, batchId = Some(batchId))
-    } finally { pairs.unpersist(); b.unpersist() }
+    pinThenCommit(batch, batchId, indexPath, s"$indexPath/bands", writeBatch)(
+      inBatch = Dedup.minhashPairs(_, idCol, shingles, minJ),
+      vsIndex = Dedup.incrementalPairs(_, idCol, shingles, indexPath, minJ,
+        excludeBatch = Some(batchId)),
+      accept = Dedup.writeBandIndex(_, idCol, shingles, indexPath,
+        batchId = Some(batchId)))
   }
 
   /** Streaming embedding-space dedup — the ANN twin of
@@ -399,62 +427,50 @@ object StreamOps {
     *  3. accept: [[graft.operators.AnnIndex.append]] adds the batch's
     *     vectors under its own `batch=<id>` partition.
     *
-    * Same crash contract as the shingle loop: the append is
-    * replay-idempotent, the candidate read excludes the in-flight batch,
-    * pairs materialize before the index grows, an empty batch commits
-    * nothing, and a crashed compaction swap is repaired at entry. Pass
-    * [[parquetSink]] as `writeBatch` for exactly-once emission.
-    * `compactEvery` folds committed batches with the `through` bound —
-    * doubly load-bearing here, as in [[incrementalDedupStream]]. */
+    * Same crash contract as the shingle loop ([[pinThenCommit]]). Pass
+    * [[parquetSink]] as `writeBatch` for exactly-once emission;
+    * `compactEvery` folds committed batches ([[ingestLoop]]). */
   def annDedupStream(vectors: DataFrame, idCol: String, vecCol: String,
       indexPath: String, minCos: Double, compactEvery: Int = 0)
       (writeBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ce = resolveCompactEvery(vectors, compactEvery)
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      annDedupBatch(batch, batchId, idCol, vecCol, indexPath, minCos, writeBatch)
-      if (compactDue(ce, batchId))
-        graft.operators.AnnIndex.compact(batch.sparkSession, indexPath,
-          through = Some(batchId - 1))
-    }.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestLoop(vectors, compactEvery)(
+      annDedupBatch(_, _, idCol, vecCol, indexPath, minCos, writeBatch),
+      graft.operators.AnnIndex.compact(_, indexPath, _))
 
   /** One [[annDedupStream]] micro-batch — package-visible for the replay
     * spec, like [[dedupBatch]]. */
   private[graft] def annDedupBatch(batch: DataFrame, batchId: Long,
       idCol: String, vecCol: String, indexPath: String, minCos: Double,
       writeBatch: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.{AnnIndex, AnnSearch, IndexIO}
-    val spark = batch.sparkSession
-    IndexIO.recoverSwap(spark, indexPath)
-    val meta = AnnIndex.readLshMeta(spark, indexPath).getOrElse(
-      throw new IllegalArgumentException(
-        s"no LSH index metadata at $indexPath — run AnnIndex.buildLsh " +
-          "before starting annDedupStream"))
-    val b = batch.cache()
-    // sign ONCE: the in-batch self-join and the index cross-check share
-    // this frame (recomputing the signature per consumer doubles the
-    // per-batch projection work)
-    val signed = b.select(col(idCol).as("a"), col(vecCol).as("va"),
-      AnnSearch.signatureRandom(col(vecCol), meta.dim, meta.nBits, meta.seed)
-        .cast("long").as("__bk")).cache()
-    val y = signed.select(col("__bk"), col("a").as("b"), col("va").as("vb"))
-    val inBatch = signed.join(y, Seq("__bk")).where(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        round(graft.functions.NativeKernels.cosineSim(col("va"), col("vb")), 6)
-          .as("cos"))
-      .where(col("cos") >= minCos)
-    val hasIndex = IndexIO.hasData(spark, indexPath)
-    val pairs = (if (hasIndex)
-        inBatch.union(AnnIndex.nearDupAgainstIndex(signed, idCol, indexPath,
-          minCos, excludeBatch = Some(batchId)))
-      else inBatch).cache()
-    try {
-      pairs.count() // pin results before the index grows (see dedupBatch)
-      writeBatch(pairs, batchId)
-      if (!b.isEmpty) // an empty micro-batch must not commit a file-less dir
-        AnnIndex.append(b, idCol, col(vecCol), indexPath, batchId = Some(batchId))
-    } finally { pairs.unpersist(); signed.unpersist(); b.unpersist() }
+    import graft.operators.{AnnIndex, AnnSearch}
+    // sign ONCE, into the cached input: the in-batch self-join and the
+    // index cross-check share the signature column (recomputing it per
+    // consumer doubles the per-batch projection work)
+    def signed(in: DataFrame) =
+      in.select(col(idCol).as("a"), col(vecCol).as("va"), col("__bk"))
+    pinThenCommit(batch, batchId, indexPath, indexPath, writeBatch)(
+      prepare = { b =>
+        val meta = AnnIndex.readLshMeta(b.sparkSession, indexPath).getOrElse(
+          throw new IllegalArgumentException(
+            s"no LSH index metadata at $indexPath — run AnnIndex.buildLsh " +
+              "before starting annDedupStream"))
+        b.select(col(idCol), col(vecCol),
+          AnnSearch.signatureRandom(col(vecCol), meta.dim, meta.nBits, meta.seed)
+            .cast("long").as("__bk"))
+      },
+      inBatch = { in =>
+        val x = signed(in)
+        val y = x.select(col("__bk"), col("a").as("b"), col("va").as("vb"))
+        x.join(y, Seq("__bk")).where(col("a") < col("b"))
+          .select(col("a"), col("b"),
+            round(graft.functions.NativeKernels.cosineSim(col("va"), col("vb")), 6)
+              .as("cos"))
+          .where(col("cos") >= minCos)
+      },
+      vsIndex = in => AnnIndex.nearDupAgainstIndex(signed(in), idCol, indexPath,
+        minCos, excludeBatch = Some(batchId)),
+      accept = AnnIndex.append(_, idCol, col(vecCol), indexPath, batchId = Some(batchId)))
   }
 
   /** Streaming SIGNATURE dedup — the 64-bit-signature twin of
@@ -473,49 +489,30 @@ object StreamOps {
     *  3. accept: [[graft.operators.Dedup.writeHammingIndex]] appends the
     *     batch's signatures under its own `batch=<id>` partition.
     *
-    * Same crash contract as the shingle loop: the append is
-    * replay-idempotent, the candidate read excludes the in-flight batch,
-    * pairs materialize before the index grows, an empty batch commits
-    * nothing, and a crashed compaction swap is repaired at entry. Pass
+    * Same crash contract as the shingle loop ([[pinThenCommit]]). Pass
     * [[parquetSink]] as `writeBatch` for exactly-once emission;
-    * `compactEvery` folds committed batches with `through = batchId - 1`
-    * via [[graft.operators.Dedup.compactHammingIndex]]. */
+    * `compactEvery` folds committed batches ([[ingestLoop]]) via
+    * [[graft.operators.Dedup.compactHammingIndex]]. */
   def signatureDedupStream(sigs: DataFrame, idCol: String, sigCol: String,
       indexPath: String, maxHamming: Int = 3, compactEvery: Int = 0)
       (writeBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ce = resolveCompactEvery(sigs, compactEvery)
-    sigs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      signatureBatch(batch, batchId, idCol, sigCol, indexPath, maxHamming,
-        writeBatch)
-      if (compactDue(ce, batchId))
-        graft.operators.Dedup.compactHammingIndex(batch.sparkSession,
-          indexPath, through = Some(batchId - 1))
-    }.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestLoop(sigs, compactEvery)(
+      signatureBatch(_, _, idCol, sigCol, indexPath, maxHamming, writeBatch),
+      graft.operators.Dedup.compactHammingIndex(_, indexPath, _))
 
   /** One [[signatureDedupStream]] micro-batch — package-visible for the
     * replay spec, like [[dedupBatch]]. */
   private[graft] def signatureBatch(batch: DataFrame, batchId: Long,
       idCol: String, sigCol: String, indexPath: String, maxHamming: Int,
       writeBatch: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.{Dedup, IndexIO}
-    val spark = batch.sparkSession
-    IndexIO.recoverSwap(spark, indexPath)
-    val hasIndex = IndexIO.hasData(spark, s"$indexPath/bands")
-    val b = batch.cache()
-    val inBatch = Dedup.hammingPairs(b, idCol, sigCol, maxHamming)
-    val pairs = (if (hasIndex)
-        inBatch.union(Dedup.incrementalHammingPairs(b, idCol, sigCol,
-          indexPath, maxHamming, excludeBatch = Some(batchId)))
-      else inBatch).cache()
-    try {
-      pairs.count() // pin results before the index grows (see dedupBatch)
-      writeBatch(pairs, batchId)
-      if (!b.isEmpty) // an empty micro-batch must not commit a file-less dir
-        Dedup.writeHammingIndex(b, idCol, sigCol, indexPath,
-          batchId = Some(batchId))
-    } finally { pairs.unpersist(); b.unpersist() }
+    import graft.operators.Dedup
+    pinThenCommit(batch, batchId, indexPath, s"$indexPath/bands", writeBatch)(
+      inBatch = Dedup.hammingPairs(_, idCol, sigCol, maxHamming),
+      vsIndex = Dedup.incrementalHammingPairs(_, idCol, sigCol, indexPath,
+        maxHamming, excludeBatch = Some(batchId)),
+      accept = Dedup.writeHammingIndex(_, idCol, sigCol, indexPath,
+        batchId = Some(batchId)))
   }
 
   /** Streaming VIDEO near-dup ingestion — the clip-level twin of
@@ -535,54 +532,39 @@ object StreamOps {
   def videoDedupStream(media: DataFrame, everyMs: Long, indexPath: String,
       maxHamming: Int = 3, minMatch: Long = 2, compactEvery: Int = 0)
       (writeBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ce = resolveCompactEvery(media, compactEvery)
-    media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      videoBatch(batch, batchId, everyMs, indexPath, maxHamming, minMatch,
-        writeBatch)
-      if (compactDue(ce, batchId))
-        graft.operators.Dedup.compactHammingIndex(batch.sparkSession,
-          indexPath, through = Some(batchId - 1))
-    }.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestLoop(media, compactEvery)(
+      videoBatch(_, _, everyMs, indexPath, maxHamming, minMatch, writeBatch),
+      graft.operators.Dedup.compactHammingIndex(_, indexPath, _))
 
   /** One [[videoDedupStream]] micro-batch — package-visible for the
     * replay spec, like [[signatureBatch]]. */
   private[graft] def videoBatch(batch: DataFrame, batchId: Long,
       everyMs: Long, indexPath: String, maxHamming: Int, minMatch: Long,
       writeBatch: (DataFrame, Long) => Unit): Unit =
-    frameSeqBatch(batch, batchId, indexPath, maxHamming, minMatch, writeBatch) {
-      media => graft.multimodal.Multimodal.videoFrameHashes(media, everyMs).toDF()
-        .where(col("decoded"))
-        .select(col("id"), col("frame_idx"), col("dhash"))
+    frameSeqBatch(batch, batchId, indexPath, maxHamming, minMatch, writeBatch,
+      "frame_idx", "dhash") {
+      graft.multimodal.Multimodal.videoFrameHashes(_, everyMs).toDF()
     }
 
   /** The micro-batch body [[videoBatch]] and [[audioSeqBatch]] share
-    * (crash contract in [[videoDedupStream]]): `decode` maps the (id,
-    * kind, data) payloads to the decoded frames' three signature columns
-    * (id, pos, sig). */
+    * ([[pinThenCommit]]): `decode` maps the (id, kind, data) payloads to
+    * frames carrying a `decoded` flag, the position column `pos` and the
+    * signature column `sig`; undecodable rows drop out, so an
+    * all-undecodable batch commits nothing. */
   private def frameSeqBatch(batch: DataFrame, batchId: Long, indexPath: String,
-      maxHamming: Int, minMatch: Long, writeBatch: (DataFrame, Long) => Unit)
-      (decode: DataFrame => DataFrame): Unit =
+      maxHamming: Int, minMatch: Long, writeBatch: (DataFrame, Long) => Unit,
+      pos: String, sig: String)(decode: DataFrame => DataFrame): Unit =
     graft.util.CacheScope.withScope {
-      import graft.operators.{Dedup, IndexIO}
-      val spark = batch.sparkSession
-      IndexIO.recoverSwap(spark, indexPath)
-      val hasIndex = IndexIO.hasData(spark, s"$indexPath/bands")
-      val frames = decode(batch.select(col("id"), col("kind"), col("data"))).cache()
-      val Seq(id, pos, sig) = frames.columns.toSeq
-      val inBatch = Dedup.frameSigPairs(frames, id, pos, sig, maxHamming, minMatch)
-      val pairs = (if (hasIndex)
-          inBatch.union(Dedup.incrementalFrameSigPairs(frames, id, pos, sig,
-            indexPath, maxHamming, minMatch, excludeBatch = Some(batchId)))
-        else inBatch).cache()
-      try {
-        pairs.count() // pin results before the index grows (see dedupBatch)
-        writeBatch(pairs, batchId)
-        if (!frames.isEmpty) // an all-undecodable batch must not commit
-          Dedup.writeFrameSigIndex(frames, id, pos, sig, indexPath,
-            batchId = Some(batchId))
-      } finally { pairs.unpersist(); frames.unpersist() }
+      import graft.operators.Dedup
+      pinThenCommit(batch, batchId, indexPath, s"$indexPath/bands", writeBatch)(
+        prepare = b => decode(b.select(col("id"), col("kind"), col("data")))
+          .where(col("decoded")).select(col("id"), col(pos), col(sig)),
+        inBatch = Dedup.frameSigPairs(_, "id", pos, sig, maxHamming, minMatch),
+        vsIndex = Dedup.incrementalFrameSigPairs(_, "id", pos, sig, indexPath,
+          maxHamming, minMatch, excludeBatch = Some(batchId)),
+        accept = Dedup.writeFrameSigIndex(_, "id", pos, sig, indexPath,
+          batchId = Some(batchId)))
     }
 
   /** Streaming AUDIO containment near-dup ingestion — the windowed-audio
@@ -599,26 +581,19 @@ object StreamOps {
   def audioSeqDedupStream(media: DataFrame, windowMs: Long, indexPath: String,
       maxHamming: Int = 3, minMatch: Long = 2, compactEvery: Int = 0)
       (writeBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ce = resolveCompactEvery(media, compactEvery)
-    media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      audioSeqBatch(batch, batchId, windowMs, indexPath, maxHamming,
-        minMatch, writeBatch)
-      if (compactDue(ce, batchId))
-        graft.operators.Dedup.compactHammingIndex(batch.sparkSession,
-          indexPath, through = Some(batchId - 1))
-    }.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestLoop(media, compactEvery)(
+      audioSeqBatch(_, _, windowMs, indexPath, maxHamming, minMatch, writeBatch),
+      graft.operators.Dedup.compactHammingIndex(_, indexPath, _))
 
   /** One [[audioSeqDedupStream]] micro-batch — package-visible for the
     * replay spec, like [[videoBatch]]. */
   private[graft] def audioSeqBatch(batch: DataFrame, batchId: Long,
       windowMs: Long, indexPath: String, maxHamming: Int, minMatch: Long,
       writeBatch: (DataFrame, Long) => Unit): Unit =
-    frameSeqBatch(batch, batchId, indexPath, maxHamming, minMatch, writeBatch) {
-      media => graft.multimodal.Multimodal.audioSeqSignatures(media, windowMs).toDF()
-        .where(col("decoded"))
-        .select(col("id"), col("window_idx"), col("sig"))
+    frameSeqBatch(batch, batchId, indexPath, maxHamming, minMatch, writeBatch,
+      "window_idx", "sig") {
+      graft.multimodal.Multimodal.audioSeqSignatures(_, windowMs).toDF()
     }
 
   /** Streaming corpus profiling: every micro-batch appends its
@@ -655,25 +630,20 @@ object StreamOps {
     * fingerprints to the index. Online contract: keeper is the minimum id
     * seen SO FAR — a late-arriving smaller id is flagged as the duplicate
     * of the earlier-seen keeper, not the other way around. Same
-    * crash-recovery story as the near-dup loop: the index append is
-    * batchId-keyed (replay-idempotent) and the candidate read excludes the
-    * batch's own partition, so a re-delivered batch emits the identical
-    * row set; [[parquetSink]] turns that into exactly-once delivery,
-    * any other `writeBatch` is at-least-once. `compactEvery`
-    * folds committed batches every N batches, `through = batchId - 1` —
-    * same rationale as [[incrementalDedupStream]]. */
+    * crash-recovery story as the near-dup loop ([[pinThenCommit]]): the
+    * index append is batchId-keyed (replay-idempotent) and the candidate
+    * read excludes the batch's own partition, so a re-delivered batch
+    * emits the identical row set; [[parquetSink]] turns that into
+    * exactly-once delivery, any other `writeBatch` is at-least-once.
+    * `compactEvery` folds committed batches every N batches
+    * ([[ingestLoop]]). */
   def incrementalExactStream(docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, compactEvery: Int = 0)
       (writeBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ce = resolveCompactEvery(docs, compactEvery)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      exactBatch(batch, batchId, idCol, textCol, indexPath, writeBatch)
-      if (compactDue(ce, batchId))
-        graft.operators.Dedup.compactFingerprintIndex(batch.sparkSession,
-          indexPath, through = Some(batchId - 1))
-    }.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestLoop(docs, compactEvery)(
+      exactBatch(_, _, idCol, textCol, indexPath, writeBatch),
+      graft.operators.Dedup.compactFingerprintIndex(_, indexPath, _))
 
   /** One [[incrementalExactStream]] micro-batch — package-visible for the
     * replay-idempotence spec, like [[dedupBatch]]. */
@@ -682,33 +652,21 @@ object StreamOps {
       writeBatch: (DataFrame, Long) => Unit): Unit = {
     import graft.functions.TextKernels
     import graft.operators.Dedup
-    val spark = batch.sparkSession
-    // swap repair + data-file check — see dedupBatch
-    graft.operators.IndexIO.recoverSwap(spark, indexPath)
-    val hasIndex = graft.operators.IndexIO.hasData(spark, indexPath)
-    val b = batch.cache()
-    // in-batch duplicates: every non-minimum id of a repeated fingerprint
-    // (the window runs over one bounded micro-batch, not the corpus)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("fp")
-    val inBatch = b
-      .select(col(idCol).as("id"), TextKernels.fingerprint(col(textCol)).as("fp"))
-      .withColumn("keeper", min(col("id")).over(w))
-      .where(col("id") =!= col("keeper"))
-    val dups = (if (hasIndex)
-        inBatch.union(Dedup.incrementalExactBloom(b, idCol, col(textCol), indexPath,
-          excludeBatch = Some(batchId)))
-      else inBatch)
+    pinThenCommit(batch, batchId, indexPath, indexPath, writeBatch)(
+      // in-batch duplicates: every non-minimum id of a repeated fingerprint
+      // (the window runs over one bounded micro-batch, not the corpus)
+      inBatch = _.select(col(idCol).as("id"),
+          TextKernels.fingerprint(col(textCol)).as("fp"))
+        .withColumn("keeper",
+          min(col("id")).over(org.apache.spark.sql.expressions.Window.partitionBy("fp")))
+        .where(col("id") =!= col("keeper")),
+      vsIndex = Dedup.incrementalExactBloom(_, idCol, col(textCol), indexPath,
+        excludeBatch = Some(batchId)),
+      accept = Dedup.writeFingerprintIndex(_, idCol, col(textCol), indexPath,
+        batchId = Some(batchId)),
       // a doc can be a dup both in-batch and vs the index: keep ONE row
       // with the smallest keeper (the min id seen so far)
-      .groupBy(col("id"), col("fp")).agg(min(col("keeper")).as("keeper"))
-      .cache()
-    try {
-      dups.count() // pin results before the index grows (see dedupBatch)
-      writeBatch(dups, batchId)
-      if (!b.isEmpty) // an empty micro-batch must not commit a file-less dir
-        Dedup.writeFingerprintIndex(b, idCol, col(textCol), indexPath,
-          batchId = Some(batchId))
-    } finally { dups.unpersist(); b.unpersist() }
+      merge = _.groupBy(col("id"), col("fp")).agg(min(col("keeper")).as("keeper")))
   }
 
   /** Streaming CURATION loop — the survivor-oriented composition of the
@@ -739,26 +697,19 @@ object StreamOps {
     * set and leaves both indexes bit-identical; with [[parquetSink]] as
     * `writeBatch` the accepted-document output is exactly-once too (any
     * other sink sees at-least-once and should upsert by (batchId, id)).
-    * `compactEvery` folds
-    * both indexes every N batches with the same `through = batchId - 1`
-    * bound as the pair loops. `indexRoot` must be fresh unless resuming
-    * the same stream (`<root>/exact` + `<root>/near`). */
+    * `compactEvery` folds both indexes every N batches ([[ingestLoop]]).
+    * `indexRoot` must be fresh unless resuming the same stream
+    * (`<root>/exact` + `<root>/near`). */
   def curationStream(docs: DataFrame, idCol: String, textCol: String,
       indexRoot: String, minJ: Double, quality: Column,
       compactEvery: Int = 0)(writeBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ce = resolveCompactEvery(docs, compactEvery)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      curationBatch(batch, batchId, idCol, textCol, indexRoot, minJ, quality,
-        writeBatch)
-      if (compactDue(ce, batchId)) {
-        graft.operators.Dedup.compactFingerprintIndex(batch.sparkSession,
-          s"$indexRoot/exact", through = Some(batchId - 1))
-        graft.operators.Dedup.compactBandIndex(batch.sparkSession,
-          s"$indexRoot/near", through = Some(batchId - 1))
-      }
-    }.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestLoop(docs, compactEvery)(
+      curationBatch(_, _, idCol, textCol, indexRoot, minJ, quality, writeBatch),
+      (spark, through) => {
+        graft.operators.Dedup.compactFingerprintIndex(spark, s"$indexRoot/exact", through)
+        graft.operators.Dedup.compactBandIndex(spark, s"$indexRoot/near", through)
+      })
 
   /** One [[curationStream]] micro-batch — package-visible for the
     * replay-idempotence spec, like [[dedupBatch]]. */
@@ -770,7 +721,7 @@ object StreamOps {
     val spark = batch.sparkSession
     val exactPath = s"$indexRoot/exact"
     val bandPath = s"$indexRoot/near"
-    // swap repair + data-file check — see dedupBatch; the data-file check
+    // swap repair + data-file check — see pinThenCommit; the data-file check
     // matters doubly here: a first batch whose rows ALL fail the quality
     // gate used to commit a file-less index dir, and every later batch's
     // read then threw on schema inference, wedging the stream permanently

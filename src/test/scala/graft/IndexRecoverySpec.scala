@@ -79,6 +79,80 @@ class IndexRecoverySpec extends SparkTestBase {
       s"duplicate of the pre-crash corpus not detected: ${emitted.last}")
   }
 
+  test("every append entry point repairs a table stranded at __old before " +
+    "it commits: no earlier row is lost and no __old is left") {
+    val dim = 4
+    def vecs(ids: Seq[Long]) =
+      ids.map(i => (i, Seq.tabulate(dim)(j => math.sin(i * 7.0 + j)))).toDF("id", "v")
+    def docs(ids: Seq[Long]) = ids.map(i =>
+      (i, (1 to 12).map(w => s"w${i}x$w").mkString(" "))).toDF("id", "text")
+    def sigs(ids: Seq[Long]) = ids.map(i => (i, i * 0x9E3779B97F4A7C15L)).toDF("id", "sig")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id").cast("long")).collect().map(_.getLong(0)).toSet
+    def read(p: String) = ids(spark.read.parquet(p))
+    val shingles = graft.functions.NativeKernels.wordShingles2(col("text"))
+    val cents = Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(-1.0, 0.0, 0.0, 0.0))
+    type Commit = (String, Seq[Long]) => Unit
+    // (entry point, the first commit, one more batch through the entry
+    // point, the ids the table holds — for two tables, the ids both hold)
+    val cases: Seq[(String, Commit, Commit, String => Set[Long])] = Seq(
+      ("appendLsh",
+        (p, i) => AnnIndex.buildLsh(vecs(i), "id", col("v"), dim, p, nBits = 2),
+        (p, i) => AnnIndex.appendLsh(vecs(i), "id", col("v"), p, Some(1L)), read),
+      ("appendIvf",
+        (p, i) => AnnIndex.buildIvf(vecs(i), "id", col("v"), cents, p),
+        (p, i) => AnnIndex.appendIvf(vecs(i), "id", col("v"), p, Some(1L)), read),
+      ("writeBandIndex",
+        (p, i) => Dedup.writeBandIndex(docs(i), "id", shingles, p),
+        (p, i) => Dedup.writeBandIndex(docs(i), "id", shingles, p, batchId = Some(1L)),
+        p => read(s"$p/shingles") & read(s"$p/bands")),
+      ("writeHammingIndex",
+        (p, i) => Dedup.writeHammingIndex(sigs(i), "id", "sig", p),
+        (p, i) => Dedup.writeHammingIndex(sigs(i), "id", "sig", p, batchId = Some(1L)),
+        p => read(s"$p/bands")),
+      ("writeFingerprintIndex",
+        (p, i) => Dedup.writeFingerprintIndex(docs(i), "id", col("text"), p),
+        (p, i) => Dedup.writeFingerprintIndex(docs(i), "id", col("text"), p,
+          batchId = Some(1L)), read),
+      ("parquetSink",
+        (p, i) => StreamOps.parquetSink(p)(docs(i), 0L),
+        (p, i) => StreamOps.parquetSink(p)(docs(i), 1L),
+        p => ids(StreamOps.readSink(spark, p))))
+    for ((name, create, append, held) <- cases) {
+      val path = tmpDir(s"strand-$name") + "/t"
+      create(path, Seq(1L, 2L, 3L))
+      mv(path, path + "__old") // crash window: the table is stranded at __old
+      append(path, Seq(4L, 5L))
+      assert(held(path) == Set(1L, 2L, 3L, 4L, 5L), name)
+      assert(!new java.io.File(path + "__old").exists, name)
+    }
+  }
+
+  test("the index commit protocol has one copy under src/main: the replay " +
+    "guard and the swap in IndexIO, one ingestion-loop driver in StreamOps") {
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    // code lines only: scaladoc and line comments may name the calls
+    val code = sources.map(p => p.getFileName.toString ->
+      Files.readAllLines(p).asScala.map(_.trim).filterNot(l =>
+        l.startsWith("//") || l.startsWith("*") || l.startsWith("/*")).toSeq)
+    def hits(pattern: String): Map[String, Int] = code
+      .map { case (f, lines) => f -> lines.count(_.contains(pattern)) }
+      .filter(_._2 > 0).toMap
+    // the def and the replay guard's one call
+    assert(hits("alreadyCompacted(").keySet == Set("IndexIO.scala"),
+      hits("alreadyCompacted(").toString)
+    // the def, the compaction's swap, and at most AnnIndex.rebuild's
+    val swaps = hits("swapDirs(")
+    assert(swaps.keySet.subsetOf(Set("IndexIO.scala", "AnnIndex.scala")) &&
+      swaps("IndexIO.scala") == 2 && swaps.getOrElse("AnnIndex.scala", 0) <= 1,
+      swaps.toString)
+    // the driver, annStream and profileStream
+    assert(hits("foreachBatch").getOrElse("StreamOps.scala", 0) == 3,
+      hits("foreachBatch").toString)
+  }
+
   // --------------------------------------------------- empty-batch robustness
 
   test("curationStream survives a first batch with zero survivors (all " +

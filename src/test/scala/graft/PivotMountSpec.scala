@@ -18,10 +18,11 @@ class PivotMountSpec extends SparkTestBase {
   private val gdelt = "/root/reference/data/gdelt"
   private val fixture = GenGdeltFixture.path
 
-  private def mountPivot(dir: String = gdelt): Catalog = {
-    val sources = new String(java.nio.file.Files.readAllBytes(
+  private def mountPivot(dir: String = gdelt,
+      edit: String => String = identity): Catalog = {
+    val sources = edit(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/standalone/sources_pivot.json")), "UTF-8")
-      .replace("./data/gdelt/", s"$dir/")
+      .replace("./data/gdelt/", s"$dir/"))
     val tmp = java.nio.file.Files.createTempFile("graft-pivot", ".json")
     java.nio.file.Files.write(tmp, sources.getBytes("UTF-8"))
     try {
@@ -42,6 +43,19 @@ class PivotMountSpec extends SparkTestBase {
     // the metric itself stays on the facet spec
     assert(cat.get("position").spec.op == graft.api.SimOp.Metric("euclidean"))
     assert(cat.get("timestamp").spec.op == graft.api.SimOp.Metric("manhattan"))
+  }
+
+  test("a vector_dictionary entry without token_delimiter splits its vectors on ','") {
+    // the fixture's `term;glove_vector` dictionary, declared without the field
+    val dictEntry = "\"separator\": \";\", \"token_delimiter\": \",\""
+    val cat = mountPivot(fixture, { json =>
+      assert(json.contains(dictEntry))
+      json.replace(dictEntry, "\"separator\": \";\"")
+    })
+    val cnn = cat.get("organizations").spec.queryTransform.get(Seq("cnn"))
+    val expected = graft.sources.CsvMount.mountVectorDictionary(spark,
+      s"$fixture/glove_dictionary.csv").where(col("term") === "cnn").head.getSeq[Double](1)
+    assert(cnn.size == 50 && cnn == expected.toSeq)
   }
 
   test("transform_by derives a queryable vector attribute from the keyword column") {
