@@ -295,8 +295,8 @@ object Queries {
   private val multiFacet: (SparkSession, String) => DataFrame = (s, dir) => {
     // fused shared-source scoring (optimization r16): the three facets are
     // distance columns over ONE cached projection, so phase 2 is a single
-    // broadcast-semi pass instead of 3 scans + union + pivot aggregate —
-    // bit-identical results (OperatorSpec asserts row-for-row vs topK)
+    // InSet-restricted pass instead of one scan per facet — bit-identical
+    // results (OperatorSpec asserts row-for-row vs topK)
     val (o, oid, fs) = orderShared(s, dir, combos1)
     RankAggregate.topKSharedScan(s, o, oid, fs, 10, 10000)
       .withColumnRenamed("id", "o_orderkey")

@@ -7,7 +7,6 @@ import graft.api.{Algorithm, Facet, Limits, Normalizer, SimOp}
 import graft.functions.SimKernels
 import graft.operators.{BoundFacet, FacetSearch, RankAggregate}
 import graft.sources.CsvMount
-import graft.util.CacheScope
 
 /** The search front-end over a mounted catalog — the rebuild of the
   * reference's SearchHandler (reference: engine/SearchHandler.java:193-752).
@@ -333,43 +332,23 @@ object SimSearchEngine {
     base.select(col("id"), d.as("d"))
   }
 
-  /** Top-k multi-attribute search. Returns (combo, rank, id, score).
-    *
-    * Scale calibration: when no explicit scale is given, the decay scale of
-    * each facet is set to k * (k-th candidate distance). The reference's
-    * code reads as plain k-th distance (NumericalSimSearch.java:244-246),
-    * but its committed golden fixture (data/gdelt/standalone/
-    * search_results.json) is only reproduced — to 1e-9, on every score of
-    * both weight combinations — by k * d_k; we match the fixture's
-    * observable behavior and document the divergence from the code-as-read.
-    */
   /** R7: weight auto-estimation for a facet with no user weights — the p-th
-    * percentile of the facet's decayed candidate scores with
-    * p = 100 - 100k/n, linearly interpolated
+    * percentile of the facet's candidate scores with p = 100 - 100k/n,
+    * linearly interpolated
     * (reference: weights/Estimator.java:145-189 proc(k), invoked from
-    * RankAggregator.java:167-192). */
-  def estimateWeight(scored: DataFrame, k: Int): Double = {
-    val n = scored.count()
+    * RankAggregator.java:167-192). The scores are the facet's collected
+    * top-M list, so estimation reads no data of its own. */
+  def estimateWeight(scores: Seq[Double], k: Int): Double = {
+    val n = scores.size
     if (n == 0) return 1.0
     val p = math.max(0.0, 1.0 - k.toDouble / n)
     val idx = p * (n - 1)
-    val lo = math.floor(idx).toLong
+    val lo = math.floor(idx).toInt
     val frac = idx - math.floor(idx)
-    val tail = weightTail(scored, n, lo).collect().map(_.getDouble(0)).reverse
-    val est = if (tail.length < 2) tail(0) else tail(0) + (tail(1) - tail(0)) * frac
+    val sorted = scores.sorted(Ordering.Double.TotalOrdering)
+    val est = if (lo + 1 >= n) sorted(lo) else sorted(lo) + (sorted(lo + 1) - sorted(lo)) * frac
     math.min(1.0, math.max(1e-9, est))
   }
-
-  /** The two interpolation rows sit at ascending ranks lo+1 and lo+2, i.e.
-    * inside the top (n-lo) ~ k+1 rows from the END of the (s, id) order. A
-    * shuffle-free TakeOrdered heap on the inverted order fetches exactly
-    * that tail; ranking the whole facet through an unpartitioned Window
-    * (the naive formulation) would sort 100% of the data into ONE task to
-    * read 2 rows — the plan PlanSpec asserts can never come back. */
-  private[graft] def weightTail(scored: DataFrame, n: Long, lo: Long): DataFrame =
-    scored.orderBy(col("s").desc, col("id").desc)
-      .limit((n - lo).toInt)
-      .select(col("s"))
 
   /** P3: cross-attribute residual boolean filter — restrict the searchable
     * entities to those satisfying `filter` over the referenced mounted
@@ -406,11 +385,7 @@ object SimSearchEngine {
     *  - distance-based (JDBC pushdown): the remote evaluates
     *    `ORDER BY distance LIMIT m` and returns a bounded (id, d) list;
     *    the engine calibrates scale / decays it exactly like an ingested
-    *    facet. The list is cached so the scale calibration, weight
-    *    estimation and exact-scoring phases share ONE remote fetch, and
-    *    registered with [[graft.util.CacheScope]] so the consuming request
-    *    scope releases it (outside a scope it lives until LRU — the
-    *    RankAggregate topM story). */
+    *    facet. The list is read once, by the phase-1 collect. */
   private def facetDistFrames(catalog: Catalog, m: Int, specs: Seq[SearchSpec],
       eligible: Option[DataFrame])
       : (Map[Int, graft.operators.BoundFacet], Seq[Option[DataFrame]]) = {
@@ -432,9 +407,7 @@ object SimSearchEngine {
     val dists: Seq[Option[DataFrame]] = specs.zipWithIndex.map { case (s, i) =>
       inSituBuilt.get(i) match {
         case Some(bf) if !bf.preScored =>
-          Some(CacheScope.register(eligible
-            .map(e => bf.dist.join(e, Seq("id"), "left_semi"))
-            .getOrElse(bf.dist).cache()))
+          Some(eligible.map(e => bf.dist.join(e, Seq("id"), "left_semi")).getOrElse(bf.dist))
         case Some(_) => None
         case None =>
           val f = catalog.get(s.column)
@@ -478,6 +451,25 @@ object SimSearchEngine {
       .map { case (i, rows) => i -> rows.map(_.getDouble(1)).sorted.toSeq }
   }
 
+  /** Top-k multi-attribute search. Returns [[RankAggregate.topK]]'s
+    * (combo, id, score, rank), or [[RankAggregate.topKDetailed]]'s columns
+    * when `detailed`, as a local DataFrame.
+    *
+    * Every facet's top-M list is collected in ONE Spark job
+    * ([[RankAggregate.collectLists]]); the scale calibration and R7 weight
+    * estimation read the collected lists, and the aggregation scans again
+    * only the facets whose list does not hold every candidate — a request
+    * runs at most two jobs.
+    *
+    * Scale calibration: when no explicit scale is given, the decay scale of
+    * each facet is set to k * (k-th candidate distance). The reference's
+    * code reads as plain k-th distance (NumericalSimSearch.java:244-246),
+    * but its committed golden fixture (data/gdelt/standalone/
+    * search_results.json) is only reproduced — to 1e-9, on every score of
+    * both weight combinations — by k * d_k; we match the fixture's
+    * observable behavior and document the divergence from the code-as-read.
+    * The degenerate all-exact-match prefix keeps the plain 1.0 guard (no
+    * multiplier). */
   def search(spark: SparkSession, catalog: Catalog, k: Int,
       specs: Seq[SearchSpec], residualFilter: Option[String] = None,
       detailed: Boolean = false,
@@ -492,78 +484,35 @@ object SimSearchEngine {
     val m = if (specs.size > 1) InflationFactor * k else k
     val eligible = residualFilter.map(eligibleIds(catalog, _))
     val (inSituBuilt, dists) = facetDistFrames(catalog, m, specs, eligible)
-    // ONE cached top-M per distance-bearing facet: the scale calibration
-    // (its k-prefix), R7 weight estimation, and the rank aggregation's
-    // phase-1 candidate lists all read this cache — previously each phase
-    // paid its own full facet scan (a k-scan here, an m-scan inside run,
-    // and another m-scan for estimation). Each is registered with the
-    // consuming request's CacheScope, which releases it once the answer
-    // is rendered (outside a scope: <= m rows each, shed by LRU).
-    val topMCache: Map[Int, DataFrame] = specs.indices.flatMap(i =>
-      dists(i).map(d => i -> CacheScope.register(FacetSearch.topM(d, m).cache()))).toMap
-    // Calibrate every uncalibrated facet's k-th candidate distance in ONE
-    // tagged Spark job — sequential per-facet collects would pay |facets|
-    // job overheads. The job also populates all the top-M caches in a
-    // single pass.
-    val kth = RankAggregate.kthDistances(specs.indices
-      .filter(i => specs(i).scale.isEmpty && dists(i).isDefined)
-      .map(i => i -> topMCache(i)), k)
-    def resolveWeights(s: SearchSpec, scored: => DataFrame): Seq[Double] =
-      if (s.weights.size == nCombos) s.weights
-      else if (s.weights.size == 1) Seq.fill(nCombos)(s.weights.head)
-      else if (s.weights.nonEmpty) throw new IllegalArgumentException(
-        s"attribute ${s.column} supplies ${s.weights.size} weights but the " +
-          s"query evaluates $nCombos combinations — every attribute must " +
-          "supply one weight per combination (or exactly one, broadcast " +
-          "to all)")
-      else Seq.fill(nCombos)(estimateWeight(scored, k)) // R7
-    val facets = specs.zipWithIndex.map { case (s, i) =>
+    // weights and calibrated scales are filled in from the collected lists
+    val unresolved = specs.zipWithIndex.map { case (s, i) =>
       inSituBuilt.get(i) match {
-        case Some(bf0) if bf0.preScored =>
-          val list = eligible
-            .map(e => bf0.dist.join(e, Seq("id"), "left_semi")).getOrElse(bf0.dist)
-          // the ranked list IS the facet's score distribution — estimate
-          // directly over it (<= m rows, no further calibration needed)
-          val ws = resolveWeights(s, list.select(col("id"), col("d").as("s")))
-          bf0.copy(dist = list, weightPerCombo = ws)
-        case Some(bf0) => // distance-based in-situ (S7 JDBC pushdown)
-          val dist = dists(i).get // the cached bounded remote list
-          val scale = s.scale.getOrElse {
-            val dk = kth.getOrElse(i, 0.0)
-            if (dk <= 0.0) 1.0 else k * dk
-          }
-          val ws = resolveWeights(s,
-            FacetSearch.decayedWithScale(bf0.copy(dist = dist), scale))
-          bf0.copy(dist = dist, weightPerCombo = ws, scale = Some(scale))
+        case Some(bf0) if bf0.preScored => bf0.copy(dist = eligible
+          .map(e => bf0.dist.join(e, Seq("id"), "left_semi")).getOrElse(bf0.dist))
+        case Some(bf0) => bf0.copy(dist = dists(i).get) // distance-based in-situ (S7 JDBC pushdown)
         case None =>
-          val f = catalog.get(s.column)
-          val dist = dists(i).get
-          // k * d_k only when d_k is a genuine nonzero distance; the
-          // degenerate all-exact-match prefix keeps the plain 1.0 guard
-          // (no multiplier)
-          val scale = s.scale.getOrElse {
-            val dk = kth.getOrElse(i, 0.0)
-            if (dk <= 0.0) 1.0 else k * dk
-          }
-          val jac = f.spec.op == SimOp.Categorical || f.spec.op == SimOp.Textual
-          val ws = resolveWeights(s, { // R7: candidate score distribution
-            // the cached top-M — estimation must not re-scan the facet
-            FacetSearch.decayedWithScale(
-              BoundFacet(s.column, topMCache(i), Seq(1.0), s.decay, Some(scale), jac),
-              scale)
-          })
-          BoundFacet(s.column, dist, ws, s.decay, Some(scale), jac)
+          val op = catalog.get(s.column).spec.op
+          BoundFacet(s.column, dists(i).get, Seq.empty, s.decay,
+            jaccard = op == SimOp.Categorical || op == SimOp.Textual)
       }
     }
-    // hand the cached candidate lists to the aggregation, positionally:
-    // preScored facets rank by similarity DESC (run's own convention)
-    val topMs = facets.zipWithIndex.map { case (bf, i) =>
-      if (bf.preScored)
-        CacheScope.register(bf.dist.orderBy(col("d").desc, col("id")).limit(m).cache())
-      else topMCache(i)
+    val lists = RankAggregate.collectLists(unresolved, m)
+    val facets = unresolved.zip(lists).zip(specs).map { case ((bf, list), s) =>
+      val f = if (bf.preScored) bf
+        else bf.copy(scale = Some(s.scale.getOrElse(RankAggregate.kthScale(list, k, k))))
+      val ws =
+        if (s.weights.size == nCombos) s.weights
+        else if (s.weights.size == 1) Seq.fill(nCombos)(s.weights.head)
+        else if (s.weights.nonEmpty) throw new IllegalArgumentException(
+          s"attribute ${s.column} supplies ${s.weights.size} weights but the " +
+            s"query evaluates $nCombos combinations — every attribute must " +
+            "supply one weight per combination (or exactly one, broadcast " +
+            "to all)")
+        else Seq.fill(nCombos)(estimateWeight(RankAggregate.scores(f, list), k)) // R7
+      f.copy(weightPerCombo = ws)
     }
-    if (detailed) RankAggregate.topKDetailed(spark, facets, k, m, Some(topMs))
-    else RankAggregate.topK(spark, facets, k, m, Some(topMs))
+    if (detailed) RankAggregate.topKDetailed(spark, facets, k, m, Some(lists))
+    else RankAggregate.topK(spark, facets, k, m, Some(lists))
   }
 
   /** A5: k x k pairwise weighted similarity over a set of result entities
@@ -609,12 +558,10 @@ object SimSearchEngine {
       }
     }
     val calibrated = specs.zip(scalesByIdx).map { case (s, sc) => s.copy(scale = Some(sc)) }
-    // cache: the ids frame feeds one collect plus |facets| joins below —
-    // uncached, each consumer would re-run the whole search (re-firing
-    // every remote top-M fetch for in-situ facets). The consuming request
-    // scope releases it with the search's own caches.
-    val ids = CacheScope.register(search(spark, catalog, k, calibrated)
-      .where(col("combo") === 0).select(col("id")).cache())
+    // the search result is local: its collect and the |facets| joins below
+    // re-run nothing
+    val ids = search(spark, catalog, k, calibrated)
+      .where(col("combo") === 0).select(col("id"))
     // value retrieval for in-situ facets: one bounded (<= K_MAX) id collect
     // feeds every remote value fetch
     val idSeq: Seq[Any] = ids.collect().map(_.get(0)).toSeq

@@ -875,8 +875,9 @@ object Dedup {
     * candidate rows; capping drops it from the index entirely. Recall
     * trade: dropped signatures never match again — for frame-sequence
     * indexes a true near-dup still matches on its non-boilerplate
-    * frames, exactly as in [[frameSigPairs]]. Default None = unchanged
-    * behavior. */
+    * frames, exactly as in [[frameSigPairs]]. The cap counts and drops
+    * only the rows the compaction folds; batches newer than `through` carry
+    * over unchanged. Default None = unchanged behavior. */
   def compactHammingIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, through: Option[Long] = None,
       maxDf: Option[Long] = None): Unit =
@@ -1048,9 +1049,11 @@ object Dedup {
     * [[incrementalExactBloom]]'s "newer partitions" read miss them. (The
     * rewrite drops the old bloom file with the old directory, so a crash
     * between swap and rebuild degrades to the plain-join fallback — never
-    * to a stale bloom.) */
+    * to a stale bloom.) A swap stranded at `__old` is repaired before the
+    * bloom is looked for, or the index would read as bloom-less. */
   def compactFingerprintIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       through: Option[Long] = None): Unit = {
+    IndexIO.recoverSwap(spark, path)
     val hadBloom = readFingerprintBloom(spark, path).isDefined
     IndexIO.compact(spark, path, through)
     if (hadBloom) writeFingerprintBloom(spark, path)

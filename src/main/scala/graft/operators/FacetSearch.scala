@@ -76,19 +76,4 @@ object FacetSearch {
     val ds = topM(dist, k).select(col("d")).collect().map(_.getDouble(0))
     if (ds.isEmpty || ds.max <= 0.0) None else Some(ds.max)
   }
-
-  /** Decayed similarity column for a calibrated facet
-    * (reference: measure/DecayedSimilarity.java:42-99). */
-  def decayed(f: BoundFacet, k: Int): DataFrame =
-    decayedWithScale(f, f.scale.getOrElse(kthDistanceScale(f.dist, k)))
-
-  /** As [[decayed]] but with an externally computed scale (lets the caller
-    * derive the scale from an already-materialized candidate list instead of
-    * re-scanning the facet). */
-  def decayedWithScale(f: BoundFacet, s: Double): DataFrame = {
-    val sim =
-      if (f.jaccard) SimKernels.decaySimJaccard(col("d"), f.decay, lit(s))
-      else SimKernels.decaySim(col("d"), f.decay, lit(s))
-    f.dist.withColumn("s", sim)
-  }
 }

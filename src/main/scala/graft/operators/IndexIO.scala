@@ -154,8 +154,10 @@ private[graft] object IndexIO {
     * File layout: with `partitionCols` (the levels above batch, e.g. the
     * ANN bucket) each partition's rows are co-located and land in one
     * file; a flat table is sized to ~one file per `maxPartitionBytes`.
-    * `transform` runs over each whole table, newer partitions included,
-    * before the fold (the Hamming index's df cap). */
+    * `transform` runs over the rows being folded only (the Hamming index's
+    * df cap); newer batch partitions are carried over unchanged. A table
+    * the fold leaves empty keeps one schema-bearing file under `batch=-1`,
+    * so it reads back (and compacts again) as an empty table. */
   private[graft] def compact(spark: SparkSession, root: String,
       through: Option[Long], tables: Seq[String] = Seq(""),
       partitionCols: Seq[String] = Seq.empty,
@@ -165,10 +167,14 @@ private[graft] object IndexIO {
     def under(dir: String, table: String) = if (table.isEmpty) dir else s"$dir/$table"
     val folded = tables.map { table =>
       val df = spark.read.parquet(under(root, table))
-      val maxBatch = df.agg(max(col(BatchCol).cast("long"))).head.getLong(0)
+      val maxBatch = df.agg(max(col(BatchCol).cast("long"))).head match {
+        case r if r.isNullAt(0) => -1L // an empty table
+        case r => r.getLong(0)
+      }
       val fold = math.min(through.getOrElse(maxBatch), maxBatch)
       val b = col(BatchCol).cast("long")
-      val out = transform(df).withColumn(BatchCol, when(b <= fold, lit(-1L)).otherwise(b))
+      val out = transform(df.where(b <= fold)).withColumn(BatchCol, lit(-1L))
+        .unionByName(df.where(b > fold).withColumn(BatchCol, b))
       (if (partitionCols.nonEmpty) out.repartition(partitionCols.map(col): _*)
        else out.repartition(df.queryExecution.analyzed.collectFirst {
          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
@@ -177,6 +183,8 @@ private[graft] object IndexIO {
        }.getOrElse(1)))
         .write.mode("overwrite").partitionBy(partitionCols :+ BatchCol: _*)
         .parquet(under(tmp, table))
+      if (!hasData(spark, under(tmp, table)))
+        out.limit(0).drop(BatchCol).write.parquet(s"${under(tmp, table)}/$BatchCol=-1")
       fold
     }.max
     writeMeta(spark, tmp, editedMeta(spark, root)(n => n.put("compactedThrough",

@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Multi-facet rank aggregation: the rebuild of the reference's
   * Threshold / NRA / PRA aggregators
@@ -10,25 +16,33 @@ import org.apache.spark.sql.functions._
   * ranking/NoRandomAccessRanking.java:64-269,
   * ranking/PartialRandomAccessRanking.java:112-316).
   *
-  * Batch-Spark plan (SURVEY.md §7.2): the union of the per-facet top-M
-  * candidate id-sets is scored EXACTLY against every facet ("random access"
-  * becomes a broadcast join), then one global top-k per weight combination.
-  * This yields scores at least as exact as TA and strictly more exact than
+  * The union of the per-facet top-M candidate id-sets is scored EXACTLY
+  * against every facet, then ranked once per weight combination. This
+  * yields scores at least as exact as TA and strictly more exact than
   * NRA/PRA, which may emit lower-bound scores — the reference itself patches
   * estimated scores to exact ones when collecting stats
   * (SearchHandler.java:759-767).
   *
-  * Scale design (100 TB): each facet's top-M is a shuffle-free
-  * TakeOrderedAndProject over the facet scan; the candidate id-set
-  * (<= M * |facets| <= 50k * facets rows) is broadcast ONCE, to a join
-  * above the union of the per-facet exact-scoring streams, so the facet
-  * scans stream against it and no large table is ever shuffled; the final
-  * group-by/top-k runs over candidate rows only. A local facet whose cached
-  * top-M list holds every candidate (the list exhausted the facet, or it is
-  * the query's only facet) is scored from that list: the second full scan
-  * is paid only by facets the lists do not cover.
+  * Plan (the reference's "N parallel top-M scans → one merge operator"):
+  *  - phase 1 is ONE Spark job: every facet's deterministic top-M list is a
+  *    shuffle-free TakeOrderedAndProject, and the tagged union of the lists
+  *    is collected;
+  *  - phase 2 is at most one more job: only facets whose list does not hold
+  *    every candidate (and random-access lookups of ids a bounded list
+  *    misses) are scanned again, restricted by an InSet filter over the
+  *    candidate ids, and collected;
+  *  - everything else — scale calibration, list stats, the candidate set,
+  *    the exactness bound, scoring and ranking — runs on the driver.
+  * The driver holds at most m·|facets| candidates (m <= K_MAX·1000, the
+  * reference's in-memory bound, Constants.java:42-44), and the result is a
+  * local DataFrame.
   */
 object RankAggregate {
+
+  /** One facet's collected top-M list: (id, d) rows, ids as Spark returns
+    * them, `d` null where the facet's distance is null. Pre-scored lists
+    * hold similarities in `d`. */
+  type TopList = IndexedSeq[(Any, java.lang.Double)]
 
   /** Exact weighted top-k over the candidate union.
     *
@@ -37,28 +51,24 @@ object RankAggregate {
     *                Constants.java:42)
     * @param m       per-facet candidate list size (reference: k * 1000,
     *                SearchHandler.java:318-320)
-    * @return columns (combo: int, rank: int, id, score: double) — `score`
+    * @param lists   the facets' lists, already collected by [[collectLists]]
+    *                (the engine reads them first to calibrate scales and
+    *                estimate weights); None collects them here
+    * @return columns (combo: long, id, score: double, rank: long) — `score`
     *         rounded to 6 decimals; ranking order is (rounded score desc, id)
     *         so results are bit-deterministic across engines.
     */
-  /** As [[topK]] but additionally returns one raw (unrounded) decayed
-    * similarity column per facet, named `s_<facetName>` — the reference's
-    * per-attribute scores in RankedResult.attributes
-    * (engine/processor/RankedResult.java:14-176). */
-  def topKDetailed(spark: SparkSession, facets: Seq[BoundFacet], k: Int, m: Int,
-      topMsIn: Option[Seq[DataFrame]] = None): DataFrame =
-    run(spark, facets, k, m, detailed = true, topMsIn)
-
-  /** `topMsIn`: pre-computed (and ideally cached) per-facet top-M candidate
-    * frames, positionally matching `facets` — callers that already scanned
-    * each facet for calibration (the engine's search path) pass them so
-    * phase 1 reads the caches instead of re-scanning every facet. Each list
-    * must be the facet's (d, id)-ordered top-`m` (similarity-descending for
-    * a pre-scored facet): phase 2 scores a facet from its list alone when
-    * the list has fewer than `m` rows or is the only one. */
   def topK(spark: SparkSession, facets: Seq[BoundFacet], k: Int, m: Int,
-      topMsIn: Option[Seq[DataFrame]] = None): DataFrame =
-    run(spark, facets, k, m, detailed = false, topMsIn)
+      lists: Option[Seq[TopList]] = None): DataFrame =
+    run(spark, facets, k, m, detailed = false, lists)
+
+  /** As [[topK]] but additionally returns the per-result `exact` flag and
+    * one raw (unrounded) decayed similarity column per facet, named
+    * `s_<facetName>` — the reference's per-attribute scores in
+    * RankedResult.attributes (engine/processor/RankedResult.java:14-176). */
+  def topKDetailed(spark: SparkSession, facets: Seq[BoundFacet], k: Int, m: Int,
+      lists: Option[Seq[TopList]] = None): DataFrame =
+    run(spark, facets, k, m, detailed = true, lists)
 
   /** One facet of a [[topKSharedScan]] query: a distance COLUMN over the
     * shared source (instead of a standalone dist frame). */
@@ -69,232 +79,220 @@ object RankAggregate {
       decay: Double = graft.functions.SimKernels.DefaultDecay,
       jaccard: Boolean = false)
 
-  /** As [[topK]] for facets sharing ONE source frame, with a FUSED exact-
-    * scoring phase: because every facet is a distance COLUMN over the same
-    * source and ids are unique in it, the per-candidate facet scores need no
-    * per-facet stream + union + pivot aggregation — one broadcast-semi pass
-    * over the source computes every `s_i` side by side. Plan effect vs
-    * [[topK]] over per-facet projections of the same frame: |facets| scans
-    * + union + HashAggregate (+ its Exchange) collapse into ONE scan and
-    * zero aggregates; at cluster scale that is |facets| full corpus passes
-    * → 1. Results are bit-identical for the shared-source shape (each
-    * candidate id appears exactly once per facet stream either way, so the
-    * pivot's conditional sum was a no-op re-expression of the same decayed
-    * similarity — asserted row-for-row against [[topK]] in OperatorSpec).
-    * PRECONDITION: the facet distance expressions must be null-free over
-    * the source (the mount contract, P4 na.drop) — [[run]]'s pivot
-    * coalesces a missing facet score to 0.0, while the fused weighted sum
-    * would carry a null distance into a null score.
-    * Phase 1 stays the per-facet codegen'd TakeOrderedAndProject over the
-    * (typically cached) source. */
+  /** As [[topK]] for facets sharing ONE source frame whose ids are unique.
+    * Phase 2 is FUSED: one InSet-restricted scan of the source computes
+    * every uncovered facet's distance side by side, where [[topK]] over
+    * per-facet projections would scan the source once per facet.
+    * Results are bit-identical to [[topK]] (asserted row-for-row in
+    * OperatorSpec). */
   def topKSharedScan(spark: SparkSession, source: DataFrame,
       id: org.apache.spark.sql.Column, facets: Seq[SharedFacet],
       k: Int, m: Int, detailed: Boolean = false): DataFrame = {
-    require(facets.nonEmpty)
-    val nCombos = facets.head.weightPerCombo.size
-    require(facets.forall(_.weightPerCombo.size == nCombos))
-    facets.foreach(f => f.weightPerCombo.foreach(w =>
-      require(w > 0 && w <= 1, s"weight $w out of (0,1] for facet ${f.name}")))
-    // Phase 1: deterministic per-facet top-M, one TakeOrderedAndProject
-    // per facet over the shared source (cached by the caller), cached so
-    // calibration and the candidate union read each list once.
-    val topMs = facets.map(f => graft.util.CacheScope.register(
-      FacetSearch.topM(source.select(id.as("id"),
-        f.dist.cast("double").as("d")), m).cache()))
-    val kth = kthDistances(facets.indices.map(i => i -> topMs(i)), k)
-    val scales = facets.indices.map { i =>
-      val dk = kth.getOrElse(i, 0.0)
-      if (dk <= 0.0) 1.0 else dk
+    val bound = facets.map(f => BoundFacet(f.name,
+      source.select(id.as("id"), f.dist.cast("double").as("d")),
+      f.weightPerCombo, f.decay, jaccard = f.jaccard))
+    aggregate(spark, bound, collectLists(bound, m), k, m, detailed) { (uncovered, inCands) =>
+      source.where(inCands(id))
+        .select(id.as("id"), explode(array(uncovered.map(i =>
+          struct(lit(i).as("f"), facets(i).dist.cast("double").as("d"))): _*)).as("p"))
+        .select(col("p.f"), col("id"), col("p.d"))
     }
-    val cands = topMs.map(_.select(col("id"))).reduce(_ union _).distinct()
-    // Phase 2 (fused): one broadcast-semi pass computes all facet scores.
-    val simCols = facets.zip(scales).zipWithIndex.map { case ((f, sc), i) =>
-      val d = f.dist.cast("double")
-      val s =
-        if (f.jaccard) graft.functions.SimKernels.decaySimJaccard(d, f.decay, lit(sc))
-        else graft.functions.SimKernels.decaySim(d, f.decay, lit(sc))
-      s.as(s"s_$i")
-    }
-    val pivoted = source.select((id.as("id") +: simCols): _*)
-      .join(broadcast(cands), Seq("id"))
-    // TA-style exactness bound for detailed mode — same derivation as
-    // [[run]]'s sMth, restricted to the shared-source facet shape (no
-    // pre-scored facets possible here).
-    lazy val sMth: Seq[Double] = {
-      val stats = listStats(topMs)
-      facets.zip(scales).zipWithIndex.map { case ((f, sc), i) =>
-        val (n, maxd, _) = stats.getOrElse(i, (0L, 0.0, 0.0))
-        if (n < m) 0.0
-        else if (f.jaccard && maxd == 1.0) 0.0
-        else math.exp(-f.decay * maxd / sc)
-      }
-    }
-    finish(pivoted, facets.map(f => (f.name, f.weightPerCombo)), k, nCombos,
-      detailed, if (detailed) Some(sMth) else None)
   }
 
   private def run(spark: SparkSession, facets: Seq[BoundFacet], k: Int, m: Int,
-      detailed: Boolean, topMsIn: Option[Seq[DataFrame]] = None): DataFrame = {
+      detailed: Boolean, lists: Option[Seq[TopList]]): DataFrame =
+    aggregate(spark, facets, lists.getOrElse(collectLists(facets, m)), k, m, detailed) {
+      (uncovered, inCands) => uncovered.map { i =>
+        facets(i).dist.where(inCands(col("id"))).select(lit(i).as("f"), col("id"), col("d"))
+      }.reduce(_ union _)
+    }
+
+  /** Phase 1: every facet's deterministic top-`m` list in ONE Spark job.
+    * Each list is a shuffle-free TakeOrderedAndProject over the facet scan
+    * ((d, id) ascending; similarity descending for a pre-scored facet, whose
+    * list is its whole knowledge); the lists are tagged with their facet's
+    * position, unioned and collected. */
+  def collectLists(facets: Seq[BoundFacet], m: Int): Seq[TopList] = {
     require(facets.nonEmpty)
-    val nCombos = facets.head.weightPerCombo.size
-    require(facets.forall(_.weightPerCombo.size == nCombos))
-    facets.foreach(f => f.weightPerCombo.foreach(w =>
-      require(w > 0 && w <= 1,
-        s"weight $w out of (0,1] for facet ${f.name}"))) // reference: weights/Validator.java:14-22 (1.0 admitted — the reference's own golden query uses it)
     // mixed-source queries make heterogeneous id types a real hazard: the
     // candidate union would silently widen (bigint 7 vs string "007" never
     // matching back) — fail fast and make the caller cast to a common type
     val idTypes = facets.map(_.dist.schema("id").dataType).distinct
     require(idTypes.size == 1,
       s"facet id types must match, got ${idTypes.mkString(", ")}; cast ids to a common type")
+    val rows = facets.zipWithIndex.map { case (f, i) =>
+      (if (f.preScored) f.dist.orderBy(col("d").desc, col("id")).limit(m)
+       else FacetSearch.topM(f.dist, m))
+        .select(lit(i).as("f"), col("id"), col("d").cast("double"))
+    }.reduce(_ union _).collect().groupBy(_.getInt(0))
+    facets.indices.map(i => rows.getOrElse(i, Array.empty[Row]).toIndexedSeq
+      .map(r => (r.get(1), r.get(2).asInstanceOf[java.lang.Double])))
+  }
 
-    // Phase 1: deterministic per-facet candidates. Each top-M is one
-    // shuffle-free TakeOrderedAndProject scan; the (<= m)-row result is
-    // cached so both the scale calibration and the candidate union read it
-    // without re-scanning the facet. Cache lifetime: entries are small
-    // (<= m rows) and MEMORY_AND_DISK, so a long-lived session sheds them
-    // via LRU eviction; they cannot be unpersisted here because the
-    // returned DataFrame is lazy and still references them — a consuming
-    // CacheScope.withScope releases them right after its action instead.
-    // pre-scored (NRA) facets rank by similarity DESC — their list is the
-    // entire knowledge of the facet (no random access)
-    val topMs = topMsIn.getOrElse(facets.map(f =>
-      graft.util.CacheScope.register(
-        (if (f.preScored) f.dist.orderBy(col("d").desc, col("id")).limit(m)
-         else FacetSearch.topM(f.dist, m)).cache())))
-    // Calibrate every facet's scale in ONE Spark job ([[kthDistances]]).
-    // The reference runs one thread per facet for the same reason
-    // (SearchHandler.java:717-720); one tagged job beats |facets| separate
-    // jobs on per-job overhead and populates all the topM caches in a
-    // single pass.
-    val kth = kthDistances(facets.indices.filter { i =>
-      facets(i).scale.isEmpty && !facets(i).preScored // NRA facets have no distance to calibrate
-    }.map(i => i -> topMs(i)), k)
-    val scales = facets.zipWithIndex.map { case (f, i) =>
-      f.scale.getOrElse {
-        val dk = kth.getOrElse(i, 0.0) // absent = empty facet -> guard
-        if (dk <= 0.0) 1.0 else dk
-      }
+  /** The facet scale calibrated from its list: `times` x the k-th candidate
+    * distance d_k, or 1.0 when d_k is zero or absent (an all-exact-match or
+    * empty prefix). d_k is the largest d among the list's first k rows in
+    * (d, id) order — nulls first — as a max(d) over the top-k reads it. */
+  private[graft] def kthScale(list: TopList, k: Int, times: Int): Double = {
+    val prefix = math.min(k, list.size) - list.count(_._2 == null)
+    val ds = list.flatMap(r => Option(r._2)).map(_.doubleValue).sorted(Ordering.Double.TotalOrdering)
+    val dk = if (prefix <= 0) 0.0 else ds(prefix - 1)
+    if (dk <= 0.0) 1.0 else times * dk
+  }
+
+  /** Decayed similarity of distance `d` — SimKernels.decaySim /
+    * decaySimJaccard evaluated on the driver, bit-identical to Spark's:
+    * the same (-λ·d)/scale order, the same scale <= 0 guard and the
+    * StrictMath.exp that Spark's `exp` calls. Jaccard distance 1 scores 0. */
+  private[graft] def decayed(d: Double, decay: Double, scale: Double, jaccard: Boolean): Double =
+    if (jaccard && d == 1.0) 0.0
+    else StrictMath.exp(-decay * d / (if (scale <= 0.0) 1.0 else scale))
+
+  /** Similarity of each row of `f`'s list: the listed similarity for a
+    * pre-scored facet, the decayed distance on `f.scale` otherwise; a null
+    * d scores 0, the missing-value contract (RankAggregator.java:239-242). */
+  private[graft] def scores(f: BoundFacet, list: TopList): IndexedSeq[Double] = list.map(r => score(f, r._2))
+
+  private def score(f: BoundFacet, d: java.lang.Double): Double =
+    if (d == null) 0.0
+    else if (f.preScored) d
+    else decayed(d, f.decay, f.scale.getOrElse(1.0), f.jaccard)
+
+  /** Spark's `round(x, 6)` for a double: HALF_UP on the shortest decimal
+    * representation; NaN and infinities pass through. */
+  private[graft] def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** Phase 2 and the ranking tail over collected `lists`. `scan(uncovered,
+    * inCands)` builds the (f, id, d) rows of the `uncovered` facets, with
+    * `inCands(idColumn)` restricting a scan to the candidate ids. */
+  private def aggregate(spark: SparkSession, facets0: Seq[BoundFacet], lists: Seq[TopList],
+      k: Int, m: Int, detailed: Boolean)(
+      scan: (Seq[Int], Column => Column) => DataFrame): DataFrame = {
+    require(facets0.nonEmpty)
+    val nCombos = facets0.head.weightPerCombo.size
+    require(facets0.forall(_.weightPerCombo.size == nCombos))
+    facets0.foreach(f => f.weightPerCombo.foreach(w =>
+      require(w > 0 && w <= 1,
+        s"weight $w out of (0,1] for facet ${f.name}"))) // reference: weights/Validator.java:14-22 (1.0 admitted — the reference's own golden query uses it)
+    val facets = facets0.zip(lists).map { case (f, l) =>
+      if (f.preScored || f.scale.isDefined) f else f.copy(scale = Some(kthScale(l, k, 1)))
     }
-    val cands = topMs.map(_.select(col("id"))).reduce(_ union _).distinct()
-    // (count, max d, min d) of every cached list, in one tagged job that
-    // runs at most once, before phase 2: it decides which facets phase 2
-    // scores from their list and, in detailed mode, bounds the unseen
-    // entities (sMth below)
-    lazy val stats = listStats(topMs)
+    val idField = facets.head.dist.schema("id")
+    val toKey = CatalystTypeConverters.createToCatalystConverter(idField.dataType)
+    val order = TypeUtils.getInterpretedOrdering(idField.dataType)
+    // candidate id (Spark's internal form, compared as Spark groups it) ->
+    // slot; hash equality where Spark itself uses it (InSet's own rule)
+    val slot: java.util.Map[Any, Integer] =
+      if (TypeUtils.typeWithProperEquals(idField.dataType)) new java.util.HashMap
+      else new java.util.TreeMap(order)
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    for (l <- lists; (id, _) <- l if id != null)
+      slot.computeIfAbsent(toKey(id), _ => { ids += id; ids.size - 1 })
+    val keys = ids.map(toKey).toIndexedSeq
+    val sims = Array.fill(ids.size, facets.size)(0.0)
+    def add(i: Int, id: Any, d: java.lang.Double): Unit = if (id != null) {
+      val c = slot.get(toKey(id))
+      if (c != null) sims(c)(i) += score(facets(i), d)
+    }
+
     // A list holds every candidate's facet row when it exhausted the facet
     // (fewer than m rows) or when it is the query's only list (the
-    // candidates ARE its ids).
-    def listCovers(i: Int): Boolean =
-      facets.size == 1 || stats.get(i).forall(_._1 < m)
-
-    // Phase 2: exact score for every candidate on every facet; ids missing
-    // from a facet simply contribute no row => similarity 0 in the sum
-    // below, matching the reference's missing-value contract
-    // (RankAggregator.java:239-242). The per-facet streams are unioned and
-    // the union joins the broadcast candidate set ONCE ("random access"
-    // becomes one broadcast-semi join over the facet scans). A local facet
-    // whose cached list covers the candidates is scored from that list, so
-    // only facets their lists do not cover are scanned a second time.
-    // When every stream is a list, every row is already a candidate and
-    // the join is skipped.
-    val perFacet = facets.zipWithIndex.map { case (f, i) =>
-      // NRA facets join their bounded ranked list (their whole knowledge);
-      // full facets stream their complete decayed scores; bounded facets
-      // WITH random access complete their list by looking up the
-      // candidates it misses — the reference's in-situ look-up step
-      // (SimSearchJdbcQuery.java:216,332 for JDBC; ranking/randomaccess/
-      // NumericalValueFinder.java:25-41 for REST). A pre-scored facet's
-      // lookup returns ids already ON its similarity scale (no decay
-      // applies); a distance facet's lookup rows decay with its scale.
-      // The missing-id collect is bounded by the candidate union
-      // (<= m * |facets|), the same bound every other calibration read
-      // carries.
-      def missingIds: Seq[Any] = cands
-        .join(topMs(i).select(col("id")), Seq("id"), "left_anti")
-        .collect().map(_.get(0)).toSeq
-      // Guard on the fetched rows: a source that returns ids already in the
-      // ranked list — or the same id twice WITHIN one fetch (only
-      // misbehaving remotes do either, but the cost of one is a silently
-      // corrupted score) — would double-count in the conditional-sum pivot
-      // below, which relies on AT MOST ONE row per (id, facet). The
-      // internal dropDuplicates plus the anti-join re-establish the
-      // invariant at <= m x m cost; which of two CONFLICTING values a
-      // broken remote sent survives is unspecified (there is no right
-      // answer to pick).
-      def dedupFetched(fetched: DataFrame): DataFrame =
-        fetched.dropDuplicates("id")
-          .join(topMs(i).select(col("id")), Seq("id"), "left_anti")
-      val stream =
-        if (f.preScored) {
-          val list = topMs(i).select(col("id"), col("d").as("s"))
-          f.lookup match {
-            case Some(fetch) =>
-              val missing = missingIds
-              if (missing.isEmpty) list
-              else list.union(dedupFetched(fetch(missing).toDF("id", "s")))
-            case None => list
-          }
+    // candidates ARE its ids). Facets with random access (bounded lists)
+    // look up the candidates their list misses instead of being scanned —
+    // the reference's in-situ look-up step (SimSearchJdbcQuery.java:216,332
+    // for JDBC; ranking/randomaccess/NumericalValueFinder.java:25-41 for
+    // REST); a pre-scored list without it is the facet's whole knowledge.
+    val uncovered = facets.indices.filter(i => facets(i).lookup.isEmpty &&
+      !facets(i).preScored && facets.size > 1 && lists(i).size >= m)
+    val missing = facets.indices.flatMap { i =>
+      facets(i).lookup.map { _ =>
+        val listed = lists(i).map(r => toKey(r._1)).toSet
+        i -> ids.filterNot(id => listed(toKey(id))).toSeq
+      }
+    }.filter(_._2.nonEmpty)
+    facets.indices.filterNot(uncovered.contains)
+      .foreach(i => lists(i).foreach { case (id, d) => add(i, id, d) })
+    val inCands: Column => Column = c =>
+      GraftColumnBridge.column(InSet(GraftColumnBridge.expression(c), keys.toSet))
+    val phase2 = (if (uncovered.isEmpty || ids.isEmpty) Nil else Seq(scan(uncovered, inCands))) ++
+      missing.map { case (i, ms) =>
+        facets(i).lookup.get(ms).toDF("id", "d").select(lit(i).as("f"), col("id"), col("d"))
+      }
+    if (phase2.nonEmpty) {
+      // a looked-up row counts once per id and never for an id already
+      // listed: a remote that returns either (only misbehaving ones do)
+      // would otherwise double-count a facet; which of two conflicting
+      // values such a remote sent survives is unspecified
+      val seen = missing.map { case (i, _) =>
+        i -> scala.collection.mutable.Set.from(lists(i).map(r => toKey(r._1)))
+      }.toMap
+      phase2.map(_.select(col("f"), col("id").cast(idField.dataType), col("d").cast("double")))
+        .reduce(_ union _).collect().foreach { r =>
+          val (i, id) = (r.getInt(0), r.get(1))
+          if (seen.get(i).forall(_.add(toKey(id))))
+            add(i, id, r.get(2).asInstanceOf[java.lang.Double])
         }
-        else f.lookup match {
-          case Some(fetch) =>
-            val missing = missingIds
-            val dist = topMs(i).select(col("id"), col("d"))
-            val completed =
-              if (missing.isEmpty) dist
-              else dist.union(dedupFetched(fetch(missing).toDF("id", "d")))
-            FacetSearch.decayedWithScale(f.copy(dist = completed), scales(i))
-          case None if listCovers(i) =>
-            FacetSearch.decayedWithScale(f.copy(dist = topMs(i)), scales(i))
-          case None => FacetSearch.decayedWithScale(f, scales(i))
-        }
-      stream.select(col("id"), lit(i).as("f"), col("s"))
     }
-    val listsOnly = facets.indices.forall(i =>
-      facets(i).lookup.isEmpty && (facets(i).preScored || listCovers(i)))
-    val union = perFacet.reduce(_ union _)
-    val all =
-      if (listsOnly) union
-      else union.join(broadcast(cands), Seq("id"))
 
-    // Pivot to one row per candidate with one similarity column per facet.
-    // Each conditional sum collapses at most ONE row, so it is exact and
-    // order-independent; the weighted score is then a fixed-order expression
-    // (w_0*s_0 + w_1*s_1 + ...) / (w_0 + w_1 + ...) — bit-deterministic and
-    // reproducible by a left-associative SQL expression in any engine.
-    val pivotCols: Seq[Column] = facets.indices.map(i =>
-      coalesce(sum(when(col("f") === i, col("s"))), lit(0.0)).as(s"s_$i"))
-    val pivoted = all.groupBy(col("id")).agg(pivotCols.head, pivotCols.tail: _*)
-
-    // Per-combo global top-k (driver loop over <= nCombos small sorts;
-    // each is TakeOrderedAndProject over candidate rows only). Missing
-    // facet => s_i = 0, the reference's missing-value contract (A1).
     // TA-style exactness bound (detailed mode only): an entity OUTSIDE the
     // candidate union scores at most tau = sum_f w_f * s_f(M-th) / sum w —
     // the decayed similarity of each facet's M-th candidate bounds every
     // unseen entity's facet similarity (decay is monotone in distance). A
     // result with score >= tau is provably in the true top-k; mirrors the
     // reference's per-result `exact` flag (RankedResult.setExact).
-    // Full facets bound unseen entities via the decayed M-th DISTANCE
-    // (max d), pre-scored facets directly via the M-th (minimum) listed
-    // SIMILARITY.
-    lazy val sMth: Seq[Double] =
-      facets.zip(scales).zipWithIndex.map { case ((f, sc), i) =>
-        val (n, maxd, mind) = stats.getOrElse(i, (0L, 0.0, 0.0))
-        if (f.preScored) {
-          // the remote's fetch bound is ITS OWN m (not this aggregation's),
-          // so a short list proves nothing about exhaustion — always bound
-          // unseen entities by the minimum listed similarity; an empty
-          // list means the remote found no matches at all
-          if (n == 0) 0.0 else mind
-        }
-        else if (n < m) 0.0 // candidate list exhausted the facet: no unseen entities
-        else if (f.jaccard && maxd == 1.0) 0.0
-        else math.exp(-f.decay * maxd / sc)
+    val sMth = facets.zip(lists).map { case (f, l) =>
+      val ds = l.flatMap(r => Option(r._2)).map(_.doubleValue)
+      if (f.preScored) {
+        // the remote's fetch bound is ITS OWN m (not this aggregation's),
+        // so a short list proves nothing about exhaustion — always bound
+        // unseen entities by the minimum listed similarity; an empty list
+        // means the remote found no matches at all
+        if (l.isEmpty) 0.0 else ds.minOption(Ordering.Double.TotalOrdering).getOrElse(0.0)
       }
+      else if (l.size < m) 0.0 // candidate list exhausted the facet: no unseen entities
+      else score(f, ds.maxOption(Ordering.Double.TotalOrdering).getOrElse(0.0): Double)
+    }
+    rankTail(spark, idField, ids.toIndexedSeq, keys, order, sims,
+      facets.map(_.weightPerCombo), k, detailed, sMth, facets.map(_.name))
+  }
 
-    finish(pivoted, facets.map(f => (f.name, f.weightPerCombo)), k, nCombos,
-      detailed, if (detailed) Some(sMth) else None)
+  /** The one ranking tail: per weight combination, the left-associative
+    * weighted mean (w_0*s_0 + w_1*s_1 + ...) / sum w, rounded as Spark's
+    * `round(x, 6)`, ranked by (score desc, id asc) in Spark's ordering of
+    * the id type, top `k` kept. Returns a local DataFrame: (combo, id,
+    * score, rank), or in detailed mode (id, combo, score, rank, exact,
+    * s_<facet>...), where a facet name queried twice gets `s_<name>_<i>`
+    * columns so no facet's score is dropped by a serializer. */
+  private def rankTail(spark: SparkSession, idField: StructField, ids: IndexedSeq[Any],
+      keys: IndexedSeq[Any], order: Ordering[Any], sims: Array[Array[Double]],
+      weights: Seq[Seq[Double]], k: Int, detailed: Boolean, sMth: Seq[Double],
+      names: Seq[String]): DataFrame = {
+    val rows = weights.head.indices.flatMap { c =>
+      val ws = weights.map(_(c))
+      val wsum = ws.sum
+      val scores = sims.map(s => round6(ws.indices.map(i => ws(i) * s(i)).reduce(_ + _) / wsum))
+      val tau = ws.zip(sMth).map { case (wf, s) => wf * s }.sum / wsum
+      ids.indices.sortWith { (a, b) =>
+        val bySc = SQLOrderingUtil.compareDoubles(scores(b), scores(a))
+        if (bySc != 0) bySc < 0 else order.lt(keys(a), keys(b))
+      }.take(k).zipWithIndex.map { case (j, r) =>
+        if (!detailed) Row(c.toLong, ids(j), scores(j), r + 1L)
+        else Row.fromSeq(Seq(ids(j), c.toLong, scores(j), r + 1L,
+          SQLOrderingUtil.compareDoubles(scores(j), tau) >= 0) ++ sims(j))
+      }
+    }
+    val base = Seq(StructField("combo", LongType, nullable = false), idField,
+      StructField("score", DoubleType), StructField("rank", LongType, nullable = false))
+    val schema =
+      if (!detailed) StructType(base)
+      else StructType(Seq(idField, base(0), base(2), base(3), StructField("exact", BooleanType)) ++
+        names.zipWithIndex.map { case (nm, i) =>
+          StructField(if (names.count(_ == nm) > 1) s"s_${nm}_$i" else s"s_$nm",
+            DoubleType, nullable = false)
+        })
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** The k-th smallest distance d_k of each indexed `(id, d)` stream, in
@@ -311,70 +309,4 @@ object RankAggregate {
     }.reduce(_ union _)
       .groupBy(col("f")).agg(max(col("d")).as("dk"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-
-  /** (row count, max d, min d) of each candidate list, keyed by position,
-    * in ONE tagged Spark job. A list with no rows is absent. */
-  private def listStats(lists: Seq[DataFrame]): Map[Int, (Long, Double, Double)] =
-    lists.zipWithIndex.map { case (tm, i) =>
-      tm.select(lit(i).as("f"), col("d"))
-    }.reduce(_ union _)
-      .groupBy(col("f"))
-      .agg(count(lit(1)).as("n"), max(col("d")).as("maxd"), min(col("d")).as("mind"))
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
-
-  /** Shared ranking tail: pivoted (id, s_0..s_n) -> per-combo global top-k.
-    * All combos in ONE pass: per-combo scores become an exploded
-    * (combo, score) column pair, ranked by a single window partitioned by
-    * combo. A per-combo union of branches would re-execute the whole
-    * pivot subtree once per combination (Spark unions share no common
-    * subexpressions) and sort each branch on a single partition.
-    *
-    * Detailed mode carries the per-facet `s_<i>` columns through the
-    * explode and the window, so the ranked rows keep their own facet
-    * scores: re-joining them to `pivoted` would evaluate the pivot subtree
-    * (every facet's exact-scoring scan and the aggregation) a second time. */
-  private def finish(pivoted: DataFrame, facetMeta: Seq[(String, Seq[Double])],
-      k: Int, nCombos: Int, detailed: Boolean,
-      sMthOpt: Option[Seq[Double]]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scoreCols: Seq[Column] = (0 until nCombos).map { c =>
-      val ws = facetMeta.map(_._2(c))
-      val num = facetMeta.zipWithIndex
-        .map { case ((_, wpc), i) => lit(wpc(c)) * col(s"s_$i") }
-        .reduce(_ + _) // left-assoc
-      round(num / lit(ws.sum), 6)
-    }
-    val w = Window.partitionBy(col("combo")).orderBy(col("score").desc, col("id"))
-    val carried: Seq[Column] =
-      if (detailed) facetMeta.indices.map(i => col(s"s_$i")) else Seq.empty
-    val base = pivoted
-      .select(col("id") +: carried :+
-        posexplode(array(scoreCols: _*)).as(Seq("combo", "score")): _*)
-      .select(Seq(col("combo").cast("long").as("combo"), col("id"), col("score")) ++
-        carried: _*)
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .withColumn("rank", col("rank").cast("long"))
-    if (!detailed) base
-    else {
-      val sMth = sMthOpt.get
-      val taus = (0 until nCombos).map { c =>
-        val ws = facetMeta.map(_._2(c))
-        ws.zip(sMth).map { case (wf, s) => wf * s }.sum / ws.sum
-      }
-      val exact = col("score") >=
-        element_at(array(taus.map(lit): _*), col("combo").cast("int") + 1)
-      // disambiguate duplicate facet names (the same column may be queried
-      // twice with different values/weights): a repeated name would yield
-      // two identically-named s_ columns and serializers would silently
-      // drop one facet's score
-      val names = facetMeta.map(_._1)
-      val perFacetCols = facetMeta.zipWithIndex.map { case ((nm, _), i) =>
-        val n = if (names.count(_ == nm) > 1) s"s_${nm}_$i" else s"s_$nm"
-        col(s"s_$i").as(n)
-      }
-      base.select(Seq(col("id"), col("combo"), col("score"), col("rank"),
-        exact.as("exact")) ++ perFacetCols: _*)
-    }
-  }
 }

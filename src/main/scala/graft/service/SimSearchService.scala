@@ -191,11 +191,12 @@ final class SimSearchService(spark: SparkSession, port: Int,
   private def isAdmin(x: HttpExchange): Boolean =
     adminKey.exists(_ == Option(x.getRequestHeaders.getFirst("admin_api_key")).getOrElse(""))
 
-  /** POST /search: body = search request (search.json shape). The request
-    * runs in a [[graft.util.CacheScope]]: the engine's per-request caches
-    * (top-M candidate lists, bounded in-situ lists) are released once the
-    * answer is rendered, before it is sent, so only the catalog's resident
-    * facets stay. */
+  /** POST /search: body = search request (search.json shape). The engine
+    * collects its top-M candidate lists and caches nothing per request; the
+    * request still runs in a [[graft.util.CacheScope]], which releases
+    * anything cached while answering (e.g. by an extra-column projection)
+    * once the answer is rendered, so only the catalog's resident facets
+    * stay. */
   private def handleSearch(x: HttpExchange): Unit = {
     val cat = catalogs.get(masterOf(apiKey(x)))
     if (cat == null) { respond(x, 401, """{"error":"unknown api_key"}"""); return }

@@ -128,6 +128,51 @@ class IndexRecoverySpec extends SparkTestBase {
     }
   }
 
+  test("compactFingerprintIndex keeps the bloom of an index stranded at __old") {
+    val path = tmpDir("strand-bloom") + "/fp"
+    Dedup.writeFingerprintIndex(Seq((1L, "a b c"), (2L, "d e f")).toDF("id", "text"),
+      "id", col("text"), path)
+    Dedup.writeFingerprintBloom(spark, path)
+    mv(path, path + "__old") // crash window: the index is stranded at __old
+    Dedup.compactFingerprintIndex(spark, path)
+    assert(Dedup.readFingerprintBloom(spark, path).isDefined,
+      "the compaction folded the restored index without its bloom")
+    assert(!new java.io.File(path + "__old").exists)
+  }
+
+  test("compactHammingIndex's maxDf cap leaves batches newer than through as " +
+    "they were") {
+    val path = tmpDir("hamming-cap") + "/h"
+    // every signature is carried by four ids in each batch: over the whole
+    // table far more than the cap, within the folded batches as well; only
+    // id 999's signature is its own
+    def sigs(batch: Long) = (0L until 8L).map(i =>
+      (batch * 100 + i, (i % 2 + 1) * 0x9E3779B97F4A7C15L)).toDF("id", "sig")
+    Dedup.writeHammingIndex(sigs(9).union(Seq((999L, 0x0123456789ABCDEFL)).toDF("id", "sig")),
+      "id", "sig", path)
+    (0L to 3L).foreach(b => Dedup.writeHammingIndex(sigs(b), "id", "sig", path, batchId = Some(b)))
+    def idsPerBatch = spark.read.parquet(s"$path/bands").select(IndexIO.BatchCol, "id").collect()
+      .groupBy(_.get(0).toString.toLong).map { case (b, rs) => b -> rs.map(_.getLong(1)).toSet }
+    val before = idsPerBatch
+    Dedup.compactHammingIndex(spark, path, through = Some(1L), maxDf = Some(3L))
+    val after = idsPerBatch
+    assert(after.get(2L) == before.get(2L) && after.get(3L) == before.get(3L),
+      s"before $before, after $after")
+    assert(after.get(-1L).contains(Set(999L)), s"the capped fold: $after")
+  }
+
+  test("a maxDf cap that drops every row leaves a Hamming index that reads " +
+    "and compacts as empty") {
+    val path = tmpDir("hamming-empty") + "/h"
+    val sigs = (0L until 6L).map(i => (i, 0x9E3779B97F4A7C15L)).toDF("id", "sig")
+    Dedup.writeHammingIndex(sigs, "id", "sig", path)
+    Dedup.compactHammingIndex(spark, path, maxDf = Some(2L))
+    assert(IndexIO.hasData(spark, s"$path/bands"))
+    assert(spark.read.parquet(s"$path/bands").count() == 0)
+    Dedup.compactHammingIndex(spark, path, maxDf = Some(2L)) // threw UNABLE_TO_INFER_SCHEMA
+    assert(Dedup.incrementalHammingPairs(sigs, "id", "sig", path).count() == 0)
+  }
+
   test("the index commit protocol has one copy under src/main: the replay " +
     "guard and the swap in IndexIO, one ingestion-loop driver in StreamOps") {
     import scala.jdk.CollectionConverters._

@@ -203,8 +203,8 @@ class JdbcMountSpec extends SparkTestBase {
     assert(ids.forall(_ * 10.0 > 400), s"ids $ids violate the pushed filter")
     // plan lock: the in-situ search scans ONLY the pushed bounded statement
     // (every JDBCRelation in the plan embeds the FETCH FIRST limit)
-    val plan = SimSearchEngine.search(spark, inSitu, 5,
-      Seq(SearchSpec("PRICE", 503.0, Seq(1.0)))).queryExecution.executedPlan.toString
+    val plan = SparkActions.record(spark)(SimSearchEngine.search(spark, inSitu, 5,
+      Seq(SearchSpec("PRICE", 503.0, Seq(1.0)))).collect()).plans.mkString("\n")
     assert(plan.contains("JDBCRelation((SELECT"), plan.take(500))
     assert(plan.contains("FETCH FIRST"), plan.take(500))
     assert(!plan.contains("JDBCRelation(items)"),

@@ -170,39 +170,39 @@ class PivotMountSpec extends SparkTestBase {
   }
 
   test("pivot search plan: TakeOrdered candidates broadcast into the facet scan") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{CartesianProductExec, SortMergeJoinExec}
     val cat = mountPivot(fixture)
-    val res = SimSearchEngine.search(spark, cat, 5,
-      Seq(SearchSpec("position", Seq(-74.94, 42.15), Seq(1.0))))
-    val executed = res.queryExecution.executedPlan
-    val plan = executed.toString
+    val rec = SparkActions.record(spark)(SimSearchEngine.search(spark, cat, 5,
+      Seq(SearchSpec("position", Seq(-74.94, 42.15), Seq(1.0)))).collect())
+    assert(rec.result.length == 5)
     // candidate generation is a shuffle-free TakeOrdered heap over the
     // pruned scan (never a shuffle or cartesian of the corpus). A query
-    // with one facet is scored from that facet's cached top-M list, which
-    // holds every candidate (RankAggregate's listCovers): no candidate set
-    // is broadcast, and the facet's resident relation is read by the
-    // top-M scan only, never a second time by the scoring plan — the
-    // shape PlanSpec locks for the served single-facet search
-    assert(plan.contains("TakeOrderedAndProject"),
-      "metric top-M must be a TakeOrdered heap:\n" + plan.take(600))
-    val broadcasts = (executed match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }).collect { case b: BroadcastExchangeExec => b }.size
-    assert(broadcasts == 0, "a single facet's list needs no candidate broadcast:\n" +
-      executed.treeString.take(2000))
+    // with one facet is scored from that facet's top-M list, which holds
+    // every candidate (RankAggregate's coverage rule): the search is the
+    // one phase-1 job, no candidate set is broadcast, and the facet's
+    // resident relation is read by the top-M scan only — the shape
+    // PlanSpec locks for the served single-facet search
+    val tree = rec.plans.map(_.treeString).mkString("\n").take(2000)
+    assert(rec.jobs == 1 && rec.actions.size == 1, s"${rec.jobs} jobs:\n$tree")
+    val nodes = SparkActions.nodes(rec.actions.head)
+    assert(nodes.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+      "metric top-M must be a TakeOrdered heap:\n" + tree)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      "a single facet's list needs no candidate broadcast:\n" + tree)
     val resident = cat.get("position").df.select(col("*")).queryExecution.withCachedData
       .collect { case r: InMemoryRelation => r.cacheBuilder }.head
-    val residentReads = res.queryExecution.optimizedPlan.collect {
-      case r: InMemoryRelation if r.cacheBuilder eq resident => r
-    }.size
-    assert(residentReads == 0, "the scoring plan must read the cached top-M list, " +
-      "not the facet:\n" + res.queryExecution.optimizedPlan.treeString.take(2000))
-    assert(!plan.contains("SortMergeJoin"), "the corpus must never key-shuffle")
-    assert(!plan.contains("CartesianProduct"))
+    val residentReads = nodes.count {
+      case s: InMemoryTableScanExec => s.relation.cacheBuilder eq resident
+      case _ => false
+    }
+    assert(residentReads == 1, "only the top-M scan reads the facet:\n" + tree)
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), "the corpus must never key-shuffle")
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]))
   }
+
 
   test("timestamp pivot coordinate parses through the datetime chain") {
     val cat = mountPivot(fixture)

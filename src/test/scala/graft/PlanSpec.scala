@@ -6,10 +6,10 @@ import graft.functions.TextKernels
 import graft.operators.Dedup
 
 /** Physical-plan assertions that lock in the scale design (SURVEY.md §7.2,
-  * COVERAGE.md scale notes): top-k must be TakeOrderedAndProject, the
-  * rank-aggregation join must broadcast the candidate set, scans must prune
-  * columns, and no candidate-generation path may degenerate into a
-  * cartesian product. */
+  * COVERAGE.md scale notes): top-k must be TakeOrderedAndProject, rank
+  * aggregation runs at most two jobs and never key-shuffles a facet, scans
+  * must prune columns, and no candidate-generation path may degenerate into
+  * a cartesian product. */
 class PlanSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -26,78 +26,123 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("Exchange"), "no shuffle for a singleton top-k")
   }
 
-  test("rank aggregation: broadcasts the candidate set, never shuffles a facet table") {
-    val plan = planOf(Queries.all("q_multifacet")(spark, dir))
-    assert(plan.contains("BroadcastHashJoin"))
-    assert(plan.contains("TakeOrderedAndProject"))
-    assert(!plan.contains("CartesianProduct"))
-    assert(!plan.contains("SortMergeJoin"),
-      "facet scans must stream against the broadcast candidates")
+  // Rank aggregation merges on the driver: phase 1 collects every facet's
+  // top-M list in ONE job, phase 2 (only when some list does not hold every
+  // candidate) scans those facets once more, and the scoring, weighting and
+  // ranking run in Scala. These locks count the jobs a search submits and
+  // read the plans it executes.
+  private def execNodes(rec: SparkActions.Record[_]) = rec.plans.flatMap(SparkActions.nodes)
+
+  private def assertNoKeyShuffle(rec: SparkActions.Record[_]): Unit = {
+    import org.apache.spark.sql.execution.joins.{CartesianProductExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val bad = execNodes(rec).filter {
+      case _: SortMergeJoinExec | _: CartesianProductExec => true
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
+      case _ => false
+    }
+    assert(bad.isEmpty, rec.plans.map(_.treeString).mkString("\n").take(3000))
   }
 
-  test("detailed rank aggregation: the per-facet scores ride through the " +
-    "ranking window — no join above it, ONE pivot aggregation") {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Window}
+  private def hasTopM(plan: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    SparkActions.nodes(plan).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.TakeOrderedAndProjectExec])
+
+  test("rank aggregation: at most 2 actions, no shuffle of a facet table") {
+    // q_multifacet: three facets over one cached projection of the orders.
+    // At sf0.001 (1,500 orders, m = 10,000) every list exhausts its facet,
+    // so the phase-1 collect of the three lists is the only Spark action;
+    // at sf0.01 (15,000 orders) the fused InSet scan follows it. The
+    // projection is cached but not yet materialized, so adaptive execution
+    // fills the cache in a job of its own per phase-1 scan of it. Reading
+    // three cached top-M lists cost one more job each before: 10 jobs at
+    // sf0.01, now at least |facets| - 1 = 2 fewer.
+    for ((sf, actions) <- Seq(dir -> 1, "/root/testdata/sf0.01" -> 2)) {
+      val rec = SparkActions.record(spark)(Queries.all("q_multifacet")(spark, sf).collect())
+      assert(rec.result.length == 10)
+      assert(rec.actions.size == actions && rec.jobs <= 8, (sf, rec.jobs, rec.actions.size))
+      assert(hasTopM(rec.actions.head), rec.actions.head.treeString.take(2000))
+      assertNoKeyShuffle(rec)
+    }
+  }
+
+  test("detailed rank aggregation: no window, pivot or join in any plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
     val facets = (0 until 3).map { i =>
       graft.operators.BoundFacet(s"f$i",
         (0 until 40).map(j => (j.toLong, ((j * (i + 3)) % 17).toDouble)).toDF("id", "d"),
         Seq(0.5, 0.25))
     }
-    val plan = graft.operators.RankAggregate.topKDetailed(spark, facets, 5, 10)
-      .queryExecution.optimizedPlan
-    assert(plan.exists(_.isInstanceOf[Window]), plan.treeString.take(800))
-    val joinsAbove = plan.collect { case j: Join if j.exists(_.isInstanceOf[Window]) => j }
-    assert(joinsAbove.isEmpty, "the ranked rows must not re-join the pivot")
-    val pivots = plan.collect {
-      case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[Sum])) => a
+    val rec = SparkActions.record(spark)(
+      graft.operators.RankAggregate.topKDetailed(spark, facets, 5, 10))
+    // the ranked rows, the per-facet scores and the exact flags are built
+    // on the driver: the returned frame is local and runs nothing more
+    assert(rec.result.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(rec.result.count() == 10)
+    assert(rec.jobs == 2, s"${rec.jobs} jobs")
+    val offending = execNodes(rec).filter {
+      case _: WindowExec | _: BaseAggregateExec | _: BaseJoinExec => true
+      case _ => false
     }
-    assert(pivots.size == 1, s"${pivots.size} pivot aggregations: ${plan.treeString.take(800)}")
+    assert(offending.isEmpty, rec.plans.map(_.treeString).mkString("\n").take(3000))
   }
 
-  test("served rank aggregation: ONE candidate broadcast for four facets, " +
-    "and a facet whose cached list covers the candidates is not scanned again") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+  // k = 1 gives m = 1000 per list: facets a-c (1500 rows) are not covered by
+  // their lists, d (400 rows) is exhausted by its list
+  private lazy val servedFacets = {
     import graft.api.{AttributeSpec, Facet, SimOp}
+    Seq("a" -> 1500, "b" -> 1500, "c" -> 1500, "d" -> 400).zipWithIndex.map {
+      case ((name, n), j) =>
+        Facet(AttributeSpec(name, SimOp.Numerical),
+          (1 to n).map(i => (i.toLong, ((i * (j + 3)) % 101).toDouble)).toDF("id", "value"))
+    }
+  }
+
+  test("served rank aggregation: at most 2 jobs, covered lists 1 job") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import graft.engine.SimSearchEngine
     import graft.engine.SimSearchEngine.{Catalog, SearchSpec}
-    // k = 1 gives m = 1000 per list: facets a-c (1500 rows) are not covered
-    // by their lists, d (400 rows) is exhausted by its list
-    val rows = Seq("a" -> 1500, "b" -> 1500, "c" -> 1500, "d" -> 400)
-    val facets = rows.zipWithIndex.map { case ((name, n), j) =>
-      Facet(AttributeSpec(name, SimOp.Numerical),
-        (1 to n).map(i => (i.toLong, ((i * (j + 3)) % 101).toDouble)).toDF("id", "value"))
-    }
-    def broadcasts(df: org.apache.spark.sql.DataFrame): Int =
-      (df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }).collect { case b: BroadcastExchangeExec => b }.size
-    // reads of a facet's resident (mount-time) cache entry; the top-M
-    // lists are cache entries of their own
-    def facetScans(df: org.apache.spark.sql.DataFrame, f: Facet): Int = {
-      val resident = f.df.select(col("*")).queryExecution.withCachedData
-        .collect { case r: InMemoryRelation => r.cacheBuilder }.head
-      df.queryExecution.optimizedPlan.collect {
-        case r: InMemoryRelation if r.cacheBuilder eq resident => r
-      }.size
-    }
-    val catalog = new Catalog(facets)
-    try graft.util.CacheScope.withScope {
-      val res = SimSearchEngine.search(spark, catalog, 1,
-        rows.map { case (name, _) => SearchSpec(name, 50.0, Seq(0.5)) }, detailed = true)
-      assert(broadcasts(res) == 1, res.queryExecution.executedPlan.treeString.take(2000))
-      assert(facets.map(facetScans(res, _)) == Seq(1, 1, 1, 0),
-        res.queryExecution.optimizedPlan.treeString.take(2000))
-      assert(res.count() == 1)
-      // a single facet's list holds every candidate: no facet is scanned
-      // again, and no candidate set is broadcast at all
-      val single = SimSearchEngine.search(spark, catalog, 1,
-        Seq(SearchSpec("a", 50.0, Seq(1.0))), detailed = true)
-      assert(broadcasts(single) == 0 && facetScans(single, facets.head) == 0,
-        single.queryExecution.executedPlan.treeString.take(2000))
+    val catalog = new Catalog(servedFacets)
+    try {
+      // reads of a facet's resident (mount-time) cache entry
+      def residentReads(plan: org.apache.spark.sql.execution.SparkPlan, f: graft.api.Facet): Int = {
+        val resident = f.df.select(col("*")).queryExecution.withCachedData
+          .collect { case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+            r.cacheBuilder }.head
+        SparkActions.nodes(plan).count {
+          case s: InMemoryTableScanExec => s.relation.cacheBuilder eq resident
+          case _ => false
+        }
+      }
+      val persisted = spark.sparkContext.getPersistentRDDs.size
+      def search(k: Int, names: Seq[String]) = SparkActions.record(spark)(
+        SimSearchEngine.search(spark, catalog, k,
+          names.map(SearchSpec(_, 50.0, Seq(0.5))), detailed = true).collect())
+      val rec = search(1, Seq("a", "b", "c", "d"))
+      assert(rec.result.length == 1)
+      val Seq(phase1, phase2) = rec.actions
+      assert(rec.jobs <= 2, s"${rec.jobs} jobs")
+      assert(hasTopM(phase1), phase1.treeString.take(2000))
+      assert(servedFacets.map(residentReads(phase1, _)) == Seq(1, 1, 1, 1))
+      // phase 2 scans the three facets their lists do not cover, never d
+      assert(servedFacets.map(residentReads(phase2, _)) == Seq(1, 1, 1, 0),
+        phase2.treeString.take(2000))
+      assertNoKeyShuffle(rec)
+      // a single facet's list holds every candidate, and so do lists that
+      // exhaust their facets (k = 2: m = 2000): phase 1 is the whole search
+      for ((k, names) <- Seq(1 -> Seq("a"), 2 -> Seq("a", "b", "c", "d"))) {
+        val covered = search(k, names)
+        assert(covered.result.length == k)
+        assert(covered.jobs == 1 && covered.actions.size == 1, (k, names, covered.jobs))
+        assert(hasTopM(covered.actions.head))
+        assertNoKeyShuffle(covered)
+      }
+      // the top-M lists are collected, never cached
+      assert(spark.sparkContext.getPersistentRDDs.size == persisted)
     } finally catalog.close()
   }
 
@@ -395,21 +440,34 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("Window"), "no row_number window over the full event stream")
   }
 
-  test("weight estimation (R7): TakeOrdered tail, no unpartitioned window") {
-    // the engine's estimateWeight must fetch its 2 interpolation rows via a
-    // shuffle-free inverted TakeOrdered heap — a global Window.orderBy would
-    // move 100% of the facet into ONE task to read 2 rows
-    val c = spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey").as("id"),
-        exp(lit(-0.05) * abs(col("c_acctbal") - lit(5000.0))).as("s"))
-    val n = c.count()
-    val plan = planOf(graft.engine.SimSearchEngine.weightTail(c, n, n - 11))
-    assert(plan.contains("TakeOrderedAndProject"),
-      "the tail fetch must be a TakeOrdered heap:\n" + plan.take(800))
-    assert(!plan.contains("Window"), "no window over the full facet")
-    assert(!plan.contains("Exchange SinglePartition") &&
-      !plan.contains("rangepartitioning"),
-      "no global sort / single-partition stage:\n" + plan.take(800))
+  test("weight estimation (R7): no job, window or sort of its own") {
+    // the percentile interpolation reads the facet's collected top-M list:
+    // a search with an estimated weight runs exactly the jobs of the same
+    // search with explicit weights, and never a window or global sort
+    // over the facet
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.engine.SimSearchEngine
+    import graft.engine.SimSearchEngine.{Catalog, SearchSpec}
+    val catalog = new Catalog(servedFacets)
+    try {
+      for ((k, names) <- Seq(10 -> Seq("a"), 1 -> Seq("a", "b", "c", "d"))) {
+        def search(ws: Seq[Double]) = SparkActions.record(spark)(
+          SimSearchEngine.search(spark, catalog, k,
+            names.map(SearchSpec(_, 50.0, Seq(0.5))).updated(0,
+              SearchSpec(names.head, 50.0, ws))).collect())
+        val estimated = search(Seq.empty)
+        val explicit = search(Seq(0.5))
+        assert(estimated.result.length == k)
+        assert(estimated.jobs == explicit.jobs && estimated.jobs <= 2,
+          (names, estimated.jobs, explicit.jobs))
+        val sorts = execNodes(estimated).filter {
+          case _: WindowExec | _: SortExec => true
+          case _ => false
+        }
+        assert(sorts.isEmpty, estimated.plans.map(_.treeString).mkString("\n").take(3000))
+      }
+    } finally catalog.close()
   }
 
   test("tf-idf: corpus size joins as a broadcast, term/doc shuffles are hash-keyed") {
