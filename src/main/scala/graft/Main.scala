@@ -66,7 +66,7 @@ object Main {
             try graft.util.CacheScope.withScope {
               val req = RequestParser.parseSearchRequest(path)
               val res = SimSearchEngine.search(spark, catalog, req.k, req.specs,
-                detailed = true, algorithm = graft.api.Algorithm.parse(req.algorithm))
+                detailed = true)
               // the prefixURL id formatting applies AFTER the extras join —
               // prefixed ids would no longer match the facet frames; ONE
               // collected result serves the JSON response, the A6 table, and

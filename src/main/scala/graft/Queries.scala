@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{SimKernels, TextKernels}
-import graft.operators.{AnnSearch, BoundFacet, Dedup, FacetSearch, RankAggregate}
+import graft.operators.{AnnSearch, BoundFacet, Dedup, RankAggregate}
 
 /** The declared query inventory: one entry per implemented operator from
   * SURVEY.md §2, each with a DuckDB-oracle SQL twin (same column names, same
@@ -214,34 +214,21 @@ object Queries {
   private val orderQDateUs: Long = java.time.LocalDateTime
     .parse("1997-06-15T00:00:00").toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
 
-  /** The three order facets over ONE cached codegen'd distance projection.
-    * Returned both as the shared frame + SharedFacet columns (for
-    * [[RankAggregate.topKSharedScan]]) and buildable as per-facet
-    * BoundFacets below. */
-  private def orderShared(s: SparkSession, dir: String, combos: Seq[Seq[Double]])
-      : (DataFrame, Column, Seq[RankAggregate.SharedFacet]) = {
-    val o = spread(t(s, dir, "orders")).select(col("o_orderkey"),
-      SimKernels.absDist(col("o_totalprice"), lit(150000.0)).as("d0"),
-      abs(unix_micros(col("o_orderdate").cast("timestamp")) - lit(orderQDateUs))
-        .cast("double").as("d1"),
-      SimKernels.jaccardDistDistinct(SimKernels.tokenize(col("o_orderpriority"), "-"),
-        array(lit("1"), lit("URGENT"))).as("d2")).cache()
-      .pipe(graft.util.CacheScope.register(_))
-    val fs = Seq(
-      RankAggregate.SharedFacet("o_totalprice", col("d0"), combos.map(_(0))),
-      RankAggregate.SharedFacet("o_orderdate", col("d1"), combos.map(_(1))),
-      RankAggregate.SharedFacet("o_orderpriority", col("d2"), combos.map(_(2)),
-        jaccard = true))
-    (o, col("o_orderkey"), fs)
-  }
-
+  /** The three order facets, each a codegen'd distance column over the
+    * orders scan. */
   private def orderFacets(s: SparkSession, dir: String,
       combos: Seq[Seq[Double]]): Seq[BoundFacet] = {
-    val (o, id, fs) = orderShared(s, dir, combos)
-    fs.zipWithIndex.map { case (f, i) =>
-      BoundFacet(f.name, o.select(id.as("id"), col(s"d$i").as("d")),
-        f.weightPerCombo, f.decay, jaccard = f.jaccard)
-    }
+    val o = t(s, dir, "orders")
+    def facet(name: String, i: Int, d: Column, jaccard: Boolean = false) =
+      BoundFacet(name, o.select(col("o_orderkey").as("id"), d.as("d")),
+        combos.map(_(i)), jaccard = jaccard)
+    Seq(
+      facet("o_totalprice", 0, SimKernels.absDist(col("o_totalprice"), lit(150000.0))),
+      facet("o_orderdate", 1, abs(unix_micros(col("o_orderdate").cast("timestamp")) -
+        lit(orderQDateUs)).cast("double")),
+      facet("o_orderpriority", 2, SimKernels.jaccardDistDistinct(
+        SimKernels.tokenize(col("o_orderpriority"), "-"), array(lit("1"), lit("URGENT"))),
+        jaccard = true))
   }
 
   /** SQL fragments (id, d) mirroring [[orderFacets]]; element = (sql, isJaccard). */
@@ -292,25 +279,17 @@ object Queries {
   private val combos1 = Seq(Seq(0.4, 0.35, 0.25))
   private val combos2 = Seq(Seq(0.4, 0.35, 0.25), Seq(0.2, 0.3, 0.5))
 
-  private val multiFacet: (SparkSession, String) => DataFrame = (s, dir) => {
-    // fused shared-source scoring (optimization r16): the three facets are
-    // distance columns over ONE cached projection, so phase 2 is a single
-    // InSet-restricted pass instead of one scan per facet — bit-identical
-    // results (OperatorSpec asserts row-for-row vs topK)
-    val (o, oid, fs) = orderShared(s, dir, combos1)
-    RankAggregate.topKSharedScan(s, o, oid, fs, 10, 10000)
+  private val multiFacet: (SparkSession, String) => DataFrame = (s, dir) =>
+    RankAggregate.topK(s, orderFacets(s, dir, combos1), 10, 10000)
       .withColumnRenamed("id", "o_orderkey")
-  }
 
   private val multiFacetSql = rankAggSql(orderFacetSqls, combos1, 10, 10000, "o_orderkey")
 
   // R5 multi-weight: every weight combination evaluated in one pass
   // (reference: RankAggregator.java:104-129)
-  private val multiWeight: (SparkSession, String) => DataFrame = (s, dir) => {
-    val (o, oid, fs) = orderShared(s, dir, combos2)
-    RankAggregate.topKSharedScan(s, o, oid, fs, 10, 10000)
+  private val multiWeight: (SparkSession, String) => DataFrame = (s, dir) =>
+    RankAggregate.topK(s, orderFacets(s, dir, combos2), 10, 10000)
       .withColumnRenamed("id", "o_orderkey")
-  }
 
   private val multiWeightSql = rankAggSql(orderFacetSqls, combos2, 10, 10000, "o_orderkey")
 
@@ -319,26 +298,19 @@ object Queries {
   // result entities (reference: engine/processor/ResultMatrix.java:62-124)
   // ----------------------------------------------------------------------
   private val simMatrix: (SparkSession, String) => DataFrame = (s, dir) => {
-    val (o, oid, fs) = orderShared(s, dir, combos1)
     val k = 5
-    // k <= K_MAX = 50 ids: collect them once so the k x k matrix job filters
-    // the value scan directly instead of re-executing the whole rank-agg DAG
-    // as a join input (the reference's ResultMatrix also works off the
-    // already-materialized ranked list, ResultMatrix.java:62-71); fused
-    // shared-source scoring (optimization r16, see multiFacet)
-    val ids = RankAggregate.topKSharedScan(s, o, oid, fs, k, 1000 * k)
+    val fs = orderFacets(s, dir, combos1)
+    // one collect of the top-M lists ranks the entities and calibrates the
+    // matrix: its scales are the aggregation's own (each facet's plain
+    // k-th distance). k <= K_MAX = 50 ids: the ranked result is local, so
+    // the k x k matrix job filters the value scan directly instead of
+    // re-executing the rank aggregation as a join input (the reference's
+    // ResultMatrix also works off the already-materialized ranked list,
+    // ResultMatrix.java:62-71)
+    val lists = RankAggregate.collectLists(fs, 1000 * k)
+    val ids = RankAggregate.topK(s, fs, k, 1000 * k, Some(lists))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
-    // the matrix decays with the same per-facet scales the aggregation
-    // calibrated (the k-th distance of each facet), read in one tagged job
-    // from the projection the aggregation left resident. Calibrating BEFORE
-    // the aggregation would scan the not-yet-materialized cache once per
-    // facet: one more Spark job for the query.
-    val kth = RankAggregate.kthDistances(fs.zipWithIndex.map { case (f, i) =>
-      i -> o.select(oid.as("id"), f.dist.cast("double").as("d")) }, k)
-    val scales = fs.indices.map { i =>
-      val dk = kth.getOrElse(i, 0.0)
-      if (dk <= 0.0) 1.0 else dk
-    }
+    val scales = lists.map(RankAggregate.kthScale(_, k, 1))
     val vals = t(s, dir, "orders").select(col("o_orderkey").as("id"),
       col("o_totalprice").as("v0"),
       unix_micros(col("o_orderdate").cast("timestamp")).cast("double").as("v1"),
@@ -434,7 +406,8 @@ object Queries {
     val c = t(s, dir, "customer")
     val dist = c.select(col("c_custkey").as("id"),
       SimKernels.absDist(col("c_acctbal"), lit(5000.0)).as("d"))
-    val sc = FacetSearch.kthDistanceScale(dist, k)
+    val sc = RankAggregate.kthScale(
+      RankAggregate.collectLists(Seq(BoundFacet("c_acctbal", dist, Seq(1.0))), k).head, k, 1)
     val scores = dist.select(col("id"), SimKernels.decaySim(col("d"), 0.05, lit(sc)).as("s"))
     val n = scores.count()
     val p = 1.0 - 10.0 / n
@@ -1888,8 +1861,8 @@ object Queries {
   // fixture is irreproducible by design — documented divergence.
   // ----------------------------------------------------------------------
   private val pivotMultimetric: (SparkSession, String) => DataFrame = (s, dir) => {
-    // both metric distances in ONE cached projection (the orderShared
-    // pattern): phase-1 top-M and phase-2 exact scoring would otherwise
+    // both metric distances in ONE cached projection: phase-1 top-M and
+    // phase-2 exact scoring would otherwise
     // re-read + re-cast the embedding parquet once per facet per phase
     val qc = array(queryVec(s, dir).map(lit): _*)
     val base = spread(t(s, dir, "embeddings"))

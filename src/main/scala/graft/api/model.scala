@@ -74,7 +74,10 @@ case class Facet(spec: AttributeSpec, df: DataFrame,
   * ranking/{Threshold,NoRandomAccess,PartialRandomAccess}Ranking.java)
   * compute the same top-k on exact scores; our batch plan computes exact
   * scores for the full candidate union, which is an exact superset of all
-  * three (see SURVEY.md §7.2). The selector is honored for API parity.
+  * three (see SURVEY.md §7.2), so the selector selects nothing:
+  * `SimSearchEngine.search` takes it and ignores it. The request grammar
+  * still parses it (`ParsedSearch.algorithm`, SQL `ALGORITHM`). Only the
+  * benchmark harness (perfbench `SearchServe`) still passes it.
   */
 sealed trait Algorithm
 object Algorithm {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.{Algorithm, Facet, Limits, Normalizer, SimOp}
 import graft.functions.SimKernels
-import graft.operators.{BoundFacet, FacetSearch, RankAggregate}
+import graft.operators.{BoundFacet, RankAggregate}
 import graft.sources.CsvMount
 
 /** The search front-end over a mounted catalog — the rebuild of the
@@ -375,9 +375,10 @@ object SimSearchEngine {
     joined.where(expr(filter)).select(col("id"))
   }
 
-  /** Facet distance frames for `specs` (None for preScored NRA lists)
-    * plus the built in-situ facets — shared by [[search]] and the
-    * federated calibration path ([[calibrationDistances]]).
+  /** Bind `specs` to facets, in spec order, with no weights and no scale
+    * yet (both are filled in from the collected lists, [[resolve]]) —
+    * shared by [[search]], [[similarityMatrix]] and the federated
+    * calibration path ([[calibrationDistances]]).
     *
     * In-situ attributes come in two shapes (S7/S9/S10):
     *  - preScored (ES / federated REST): the remote returns a ranked
@@ -386,37 +387,30 @@ object SimSearchEngine {
     *    `ORDER BY distance LIMIT m` and returns a bounded (id, d) list;
     *    the engine calibrates scale / decays it exactly like an ingested
     *    facet. The list is read once, by the phase-1 collect. */
-  private def facetDistFrames(catalog: Catalog, m: Int, specs: Seq[SearchSpec],
-      eligible: Option[DataFrame])
-      : (Map[Int, graft.operators.BoundFacet], Seq[Option[DataFrame]]) = {
-    val inSituByIdx: Map[Int, InSituFacet] = specs.zipWithIndex
-      .flatMap { case (s, i) =>
-        catalog.getInSitu(s.column)
-          // A residual filter composed with a remotely-BOUNDED top-M list
-          // is unsound: eligible candidates ranked below M remotely never
-          // cross the wire, so semi-joining the bounded list can starve
-          // the top-k. Route such queries through the exact Spark-side
-          // twin (the eligible semi-join then lands BEFORE the top-M
-          // bound). REST facets have no twin and keep their documented
-          // NRA semantics.
-          .filterNot(is => eligible.isDefined && is.local.isDefined)
-          .map(i -> _)
-      }.toMap
-    val inSituBuilt: Map[Int, graft.operators.BoundFacet] =
-      inSituByIdx.map { case (i, is) => i -> is.build(specs(i), m) }
-    val dists: Seq[Option[DataFrame]] = specs.zipWithIndex.map { case (s, i) =>
-      inSituBuilt.get(i) match {
-        case Some(bf) if !bf.preScored =>
-          Some(eligible.map(e => bf.dist.join(e, Seq("id"), "left_semi")).getOrElse(bf.dist))
-        case Some(_) => None
+  private def bind(catalog: Catalog, m: Int, specs: Seq[SearchSpec],
+      eligible: Option[DataFrame]): Seq[BoundFacet] = {
+    def restrict(dist: DataFrame) =
+      eligible.map(e => dist.join(e, Seq("id"), "left_semi")).getOrElse(dist)
+    specs.map { s =>
+      catalog.getInSitu(s.column)
+        // A residual filter composed with a remotely-BOUNDED top-M list
+        // is unsound: eligible candidates ranked below M remotely never
+        // cross the wire, so semi-joining the bounded list can starve
+        // the top-k. Route such queries through the exact Spark-side
+        // twin (the eligible semi-join then lands BEFORE the top-M
+        // bound). REST facets have no twin and keep their documented
+        // NRA semantics.
+        .filterNot(is => eligible.isDefined && is.local.isDefined) match {
+        case Some(is) =>
+          val bf = is.build(s, m)
+          bf.copy(dist = restrict(bf.dist))
         case None =>
           val f = catalog.get(s.column)
           require(f.spec.queryable, s"attribute ${s.column} is not queryable") // P6
-          val dist0 = distStream(f, s)
-          Some(eligible.map(e => dist0.join(e, Seq("id"), "left_semi")).getOrElse(dist0))
+          BoundFacet(s.column, restrict(distStream(f, s)), Seq.empty, s.decay,
+            jaccard = f.spec.op == SimOp.Categorical || f.spec.op == SimOp.Textual)
       }
     }
-    (inSituBuilt, dists)
   }
 
   /** Per-facet local top-k candidate DISTANCES, ascending — phase 1 of the
@@ -426,40 +420,33 @@ object SimSearchEngine {
     * from each shard's local k smallest (the union's k smallest are
     * contained in the union of the per-shard k smallest), so a coordinator
     * can pin every shard to the single-instance calibration scale
-    * (k * global d_k) before scoring. preScored facets (ES / federated
-    * NRA lists) carry no distances and are omitted; a facet returns fewer
-    * than k values when its candidate set is smaller. */
-  /** Keyed by QUERY INDEX, not column: two specs may query the same
+    * (k * global d_k) before scoring. The distances are the non-null ones
+    * of each facet's collected top-k list. preScored facets (ES /
+    * federated NRA lists) carry no distances and are omitted, and so is a
+    * facet with no candidates; a facet returns fewer than k values when
+    * its candidate set is smaller.
+    *
+    * Keyed by QUERY INDEX, not column: two specs may query the same
     * column with different values (and therefore different distance
     * distributions), and a column-keyed map would collapse them — the
     * federated negotiation would then pin both facets' scales from one
     * facet's k-th distance, diverging from the single-instance scores it
     * exists to match. */
   def calibrationDistances(spark: SparkSession, catalog: Catalog, k: Int,
-      specs: Seq[SearchSpec], residualFilter: Option[String] = None)
-      : Map[Int, Seq[Double]] = {
+      specs: Seq[SearchSpec]): Map[Int, Seq[Double]] = {
     require(specs.nonEmpty, "no query conditions")
     val m = if (specs.size > 1) InflationFactor * k else k
-    val eligible = residualFilter.map(eligibleIds(catalog, _))
-    val (_, dists) = facetDistFrames(catalog, m, specs, eligible)
-    val need = specs.zipWithIndex.filter { case (_, i) => dists(i).isDefined }
+    val need = bind(catalog, m, specs, None).zipWithIndex.filterNot(_._1.preScored)
     if (need.isEmpty) Map.empty
-    else need.map { case (_, i) =>
-      FacetSearch.topM(dists(i).get, k).select(lit(i).as("f"), col("d"))
-    }.reduce(_ union _)
-      .collect().groupBy(_.getInt(0))
-      .map { case (i, rows) => i -> rows.map(_.getDouble(1)).sorted.toSeq }
+    else need.map(_._2).zip(RankAggregate.collectLists(need.map(_._1), k)).map { case (i, l) =>
+      i -> l.flatMap(r => Option(r._2)).map(_.doubleValue).sorted.toSeq
+    }.filter(_._2.nonEmpty).toMap
   }
 
-  /** Top-k multi-attribute search. Returns [[RankAggregate.topK]]'s
-    * (combo, id, score, rank), or [[RankAggregate.topKDetailed]]'s columns
-    * when `detailed`, as a local DataFrame.
-    *
-    * Every facet's top-M list is collected in ONE Spark job
-    * ([[RankAggregate.collectLists]]); the scale calibration and R7 weight
-    * estimation read the collected lists, and the aggregation scans again
-    * only the facets whose list does not hold every candidate — a request
-    * runs at most two jobs.
+  /** The bound facets with their calibrated scales and per-combination
+    * weights, the lists they were calibrated from, and the list size m:
+    * everything [[RankAggregate.topK]] takes. One Spark job, the phase-1
+    * collect ([[RankAggregate.collectLists]]).
     *
     * Scale calibration: when no explicit scale is given, the decay scale of
     * each facet is set to k * (k-th candidate distance). The reference's
@@ -470,32 +457,13 @@ object SimSearchEngine {
     * observable behavior and document the divergence from the code-as-read.
     * The degenerate all-exact-match prefix keeps the plain 1.0 guard (no
     * multiplier). */
-  def search(spark: SparkSession, catalog: Catalog, k: Int,
-      specs: Seq[SearchSpec], residualFilter: Option[String] = None,
-      detailed: Boolean = false,
-      algorithm: Algorithm = Algorithm.Threshold): DataFrame = {
-    // The algorithm selector is honored for API parity: every selector maps
-    // to the same exact candidate-union plan, which supersedes TA and the
-    // (possibly lower-bound-scored) NRA/PRA — see api.Algorithm scaladoc.
-    val _ = algorithm
+  private def resolve(catalog: Catalog, k: Int, specs: Seq[SearchSpec],
+      residualFilter: Option[String]): (Seq[BoundFacet], Seq[RankAggregate.TopList], Int) = {
     require(specs.nonEmpty, "no query conditions")
     require(specs.size == 1 || k <= KMax, s"k > $KMax for multi-attribute query") // A2
     val nCombos = math.max(1, specs.map(_.weights.size).max)
     val m = if (specs.size > 1) InflationFactor * k else k
-    val eligible = residualFilter.map(eligibleIds(catalog, _))
-    val (inSituBuilt, dists) = facetDistFrames(catalog, m, specs, eligible)
-    // weights and calibrated scales are filled in from the collected lists
-    val unresolved = specs.zipWithIndex.map { case (s, i) =>
-      inSituBuilt.get(i) match {
-        case Some(bf0) if bf0.preScored => bf0.copy(dist = eligible
-          .map(e => bf0.dist.join(e, Seq("id"), "left_semi")).getOrElse(bf0.dist))
-        case Some(bf0) => bf0.copy(dist = dists(i).get) // distance-based in-situ (S7 JDBC pushdown)
-        case None =>
-          val op = catalog.get(s.column).spec.op
-          BoundFacet(s.column, dists(i).get, Seq.empty, s.decay,
-            jaccard = op == SimOp.Categorical || op == SimOp.Textual)
-      }
-    }
+    val unresolved = bind(catalog, m, specs, residualFilter.map(eligibleIds(catalog, _)))
     val lists = RankAggregate.collectLists(unresolved, m)
     val facets = unresolved.zip(lists).zip(specs).map { case ((bf, list), s) =>
       val f = if (bf.preScored) bf
@@ -511,6 +479,27 @@ object SimSearchEngine {
         else Seq.fill(nCombos)(estimateWeight(RankAggregate.scores(f, list), k)) // R7
       f.copy(weightPerCombo = ws)
     }
+    (facets, lists, m)
+  }
+
+  /** Top-k multi-attribute search. Returns [[RankAggregate.topK]]'s
+    * (combo, id, score, rank), or [[RankAggregate.topKDetailed]]'s columns
+    * when `detailed`, as a local DataFrame.
+    *
+    * Every facet's top-M list is collected in ONE Spark job ([[resolve]]);
+    * the scale calibration and R7 weight estimation read the collected
+    * lists, and the aggregation scans again only the facets whose list
+    * does not hold every candidate — a request runs at most two jobs. Every
+    * aggregation algorithm the reference offers (threshold, no / partial
+    * random access, pivot based) computes the same top-k on exact scores,
+    * and this exact candidate-union plan supersedes them all, so
+    * `algorithm` is ignored ([[graft.api.Algorithm]]). */
+  def search(spark: SparkSession, catalog: Catalog, k: Int,
+      specs: Seq[SearchSpec], residualFilter: Option[String] = None,
+      detailed: Boolean = false,
+      algorithm: Algorithm = Algorithm.Threshold): DataFrame = {
+    val _ = algorithm
+    val (facets, lists, m) = resolve(catalog, k, specs, residualFilter)
     if (detailed) RankAggregate.topKDetailed(spark, facets, k, m, Some(lists))
     else RankAggregate.topK(spark, facets, k, m, Some(lists))
   }
@@ -540,27 +529,12 @@ object SimSearchEngine {
       }
       case None => catalog.get(specs(i).column).spec.op
     }
-    // Calibrate the per-facet scales ONCE (a single tagged Spark job), then
-    // hand them to search() via explicit SearchSpec.scale so neither pass
-    // recomputes them. In-situ facets calibrate from their pushed bounded
-    // top-k list instead of a local distance stream.
-    val kth = RankAggregate.kthDistances(
-      specs.zipWithIndex.filter(_._1.scale.isEmpty).map { case (s, i) =>
-        i -> (inSituByIdx.get(i) match {
-          case Some(f) => f.build(s, k).dist
-          case None => distStream(catalog.get(s.column), s)
-        })
-      }, k)
-    val scalesByIdx = specs.zipWithIndex.map { case (s, i) =>
-      s.scale.getOrElse {
-        val dk = kth.getOrElse(i, 0.0)
-        if (dk <= 0.0) 1.0 else k * dk
-      }
-    }
-    val calibrated = specs.zip(scalesByIdx).map { case (s, sc) => s.copy(scale = Some(sc)) }
-    // the search result is local: its collect and the |facets| joins below
-    // re-run nothing
-    val ids = search(spark, catalog, k, calibrated)
+    // the matrix decays with the scales the search calibrates from its
+    // collected lists; the ranked result is local, so its collect and the
+    // |facets| joins below re-run nothing
+    val (facets, lists, m) = resolve(catalog, k, specs, None)
+    val scalesByIdx = facets.map(_.scale.getOrElse(1.0))
+    val ids = RankAggregate.topK(spark, facets, k, m, Some(lists))
       .where(col("combo") === 0).select(col("id"))
     // value retrieval for in-situ facets: one bounded (<= K_MAX) id collect
     // feeds every remote value fetch

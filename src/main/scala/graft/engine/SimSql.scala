@@ -163,8 +163,7 @@ object SimSql {
       SearchSpec(colName, value, w, filter = filt)
     }
     val topk = SimSearchEngine.search(spark, catalog, q.k, specs,
-      residualFilter = q.residualFilter,
-      algorithm = graft.api.Algorithm.parse(q.algorithm.getOrElse("threshold")))
+      residualFilter = q.residualFilter)
     projectExtras(catalog, topk, q.extraColumns)
   }
 

@@ -52,28 +52,9 @@ object FacetSearch {
     * the driver merges 1 partial result per partition — no shuffle, scales to
     * arbitrarily large facet tables as long as M stays bounded
     * (M = k * INFLATION_FACTOR <= 50_000, reference: Constants.java:44).
+    * [[RankAggregate.collectLists]] collects every facet's list in one job,
+    * and the facet's decay scale is read off it ([[RankAggregate.kthScale]]).
     */
   def topM(dist: DataFrame, m: Int): DataFrame =
     dist.orderBy(col("d"), col("id")).limit(m)
-
-  /** Dynamic scale calibration: the reference fixes each facet's decay scale
-    * to the k-th candidate distance once k candidates are seen
-    * (reference: ingested/NumericalSimSearch.java:244-246,
-    * SpatialSimSearch.java:129-137, CategoricalSimSearch.java:300-311).
-    * We reproduce that as a tiny phase-1 job: max distance over the
-    * deterministic top-k, guarded to 1.0 when zero/undefined so that decay
-    * over an all-zero-distance prefix stays well-defined.
-    */
-  def kthDistanceScale(dist: DataFrame, k: Int): Double =
-    kthDistance(dist, k).getOrElse(1.0)
-
-  /** The raw k-th candidate distance, or None when it is zero/undefined —
-    * callers that post-multiply the scale (e.g. the engine's k * d_k fixture
-    * semantics) must distinguish a genuine d_k from the 1.0 guard, or a
-    * facet whose whole top-k matches the query exactly would get scale = k
-    * instead of the guard. */
-  def kthDistance(dist: DataFrame, k: Int): Option[Double] = {
-    val ds = topM(dist, k).select(col("d")).collect().map(_.getDouble(0))
-    if (ds.isEmpty || ds.max <= 0.0) None else Some(ds.max)
-  }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
@@ -31,8 +31,9 @@ import org.apache.spark.sql.types._
   *    every candidate (and random-access lookups of ids a bounded list
   *    misses) are scanned again, restricted by an InSet filter over the
   *    candidate ids, and collected;
-  *  - everything else — scale calibration, list stats, the candidate set,
-  *    the exactness bound, scoring and ranking — runs on the driver.
+  *  - everything else — scale calibration ([[kthScale]]), list stats, the
+  *    candidate set, the exactness bound, scoring and ranking — runs on the
+  *    driver.
   * The driver holds at most m·|facets| candidates (m <= K_MAX·1000, the
   * reference's in-memory bound, Constants.java:42-44), and the result is a
   * local DataFrame.
@@ -52,15 +53,15 @@ object RankAggregate {
     * @param m       per-facet candidate list size (reference: k * 1000,
     *                SearchHandler.java:318-320)
     * @param lists   the facets' lists, already collected by [[collectLists]]
-    *                (the engine reads them first to calibrate scales and
-    *                estimate weights); None collects them here
+    *                (callers that read them first, to calibrate scales or
+    *                estimate weights, pass them on); None collects them here
     * @return columns (combo: long, id, score: double, rank: long) — `score`
     *         rounded to 6 decimals; ranking order is (rounded score desc, id)
     *         so results are bit-deterministic across engines.
     */
   def topK(spark: SparkSession, facets: Seq[BoundFacet], k: Int, m: Int,
       lists: Option[Seq[TopList]] = None): DataFrame =
-    run(spark, facets, k, m, detailed = false, lists)
+    aggregate(spark, facets, k, m, detailed = false, lists)
 
   /** As [[topK]] but additionally returns the per-result `exact` flag and
     * one raw (unrounded) decayed similarity column per facet, named
@@ -68,44 +69,7 @@ object RankAggregate {
     * RankedResult.attributes (engine/processor/RankedResult.java:14-176). */
   def topKDetailed(spark: SparkSession, facets: Seq[BoundFacet], k: Int, m: Int,
       lists: Option[Seq[TopList]] = None): DataFrame =
-    run(spark, facets, k, m, detailed = true, lists)
-
-  /** One facet of a [[topKSharedScan]] query: a distance COLUMN over the
-    * shared source (instead of a standalone dist frame). */
-  final case class SharedFacet(
-      name: String,
-      dist: org.apache.spark.sql.Column,
-      weightPerCombo: Seq[Double],
-      decay: Double = graft.functions.SimKernels.DefaultDecay,
-      jaccard: Boolean = false)
-
-  /** As [[topK]] for facets sharing ONE source frame whose ids are unique.
-    * Phase 2 is FUSED: one InSet-restricted scan of the source computes
-    * every uncovered facet's distance side by side, where [[topK]] over
-    * per-facet projections would scan the source once per facet.
-    * Results are bit-identical to [[topK]] (asserted row-for-row in
-    * OperatorSpec). */
-  def topKSharedScan(spark: SparkSession, source: DataFrame,
-      id: org.apache.spark.sql.Column, facets: Seq[SharedFacet],
-      k: Int, m: Int, detailed: Boolean = false): DataFrame = {
-    val bound = facets.map(f => BoundFacet(f.name,
-      source.select(id.as("id"), f.dist.cast("double").as("d")),
-      f.weightPerCombo, f.decay, jaccard = f.jaccard))
-    aggregate(spark, bound, collectLists(bound, m), k, m, detailed) { (uncovered, inCands) =>
-      source.where(inCands(id))
-        .select(id.as("id"), explode(array(uncovered.map(i =>
-          struct(lit(i).as("f"), facets(i).dist.cast("double").as("d"))): _*)).as("p"))
-        .select(col("p.f"), col("id"), col("p.d"))
-    }
-  }
-
-  private def run(spark: SparkSession, facets: Seq[BoundFacet], k: Int, m: Int,
-      detailed: Boolean, lists: Option[Seq[TopList]]): DataFrame =
-    aggregate(spark, facets, lists.getOrElse(collectLists(facets, m)), k, m, detailed) {
-      (uncovered, inCands) => uncovered.map { i =>
-        facets(i).dist.where(inCands(col("id"))).select(lit(i).as("f"), col("id"), col("d"))
-      }.reduce(_ union _)
-    }
+    aggregate(spark, facets, k, m, detailed = true, lists)
 
   /** Phase 1: every facet's deterministic top-`m` list in ONE Spark job.
     * Each list is a shuffle-free TakeOrderedAndProject over the facet scan
@@ -132,7 +96,15 @@ object RankAggregate {
   /** The facet scale calibrated from its list: `times` x the k-th candidate
     * distance d_k, or 1.0 when d_k is zero or absent (an all-exact-match or
     * empty prefix). d_k is the largest d among the list's first k rows in
-    * (d, id) order — nulls first — as a max(d) over the top-k reads it. */
+    * (d, id) order — nulls first — as a max(d) over the top-k reads it.
+    *
+    * The reference fixes each facet's decay scale to the k-th candidate
+    * distance once k candidates are seen (ingested/NumericalSimSearch.java:
+    * 244-246, SpatialSimSearch.java:129-137, CategoricalSimSearch.java:
+    * 300-311). The operator keeps that plain d_k (`times` = 1); the engine
+    * takes k·d_k (`times` = k), see SimSearchEngine.search. This is the one
+    * place a scale is derived: every caller reads it off a list from
+    * [[collectLists]], so no calibration runs a Spark job of its own. */
   private[graft] def kthScale(list: TopList, k: Int, times: Int): Double = {
     val prefix = math.min(k, list.size) - list.count(_._2 == null)
     val ds = list.flatMap(r => Option(r._2)).map(_.doubleValue).sorted(Ordering.Double.TotalOrdering)
@@ -164,18 +136,17 @@ object RankAggregate {
     if (x.isNaN || x.isInfinite) x
     else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
 
-  /** Phase 2 and the ranking tail over collected `lists`. `scan(uncovered,
-    * inCands)` builds the (f, id, d) rows of the `uncovered` facets, with
-    * `inCands(idColumn)` restricting a scan to the candidate ids. */
-  private def aggregate(spark: SparkSession, facets0: Seq[BoundFacet], lists: Seq[TopList],
-      k: Int, m: Int, detailed: Boolean)(
-      scan: (Seq[Int], Column => Column) => DataFrame): DataFrame = {
+  /** Phase 2 and the ranking tail over the facets' `lists` (collected
+    * here when not given). */
+  private def aggregate(spark: SparkSession, facets0: Seq[BoundFacet], k: Int, m: Int,
+      detailed: Boolean, given: Option[Seq[TopList]]): DataFrame = {
     require(facets0.nonEmpty)
     val nCombos = facets0.head.weightPerCombo.size
     require(facets0.forall(_.weightPerCombo.size == nCombos))
     facets0.foreach(f => f.weightPerCombo.foreach(w =>
       require(w > 0 && w <= 1,
         s"weight $w out of (0,1] for facet ${f.name}"))) // reference: weights/Validator.java:14-22 (1.0 admitted — the reference's own golden query uses it)
+    val lists = given.getOrElse(collectLists(facets0, m))
     val facets = facets0.zip(lists).map { case (f, l) =>
       if (f.preScored || f.scale.isDefined) f else f.copy(scale = Some(kthScale(l, k, 1)))
     }
@@ -214,9 +185,10 @@ object RankAggregate {
     }.filter(_._2.nonEmpty)
     facets.indices.filterNot(uncovered.contains)
       .foreach(i => lists(i).foreach { case (id, d) => add(i, id, d) })
-    val inCands: Column => Column = c =>
-      GraftColumnBridge.column(InSet(GraftColumnBridge.expression(c), keys.toSet))
-    val phase2 = (if (uncovered.isEmpty || ids.isEmpty) Nil else Seq(scan(uncovered, inCands))) ++
+    val inCands = GraftColumnBridge.column(InSet(GraftColumnBridge.expression(col("id")), keys.toSet))
+    val phase2 = (if (ids.isEmpty) Nil else uncovered.map { i =>
+        facets(i).dist.where(inCands).select(lit(i).as("f"), col("id"), col("d"))
+      }) ++
       missing.map { case (i, ms) =>
         facets(i).lookup.get(ms).toDF("id", "d").select(lit(i).as("f"), col("id"), col("d"))
       }
@@ -294,19 +266,4 @@ object RankAggregate {
         })
     spark.createDataFrame(rows.asJava, schema)
   }
-
-  /** The k-th smallest distance d_k of each indexed `(id, d)` stream, in
-    * ONE Spark job: each stream's deterministic top-k is tagged with its
-    * index, the tagged lists are unioned, and max(d) is taken per index
-    * (boundary ties make the value independent of which tied ids the limit
-    * keeps). Only (f, d) is unioned, so streams with different id types
-    * still combine. An index whose stream is empty is absent from the
-    * result. Callers turn d_k into their own decay scale. */
-  private[graft] def kthDistances(dists: Seq[(Int, DataFrame)], k: Int): Map[Int, Double] =
-    if (dists.isEmpty) Map.empty
-    else dists.map { case (i, dist) =>
-      FacetSearch.topM(dist, k).select(lit(i).as("f"), col("d"))
-    }.reduce(_ union _)
-      .groupBy(col("f")).agg(max(col("d")).as("dk"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 }

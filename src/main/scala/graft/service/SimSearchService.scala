@@ -205,8 +205,7 @@ final class SimSearchService(spark: SparkSession, port: Int,
       val req = RequestParser.parseSearchRequest(tmp.toString)
       // detailed mode computes the per-result TA exactness bound so the
       // response's `exact` flags are real, not asserted (RankedResult.setExact)
-      val res = SimSearchEngine.search(spark, cat, req.k, req.specs, detailed = true,
-        algorithm = graft.api.Algorithm.parse(req.algorithm))
+      val res = SimSearchEngine.search(spark, cat, req.k, req.specs, detailed = true)
       // A6: requested extra columns join on as per-result extra_attributes
       // (reference: RankedResult.setExtraAttributes)
       val extras = req.output.extraColumns

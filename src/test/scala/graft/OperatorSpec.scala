@@ -16,11 +16,25 @@ class OperatorSpec extends SparkTestBase {
     assert(got == Seq(2L, 1L, 3L))
   }
 
-  test("FacetSearch.kthDistanceScale: k-th distance; all-zero prefix guards to 1.0") {
-    val dist = Seq((1L, 0.0), (2L, 2.0), (3L, 5.0)).toDF("id", "d")
-    assert(FacetSearch.kthDistanceScale(dist, 2) == 2.0)
-    val zeros = Seq((1L, 0.0), (2L, 0.0)).toDF("id", "d")
-    assert(FacetSearch.kthDistanceScale(zeros, 2) == 1.0)
+  test("RankAggregate.kthScale: k-th distance; all-zero prefix guards to 1.0") {
+    // read off a list from collectLists; nulls sort first, times = k
+    def list(rows: Seq[(Long, java.lang.Double)], k: Int) =
+      RankAggregate.collectLists(Seq(BoundFacet("f", rows.toDF("id", "d"), Seq(1.0))), k).head
+    val dist = Seq[(Long, java.lang.Double)]((1L, 0.0), (2L, 2.0), (3L, 5.0))
+    assert(RankAggregate.kthScale(list(dist, 2), 2, 1) == 2.0)
+    val zeros = Seq[(Long, java.lang.Double)]((1L, 0.0), (2L, 0.0))
+    assert(RankAggregate.kthScale(list(zeros, 2), 2, 1) == 1.0)
+    // a null distance takes a place in the top-k prefix: d_k is the
+    // largest d among the first k rows, as max(d) over the top-k reads it
+    val nulls = Seq[(Long, java.lang.Double)]((1L, null), (2L, 1.0), (3L, 4.0))
+    assert(list(nulls, 3).head._2 == null)
+    assert(RankAggregate.kthScale(list(nulls, 3), 2, 1) == 1.0)
+    assert(RankAggregate.kthScale(list(nulls, 3), 3, 1) == 4.0)
+    assert(RankAggregate.kthScale(list(Seq((1L, null), (2L, null)), 2), 2, 1) == 1.0)
+    // the engine's k * d_k; the all-zero guard stays 1.0, unmultiplied
+    assert(RankAggregate.kthScale(list(dist, 2), 2, 2) == 4.0)
+    assert(RankAggregate.kthScale(list(zeros, 2), 2, 2) == 1.0)
+    assert(RankAggregate.kthScale(IndexedSeq.empty, 2, 2) == 1.0)
   }
 
   test("RankAggregate.topK matches a brute-force oracle (2 facets, exact scoring)") {
@@ -50,39 +64,6 @@ class OperatorSpec extends SparkTestBase {
       (i.toLong, sc)
     }.sortBy { case (id, sc) => (-sc, id) }.take(k)
     assert(got == exp)
-  }
-
-  test("RankAggregate.topKSharedScan: bit-identical to topK over the same " +
-      "shared source (fused phase 2, multi-combo, jaccard facet)") {
-    val rnd = new scala.util.Random(11)
-    val n = 80
-    val rows = (0 until n).map(i =>
-      (i.toLong, rnd.nextDouble() * 100, rnd.nextDouble() * 10,
-        if (i % 3 == 0) 0.25 else if (i % 3 == 1) 1.0 else 0.6))
-    val src = rows.toDF("id", "v0", "v1", "dj")
-      .select(col("id"), abs(col("v0") - 50.0).as("d0"),
-        abs(col("v1") - 5.0).as("d1"), col("dj").as("d2"))
-    val combos = Seq(Seq(0.5, 0.3, 0.2), Seq(0.2, 0.2, 0.6))
-    val shared = Seq(
-      RankAggregate.SharedFacet("f0", col("d0"), combos.map(_(0))),
-      RankAggregate.SharedFacet("f1", col("d1"), combos.map(_(1))),
-      RankAggregate.SharedFacet("f2", col("d2"), combos.map(_(2)), jaccard = true))
-    val bound = shared.zipWithIndex.map { case (f, i) =>
-      BoundFacet(f.name, src.select(col("id"), col(s"d$i").as("d")),
-        f.weightPerCombo, f.decay, jaccard = f.jaccard)
-    }
-    val (k, m) = (7, 25)
-    def rowsOf(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("combo", "rank").collect().map(_.toSeq).toSeq
-    assert(rowsOf(RankAggregate.topKSharedScan(spark, src, col("id"), shared, k, m))
-      == rowsOf(RankAggregate.topK(spark, bound, k, m)))
-    // detailed mode too: exact flag + per-facet score columns
-    assert(rowsOf(RankAggregate.topKSharedScan(spark, src, col("id"), shared,
-        k, m, detailed = true).select("combo", "rank", "id", "score", "exact",
-          "s_f0", "s_f1", "s_f2"))
-      == rowsOf(RankAggregate.topKDetailed(spark, bound, k, m)
-          .select("combo", "rank", "id", "score", "exact",
-            "s_f0", "s_f1", "s_f2")))
   }
 
   test("CacheScope.parallel: results in order, registrations land in the " +
@@ -125,7 +106,8 @@ class OperatorSpec extends SparkTestBase {
 
     /** Runs topKDetailed over facets 0..data.size-1 and compares it with a
       * plain-Scala recomputation; returns the ranked rows and candidates. */
-    def check(data: Seq[Seq[(Long, Double)]], k: Int, m: Int) = {
+    def check(data: Seq[Seq[(Long, Double)]], k: Int, m: Int,
+        ws: Seq[Seq[Double]] = ws, jac: Seq[Boolean] = jac) = {
       val names = data.indices.map(i => s"s_f$i")
       val facets = data.indices.map(i => BoundFacet(s"f$i", data(i).toDF("id", "d"),
         ws(i), jaccard = jac(i)))
@@ -188,6 +170,22 @@ class OperatorSpec extends SparkTestBase {
     // a single facet: its list holds every candidate, whatever m is
     check(Seq(d0), 5, 5)
     check(Seq(d1), 3, 10)
+    // three distance columns of one source, the third a Jaccard distance,
+    // under two weight combinations; topK ranks as topKDetailed does
+    val src = new scala.util.Random(11)
+    val cols = (0 until 80).map(i => (i.toLong, math.abs(src.nextDouble() * 100 - 50.0),
+      math.abs(src.nextDouble() * 10 - 5.0), if (i % 3 == 0) 0.25 else if (i % 3 == 1) 1.0 else 0.6))
+    val shared = Seq(cols.map(r => r._1 -> r._2), cols.map(r => r._1 -> r._3),
+      cols.map(r => r._1 -> r._4))
+    val sharedWs = Seq(Seq(0.5, 0.2), Seq(0.3, 0.2), Seq(0.2, 0.6))
+    val sharedJac = Seq(false, false, true)
+    val (sharedRows, _) = check(shared, 7, 25, sharedWs, sharedJac)
+    assert(sharedRows.exists(_._5) && sharedRows.exists(!_._5), sharedRows)
+    val plain = RankAggregate.topK(spark, shared.indices.map(i => BoundFacet(s"f$i",
+      shared(i).toDF("id", "d"), sharedWs(i), jaccard = sharedJac(i))), 7, 25)
+      .orderBy("combo", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(3), r.getLong(1), r.getDouble(2))).toSeq
+    assert(plain == sharedRows.map(r => (r._1, r._2, r._3, r._4)))
   }
 
   test("RankAggregate: missing facet value contributes similarity 0") {

@@ -91,8 +91,7 @@ class PivotMountSpec extends SparkTestBase {
     val res = SimSearchEngine.search(spark, cat, 5, Seq(
       SearchSpec("position", Seq(-74.94, 42.15), Seq(0.4)),
       SearchSpec("organizations", Seq("united nations"), Seq(0.3)),
-      SearchSpec("timestamp", "2019-11-04 15:45:00", Seq(0.3))),
-      algorithm = graft.api.Algorithm.PivotBased).collect()
+      SearchSpec("timestamp", "2019-11-04 15:45:00", Seq(0.3)))).collect()
     assert(res.length == 5)
     val scores = res.map(_.getDouble(res.head.fieldIndex("score")))
     assert(scores.forall(s => s > 0.0 && s <= 1.0))
@@ -108,8 +107,7 @@ class PivotMountSpec extends SparkTestBase {
     // and a bare JSON number
     assert(req.k == 5 && req.specs.size == 4)
     assert(req.output.extraColumns == Seq("negative_sentiment"))
-    val res = SimSearchEngine.search(spark, cat, req.k, req.specs,
-      algorithm = graft.api.Algorithm.parse(req.algorithm))
+    val res = SimSearchEngine.search(spark, cat, req.k, req.specs)
     val rows = res.collect()
     assert(rows.length == 10, s"5 results x 2 weight combos, got ${rows.length}")
     val scores = rows.map(_.getDouble(rows.head.fieldIndex("score")))
@@ -117,7 +115,7 @@ class PivotMountSpec extends SparkTestBase {
     // the datetime query typed as epoch-ms: the timestamp facet must
     // contribute nonzero similarity to at least the top result
     val detailed = SimSearchEngine.search(spark, cat, req.k, req.specs,
-      detailed = true, algorithm = graft.api.Algorithm.parse(req.algorithm))
+      detailed = true)
     val top = detailed.where(col("combo") === 0 && col("rank") === 1).collect().head
     assert(top.getDouble(top.fieldIndex("s_timestamp")) > 0.0,
       "epoch-typed datetime query must score against the timestamp facet")
