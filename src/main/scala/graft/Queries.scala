@@ -1,7 +1,5 @@
 package graft
 
-import scala.util.chaining._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1861,17 +1859,19 @@ object Queries {
   // fixture is irreproducible by design — documented divergence.
   // ----------------------------------------------------------------------
   private val pivotMultimetric: (SparkSession, String) => DataFrame = (s, dir) => {
-    // both metric distances in ONE cached projection: phase-1 top-M and
-    // phase-2 exact scoring would otherwise
-    // re-read + re-cast the embedding parquet once per facet per phase
+    // both metric distances in ONE projection, cached inside a CacheScope:
+    // phase-1 top-M and phase-2 exact scoring would otherwise re-read and
+    // re-cast the embedding parquet once per facet per phase. An unscoped
+    // caller has no scope to release the cache, so it reads uncached.
     val qc = array(queryVec(s, dir).map(lit): _*)
-    val base = spread(t(s, dir, "embeddings"))
+    val dists = spread(t(s, dir, "embeddings"))
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("v"))
       .select(col("id"),
         graft.functions.NativeKernels.l2Dist(col("v"), qc).as("d0"),
         graft.functions.NativeKernels.l1Dist(col("v"), qc).as("d1"))
-      .cache()
-      .pipe(graft.util.CacheScope.register(_))
+    val base =
+      if (graft.util.CacheScope.inScope) graft.util.CacheScope.register(dists.cache())
+      else dists
     val f0 = base.select(col("id"), col("d0").as("d"))
     val f1 = base.select(col("id"), col("d1").as("d"))
     RankAggregate.topK(s,

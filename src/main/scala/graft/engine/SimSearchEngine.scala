@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.{Algorithm, Facet, Limits, Normalizer, SimOp}
-import graft.functions.SimKernels
+import graft.functions.{NativeKernels, SimKernels}
 import graft.operators.{BoundFacet, RankAggregate}
 import graft.sources.CsvMount
 
@@ -218,7 +218,13 @@ object SimSearchEngine {
   /** Build the (id, d) distance stream for one facet/query pair, applying
     * the facet's boolean pre-filter (P2 — works on ingested data here,
     * unlike the reference which ignores it with a notice,
-    * SearchHandler.java:707-713). */
+    * SearchHandler.java:707-713).
+    *
+    * Every query value enters the stream by reference
+    * ([[NativeKernels.queryValue]], [[NativeKernels.querySetJaccardDist]]),
+    * never as a literal, so the generated code of a stream depends only on
+    * the facet and the request's shape: a request with new values reuses
+    * the code an earlier request of its class compiled. */
   private def distStream(f: Facet, spec: SearchSpec): DataFrame = {
     val base = spec.filter.map(f.df.where).getOrElse(f.df)
     val v = col("value")
@@ -247,7 +253,7 @@ object SimSearchEngine {
               case _ => q0
             }
         }
-        SimKernels.absDist(v, lit(q))
+        SimKernels.absDist(v, NativeKernels.queryValue(q))
       case SimOp.Temporal =>
         val q = spec.value match {
           case s: String => CsvMount.parseDatetimeMs(s)
@@ -255,7 +261,7 @@ object SimSearchEngine {
           case x: Double => x
           case other => throw new IllegalArgumentException(s"bad temporal query $other")
         }
-        SimKernels.absDist(v, lit(q))
+        SimKernels.absDist(v, NativeKernels.queryValue(q))
       case SimOp.Categorical =>
         val toks = spec.value match {
           case xs: Seq[_] => xs.map(_.toString)
@@ -263,12 +269,12 @@ object SimSearchEngine {
             .map(_.trim).filter(_.nonEmpty).distinct.toSeq
           case other => throw new IllegalArgumentException(s"bad token-set query $other")
         }
-        SimKernels.jaccardDistDistinct(v, array(toks.map(lit): _*))
+        NativeKernels.querySetJaccardDist(v, toks)
       case SimOp.Textual =>
         val q = spec.value.toString
         val qGrams = (if (q.length < f.spec.qgram) Seq(q)
           else q.sliding(f.spec.qgram).toSeq).distinct
-        SimKernels.jaccardDistDistinct(SimKernels.qgrams(v, f.spec.qgram), array(qGrams.map(lit): _*))
+        NativeKernels.queryQgramJaccardDist(v, qGrams, f.spec.qgram)
       case SimOp.Spatial =>
         val (qLon, qLat) = spec.value match {
           case s: String => CsvMount.parseWktPoint(s)
@@ -276,7 +282,8 @@ object SimSearchEngine {
           case (a: Double, b: Double) => (a, b)
           case other => throw new IllegalArgumentException(s"bad spatial query $other")
         }
-        SimKernels.geoDistDeg(v.getField("lon"), v.getField("lat"), lit(qLon), lit(qLat))
+        SimKernels.geoDistDeg(v.getField("lon"), v.getField("lat"),
+          NativeKernels.queryValue(qLon), NativeKernels.queryValue(qLat))
       case SimOp.Metric(mname) => // Q9: pivot_based coordinate attribute
         // the attribute's queryTransform (set at mount) types string query
         // values the same way the DATA was typed: word2vec for transformed
@@ -316,15 +323,15 @@ object SimSearchEngine {
               throw new IllegalArgumentException(s"unparseable metric query $s"))
           case other => throw new IllegalArgumentException(s"bad metric query $other")
         }
-        val qc = array(qvec.map(lit): _*)
+        val qc = NativeKernels.queryVector(qvec)
         mname match {
-          case "euclidean" => graft.functions.NativeKernels.l2Dist(v, qc)
-          case "manhattan" => graft.functions.NativeKernels.l1Dist(v, qc)
+          case "euclidean" => NativeKernels.l2Dist(v, qc)
+          case "manhattan" => NativeKernels.l1Dist(v, qc)
           case "chebyshev" => SimKernels.chebyshevDist(v, qc)
           case "haversine" =>
             require(qvec.size == 2, s"haversine query needs (lon, lat), got $qvec")
             SimKernels.haversineDeg(element_at(v, 1), element_at(v, 2),
-              lit(qvec(0)), lit(qvec(1)))
+              NativeKernels.queryValue(qvec(0)), NativeKernels.queryValue(qvec(1)))
           case other => throw new IllegalArgumentException(s"unsupported metric $other")
         }
       case other => throw new IllegalArgumentException(s"unsupported op $other")

@@ -171,6 +171,269 @@ object NativeKernels {
   def l1Dist(a: Column, b: Column): Column =
     column(L1DistExpr(expression(a), expression(b)))
 
+  // ------------------------------------------------------ served /search
+
+  /** One query constant of a served search — a double, or a vector of
+    * doubles — bound by REFERENCE. A `lit` is inlined into the generated
+    * Java source, and that source is the codegen cache key, so every
+    * request with new query values compiled its distance streams afresh.
+    * This leaf evaluates to the same value but is not foldable, and its
+    * generated code reads the value from the reference array: every
+    * request of a class generates the same source and compiles nothing. */
+  private[functions] case class QueryValueExpr(value: Any, dataType: DataType)
+      extends org.apache.spark.sql.catalyst.expressions.LeafExpression {
+    require(dataType == DoubleType || dataType == QueryVectorType,
+      s"query_value holds a double or array<double>, got ${dataType.simpleString}")
+    override def nullable: Boolean = false
+    override def prettyName: String = "query_value"
+    // the value is left out of the hash (equality still compares it):
+    // common-subexpression elimination orders the subexpressions it hoists
+    // by hash, and a value-dependent order is a different source
+    override def hashCode(): Int = dataType.hashCode
+    override def toString: String = value match {
+      case a: ArrayData => s"$prettyName(${a.toDoubleArray().mkString(", ")})"
+      case v => s"$prettyName($v)"
+    }
+
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = value
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, FalseLiteral}
+      val ref = ctx.addReferenceObj("queryValue", value, CodeGenerator.boxedType(dataType))
+      val read = if (dataType == DoubleType) s"$ref.doubleValue()" else ref
+      ev.copy(code = code"${CodeGenerator.javaType(dataType)} ${ev.value} = $read;",
+        isNull = FalseLiteral)
+    }
+  }
+
+  private val QueryVectorType =
+    org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
+
+  /** A query double that enters generated code by reference
+    * ([[QueryValueExpr]]); the same value as `lit(q)`. */
+  def queryValue(q: Double): Column = column(QueryValueExpr(q, DoubleType))
+
+  /** A query vector (array<double>, no nulls) that enters generated code by
+    * reference; the same value as `array(qs.map(lit): _*)`. */
+  def queryVector(qs: Seq[Double]): Column = column(QueryValueExpr(
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(qs.toArray),
+    QueryVectorType))
+
+  /** Jaccard distance of each row's set to ONE query set, in one compiled
+    * pass — the served twin of
+    * `SimKernels.jaccardDistDistinct(rowSet, array(query.map(lit): _*))`,
+    * bit-identical (NativeKernelSpec property-checks it). The composed form
+    * runs `array_intersect` against a literal array, which rebuilds a hash
+    * set of the query per row, and for a textual facet the interpreted
+    * `transform` that cuts the q-grams. Here the query set is a hash map
+    * built once per task, and the row's grams are cut in the same pass.
+    *
+    * `q` = 0: the row is a token array (a categorical facet). `q` >= 1: the
+    * row is a string and its set is the distinct q-grams of
+    * `SimKernels.qgrams` — code-point substrings at 1..max(len - q + 1, 1),
+    * none for a null or empty string.
+    *
+    * d = 1 - inter / (|row| + |query| - inter), a union of 0 scoring 0,
+    * where inter counts the distinct row elements found in the query (a
+    * null element never is) and |row|, |query| are the raw sizes: a token
+    * array's own duplicates and nulls count in |row|, and duplicate query
+    * tokens count in |query|, exactly as `size` counts them. A null row is
+    * the empty set, d = 1.0 — never null, which would sort first in a
+    * top-M list. */
+  private[functions] case class QuerySetJaccardExpr(child: Expression,
+      query: Seq[String], q: Int)
+      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    import org.apache.spark.unsafe.types.UTF8String
+
+    require(q >= 0, s"q-gram length must be >= 0 (0 = token array), got $q")
+    require(!query.contains(null), "query tokens must not be null")
+
+    override def checkInputDataTypes()
+        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+      import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+      import org.apache.spark.sql.catalyst.util.TypeUtils.typeWithProperEquals
+      import org.apache.spark.sql.types.{ArrayType, StringType}
+      // binary string equality: the hash lookup is array_intersect's only
+      // for a collation that compares bytes
+      (child.dataType, q) match {
+        case (ArrayType(s: StringType, _), 0) if typeWithProperEquals(s) =>
+          TypeCheckResult.TypeCheckSuccess
+        case (s: StringType, _) if q > 0 && typeWithProperEquals(s) =>
+          TypeCheckResult.TypeCheckSuccess
+        case (other, _) => TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires ${if (q == 0) "array<string>" else "string"}, " +
+            s"got ${other.simpleString}")
+      }
+    }
+    override def dataType: DataType = DoubleType
+    override def nullable: Boolean = false
+    override def prettyName: String =
+      if (q == 0) "query_set_jaccard_dist" else "query_qgram_jaccard_dist"
+    override def toString: String = s"$prettyName($child, ${query.size} query tokens)"
+    // the query is left out of the hash, as in QueryValueExpr
+    override def hashCode(): Int = (child, q).hashCode
+    override protected def withNewChildInternal(c: Expression): Expression =
+      copy(child = c)
+
+    private val querySize: Double = query.size.toDouble
+    @transient private lazy val querySet: java.util.HashSet[UTF8String] = {
+      val s = new java.util.HashSet[UTF8String]
+      query.foreach(t => s.add(UTF8String.fromString(t)))
+      s
+    }
+    /** the row elements seen so far, reused across the rows of a thread */
+    @transient private lazy val rowSeen = new ThreadLocal[java.util.HashSet[UTF8String]] {
+      override def initialValue(): java.util.HashSet[UTF8String] = new java.util.HashSet
+    }
+
+    // the composed form's double arithmetic, in its order
+    private def dist(rowSize: Int, inter: Int): Double = {
+      val i = inter.toDouble
+      val union = rowSize.toDouble + querySize - i
+      1.0 - (if (union == 0.0) 0.0 else i / union)
+    }
+
+    def computeTokens(row: ArrayData): Double = {
+      val n = if (row == null) 0 else row.numElements()
+      val seen = rowSeen.get()
+      seen.clear()
+      var inter = 0
+      var i = 0
+      while (i < n) {
+        if (!row.isNullAt(i)) {
+          val t = row.getUTF8String(i)
+          if (querySet.contains(t) && seen.add(t)) inter += 1
+        }
+        i += 1
+      }
+      dist(n, inter)
+    }
+
+    def computeGrams(s: UTF8String): Double = {
+      val nChars = if (s == null) 0 else s.numChars()
+      if (nChars == 0) return dist(0, 0)
+      val bytes = s.getBytes
+      // code point -> byte offset, one walk (the boundaries substr uses)
+      val off = new Array[Int](nChars + 1)
+      var c = 0; var b = 0
+      while (c < nChars) {
+        off(c) = b
+        b = math.min(b + UTF8String.numBytesForFirstByte(bytes(b)), bytes.length)
+        c += 1
+      }
+      off(nChars) = bytes.length
+      val seen = rowSeen.get()
+      seen.clear()
+      val nGrams = math.max(nChars - q + 1, 1)
+      var inter = 0
+      var g = 0
+      while (g < nGrams) {
+        val start = off(g)
+        val gram = UTF8String.fromBytes(bytes, start, off(math.min(g + q, nChars)) - start)
+        if (seen.add(gram) && querySet.contains(gram)) inter += 1
+        g += 1
+      }
+      dist(seen.size, inter)
+    }
+
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+      val v = child.eval(input)
+      if (q == 0) computeTokens(v.asInstanceOf[ArrayData])
+      else computeGrams(v.asInstanceOf[UTF8String])
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      // one call into this expression's own kernel, which holds the query
+      // set: the generated source names no query token, so it is the same
+      // for every query. A null row is the empty set (isNull is constant).
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+      val ref = ctx.addReferenceObj("querySetJaccardExpr", this)
+      val childGen = child.genCode(ctx)
+      val kernel = if (q == 0) "computeTokens" else "computeGrams"
+      ev.copy(
+        code = code"""
+          ${childGen.code}
+          double ${ev.value} = $ref.$kernel(${childGen.isNull} ? null : ${childGen.value});
+        """,
+        isNull = FalseLiteral)
+    }
+  }
+
+  /** Jaccard distance of a token-array column to a query token set
+    * ([[QuerySetJaccardExpr]], `q` = 0). */
+  def querySetJaccardDist(tokens: Column, query: Seq[String]): Column =
+    column(QuerySetJaccardExpr(expression(tokens.cast("array<string>")), query, 0))
+
+  /** Jaccard distance of a string column's distinct q-grams to a query gram
+    * set ([[QuerySetJaccardExpr]]). */
+  def queryQgramJaccardDist(text: Column, queryGrams: Seq[String], q: Int): Column = {
+    require(q >= 1, s"q-gram length must be >= 1, got $q")
+    column(QuerySetJaccardExpr(expression(text.cast("string")), queryGrams, q))
+  }
+
+  /** Membership of the child in a fixed key set — the candidate filter of
+    * rank aggregation's phase 2. `InSet` over the same keys is correct but
+    * costs in proportion to its keys on every request: the plan
+    * description sorts and prints them, and the task closure serializes its
+    * hash set object by object. Here the keys travel as ONE packed
+    * `UnsafeArrayData` (Catalyst values of `keyType`, no nulls), the lookup
+    * set is rebuilt lazily where the predicate runs, and the description
+    * prints only the count. Equality is InSet's: hashing where the type has
+    * proper equals, the type's interpreted ordering otherwise. A null child
+    * is null. */
+  private[functions] case class InKeysExpr(child: Expression,
+      keys: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData, keyType: DataType)
+      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    override def checkInputDataTypes()
+        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+      import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+      if (child.dataType == keyType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"$prettyName keys are ${keyType.simpleString}, got ${child.dataType.simpleString}")
+    }
+    override def dataType: DataType = org.apache.spark.sql.types.BooleanType
+    override def nullIntolerant: Boolean = true
+    override def prettyName: String = "in_keys"
+    override def toString: String = s"$child IN (${keys.numElements()} keys)"
+    // the keys are left out of the hash, as in QueryValueExpr
+    override def hashCode(): Int = (child, keyType).hashCode
+    override protected def withNewChildInternal(c: Expression): Expression =
+      copy(child = c)
+
+    @transient private lazy val set: java.util.Set[Any] = {
+      import org.apache.spark.sql.catalyst.util.TypeUtils
+      val s: java.util.Set[Any] =
+        if (TypeUtils.typeWithProperEquals(keyType)) new java.util.HashSet[Any]
+        else new java.util.TreeSet[Any](TypeUtils.getInterpretedOrdering(keyType))
+      var i = 0
+      while (i < keys.numElements()) { s.add(keys.get(i, keyType)); i += 1 }
+      s
+    }
+
+    def contains(v: Any): Boolean = set.contains(v)
+
+    override protected def nullSafeEval(v: Any): Any = contains(v)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("inKeysExpr", this)
+      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.contains($c);")
+    }
+  }
+
+  /** `c IN keys` over Catalyst values of `keyType` with no null among them
+    * ([[InKeysExpr]]). */
+  def inKeys(c: Column, keys: Seq[Any], keyType: DataType): Column = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val packed = UnsafeProjection.create(Array[DataType](
+        org.apache.spark.sql.types.ArrayType(keyType, containsNull = false)))
+      .apply(InternalRow(new GenericArrayData(keys.toArray))).getArray(0).copy()
+    column(InKeysExpr(expression(c), packed, keyType))
+  }
+
   // ----------------------------------------------------------- MinHash/LSH
 
   /** All LSH band keys of a shingle-set column in ONE pass — the native

@@ -6,7 +6,13 @@ import org.apache.spark.sql.functions._
 /** Similarity / distance kernel library.
   *
   * Pure Catalyst column expressions (no UDFs) so every kernel stays inside
-  * whole-stage codegen and is usable at 100 TB scale. Semantics mirror the
+  * whole-stage codegen and is usable at 100 TB scale. The batch queries
+  * and their DuckDB oracles compose these; the served `/search` scores
+  * through native twins in [[NativeKernels]] instead, bit-identical to the
+  * composed forms: query values bound by reference (`queryValue`,
+  * `queryVector`) and one compiled query-set Jaccard kernel
+  * (`querySetJaccardDist`, `queryQgramJaccardDist`) in place of
+  * [[jaccardDistDistinct]] against a literal array. Semantics mirror the
   * reference engine's kernels (see SURVEY.md §2.6):
   *
   *  - absolute numeric distance   (reference: measure/NumericalDistance.java:28-52)

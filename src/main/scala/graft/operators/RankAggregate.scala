@@ -2,9 +2,8 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,8 +28,9 @@ import org.apache.spark.sql.types._
   *    is collected;
   *  - phase 2 is at most one more job: only facets whose list does not hold
   *    every candidate (and random-access lookups of ids a bounded list
-  *    misses) are scanned again, restricted by an InSet filter over the
-  *    candidate ids, and collected;
+  *    misses) are scanned again, restricted by a membership filter over
+  *    the candidate ids that travels as one packed array
+  *    ([[graft.functions.NativeKernels.inKeys]]), and collected;
   *  - everything else — scale calibration ([[kthScale]]), list stats, the
   *    candidate set, the exactness bound, scoring and ranking — runs on the
   *    driver.
@@ -185,7 +185,7 @@ object RankAggregate {
     }.filter(_._2.nonEmpty)
     facets.indices.filterNot(uncovered.contains)
       .foreach(i => lists(i).foreach { case (id, d) => add(i, id, d) })
-    val inCands = GraftColumnBridge.column(InSet(GraftColumnBridge.expression(col("id")), keys.toSet))
+    lazy val inCands = graft.functions.NativeKernels.inKeys(col("id"), keys, idField.dataType)
     val phase2 = (if (ids.isEmpty) Nil else uncovered.map { i =>
         facets(i).dist.where(inCands).select(lit(i).as("f"), col("id"), col("d"))
       }) ++
@@ -230,11 +230,30 @@ object RankAggregate {
       facets.map(_.weightPerCombo), k, detailed, sMth, facets.map(_.name))
   }
 
+  /** The candidates that can reach the top `k` once `raw` is rounded:
+    * every one whose rounded score is at least round6(t), t the k-th
+    * largest raw score, and possibly a few more. round6 is monotone, so at
+    * least k candidates round to round6(t) or above, and one that rounds
+    * below it ranks below them all. A rounding moves a finite value by at
+    * most 5e-7 plus an ulp or two, so testing the raw score against
+    * round6(t) - (1e-6 + 4 ulp(t)) rounds nothing. NaN and the infinities
+    * order as Spark orders them (NaN above +Inf). */
+  private[graft] def rankWindow(raw: Array[Double], k: Int): Array[Int] = {
+    val n = raw.length
+    if (n <= k) return Array.range(0, n)
+    val sorted = raw.clone()
+    java.util.Arrays.sort(sorted) // Double.compare: -0.0 < 0.0, NaN last
+    val t = sorted(n - k)
+    val bound = if (t.isNaN || t.isInfinite) t else round6(t) - (1e-6 + 4 * math.ulp(t))
+    Array.range(0, n).filter(j => SQLOrderingUtil.compareDoubles(raw(j), bound) >= 0)
+  }
+
   /** The one ranking tail: per weight combination, the left-associative
     * weighted mean (w_0*s_0 + w_1*s_1 + ...) / sum w, rounded as Spark's
     * `round(x, 6)`, ranked by (score desc, id asc) in Spark's ordering of
-    * the id type, top `k` kept. Returns a local DataFrame: (combo, id,
-    * score, rank), or in detailed mode (id, combo, score, rank, exact,
+    * the id type, top `k` kept. Only the candidates of [[rankWindow]] are
+    * rounded and sorted. Returns a local DataFrame: (combo, id, score,
+    * rank), or in detailed mode (id, combo, score, rank, exact,
     * s_<facet>...), where a facet name queried twice gets `s_<name>_<i>`
     * columns so no facet's score is dropped by a serializer. */
   private def rankTail(spark: SparkSession, idField: StructField, ids: IndexedSeq[Any],
@@ -244,9 +263,18 @@ object RankAggregate {
     val rows = weights.head.indices.flatMap { c =>
       val ws = weights.map(_(c))
       val wsum = ws.sum
-      val scores = sims.map(s => round6(ws.indices.map(i => ws(i) * s(i)).reduce(_ + _) / wsum))
+      val w = ws.toArray
+      val raw = sims.map { s =>
+        var acc = w(0) * s(0)
+        var i = 1
+        while (i < w.length) { acc += w(i) * s(i); i += 1 }
+        acc / wsum
+      }
+      val window = rankWindow(raw, k)
+      val scores = new Array[Double](raw.length)
+      window.foreach(j => scores(j) = round6(raw(j)))
       val tau = ws.zip(sMth).map { case (wf, s) => wf * s }.sum / wsum
-      ids.indices.sortWith { (a, b) =>
+      window.sortWith { (a, b) =>
         val bySc = SQLOrderingUtil.compareDoubles(scores(b), scores(a))
         if (bySc != 0) bySc < 0 else order.lt(keys(a), keys(b))
       }.take(k).zipWithIndex.map { case (j, r) =>

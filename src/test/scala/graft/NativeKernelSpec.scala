@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NativeKernels, SimKernels}
@@ -460,5 +462,98 @@ class NativeKernelSpec extends SparkTestBase {
     val bad = frame.where(
       graft.functions.NativeKernels.nfcNormalize(col("d")) =!= col("c")).count()
     assert(bad == 0)
+  }
+
+  // ------------------------------------------------------- served /search
+
+  /** Rows of `df` projected through `native` and `composed` as raw double
+    * bits: twice, once over the local relation (the optimizer folds it,
+    * evaluating both interpreted) and once over an RDD scan (whole-stage
+    * codegen). */
+  private def bitPairs(df: org.apache.spark.sql.DataFrame, native: org.apache.spark.sql.Column,
+      composed: org.apache.spark.sql.Column): Seq[(Any, Long, Long)] = {
+    val viaRdd = spark.createDataFrame(df.rdd, df.schema)
+    for (frame <- Seq(df, viaRdd); r <- frame.select(col("id"), native, composed).collect().toSeq)
+      yield (r.get(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
+  }
+
+  test("query-set Jaccard (token arrays) is bit-identical to " +
+    "jaccardDistDistinct against a literal array: duplicates and nulls in " +
+    "rows, duplicate query tokens, null and empty rows") {
+    val rnd = new scala.util.Random(17)
+    val alphabet = Seq("a", "b", "c", "dd", "é", "😀", "")
+    def tokens(n: Int) = Seq.fill(n)(
+      if (rnd.nextInt(9) == 0) null else alphabet(rnd.nextInt(alphabet.size)))
+    val rows = (0 until 300).map { i =>
+      (i.toLong, if (i % 37 == 0) null else tokens(rnd.nextInt(6)))
+    }
+    val df = rows.toDF("id", "a")
+    val queries = Seq(Seq("a"), Seq("a", "a", "b"), Seq("😀", "é", "zz"),
+      alphabet, Seq("", "c", "c", "dd"), Seq.empty) ++ Seq.fill(5)(tokens(1 + rnd.nextInt(5)).filter(_ != null))
+    for (q <- queries) {
+      val got = bitPairs(df, NativeKernels.querySetJaccardDist(col("a"), q),
+        SimKernels.jaccardDistDistinct(col("a"), array(q.map(lit): _*)))
+      assert(got.forall(g => g._2 == g._3), (q, got.filter(g => g._2 != g._3).take(5)))
+    }
+    // a null row is the empty set: distance 1.0, never null
+    val nullRow = df.where(col("a").isNull)
+      .select(NativeKernels.querySetJaccardDist(col("a"), Seq("a"))).collect()
+    assert(nullRow.nonEmpty && nullRow.forall(_.getDouble(0) == 1.0))
+  }
+
+  test("query-set Jaccard (q-grams of a string) is bit-identical to " +
+    "jaccardDistDistinct(qgrams(...)) against a literal array: null, empty " +
+    "and short strings, multi-byte and astral characters, repeated grams") {
+    val rnd = new scala.util.Random(23)
+    val chars = Seq("a", "b", "n", " ", "é", "中", "😀", "𝔸")
+    def str(n: Int) = Seq.fill(n)(chars(rnd.nextInt(chars.size))).mkString
+    val edge = Seq(null, "", "a", "ab", "😀", "😀𝔸", "aaaa", "banana", "中中中中", "é😀é😀é")
+    val df = (edge ++ Seq.fill(300)(str(rnd.nextInt(12))))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "s")
+    for (q <- Seq(1, 2, 3)) {
+      // query grams the way the engine cuts them from a query string, and
+      // hand-made sets with duplicates
+      val fromQuery = Seq("banana", "a", "😀𝔸x", "中中", "é😀é") ++ Seq.fill(4)(str(1 + rnd.nextInt(8)))
+      val sets = fromQuery.map(v => (if (v.length < q) Seq(v) else v.sliding(q).toSeq).distinct) ++
+        Seq(Seq("an", "an", "na"), Seq("aaa", "aaa"), Seq("😀"))
+      for (qs <- sets) {
+        val got = bitPairs(df, NativeKernels.queryQgramJaccardDist(col("s"), qs, q),
+          SimKernels.jaccardDistDistinct(SimKernels.qgrams(col("s"), q), array(qs.map(lit): _*)))
+        assert(got.forall(g => g._2 == g._3), (q, qs, got.filter(g => g._2 != g._3).take(5)))
+      }
+    }
+  }
+
+  test("in_keys == InSet over the same keys: string, long, int, decimal and " +
+    "binary ids, a null id, and a description that names only the count") {
+    import org.apache.spark.sql.GraftColumnBridge
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(41)
+    val cases: Seq[(DataType, Int => Any)] = Seq(
+      StringType -> (i => s"k${i % 97}😀"),
+      LongType -> (i => (i % 97).toLong * 1000003L),
+      IntegerType -> (i => i % 97),
+      DecimalType(12, 3) -> (i => new java.math.BigDecimal(i % 97).movePointLeft(3)),
+      BinaryType -> (i => Array[Byte]((i % 97).toByte, 7)))
+    for ((dt, value) <- cases) {
+      val schema = StructType(Seq(StructField("id", dt)))
+      val rows = (0 until 200).map(i => org.apache.spark.sql.Row(if (i == 5) null else value(i))) :+
+        org.apache.spark.sql.Row(null)
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      val toKey = CatalystTypeConverters.createToCatalystConverter(dt)
+      val keys = (0 until 97).filter(_ => rnd.nextBoolean()).map(i => toKey(value(i)))
+      val inSet = GraftColumnBridge.column(InSet(GraftColumnBridge.expression(col("id")), keys.toSet))
+      val inKeys = NativeKernels.inKeys(col("id"), keys, dt)
+      for (frame <- Seq(df, spark.createDataFrame(rows.asJava, schema))) {
+        val got = frame.select(inKeys, inSet).collect()
+        assert(got.forall(r => r.get(0) == r.get(1)), (dt, got.filter(r => r.get(0) != r.get(1)).take(3)))
+        assert(got.count(_.isNullAt(0)) == 2 && got.exists(r => !r.isNullAt(0) && r.getBoolean(0)))
+      }
+      val plan = df.where(inKeys).queryExecution.executedPlan.toString
+      assert(plan.contains(s"IN (${keys.size} keys)"), plan)
+    }
   }
 }

@@ -53,7 +53,7 @@ class PlanSpec extends SparkTestBase {
     // q_multifacet: three facets, each a distance column over the orders
     // scan. At sf0.001 (1,500 orders, m = 10,000) every list exhausts its
     // facet, so the phase-1 collect of the three lists is the only Spark
-    // action; at sf0.01 (15,000 orders) the InSet-restricted phase-2 scan
+    // action; at sf0.01 (15,000 orders) the candidate-filtered phase-2 scan
     // follows it. Each action is one job, and one more reads the parquet
     // footer while the frame is built.
     for ((sf, actions) <- Seq(dir -> 1, "/root/testdata/sf0.01" -> 2)) {
@@ -143,6 +143,86 @@ class PlanSpec extends SparkTestBase {
       // the top-M lists are collected, never cached
       assert(spark.sparkContext.getPersistentRDDs.size == persisted)
     } finally catalog.close()
+  }
+
+  test("served /search: after one request, a same-class request with other " +
+      "query values compiles no code") {
+    // every query value enters the generated code by reference (numbers,
+    // a token set, q-grams, a point) and phase 2's candidate filter holds
+    // its keys by reference: the generated source, the codegen cache key,
+    // is the one the first request compiled
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.api.{AttributeSpec, Facet, SimOp}
+    import graft.engine.SimSearchEngine
+    import graft.engine.SimSearchEngine.{Catalog, SearchSpec}
+    val n = 1500 // k = 1: m = 1000, so no list covers its facet and phase 2 runs
+    val catalog = new Catalog(Seq(
+      Facet(AttributeSpec("num", SimOp.Numerical),
+        (1 to n).map(i => (i.toLong, ((i * 7) % 101).toDouble)).toDF("id", "value")),
+      Facet(AttributeSpec("cat", SimOp.Categorical),
+        (1 to n).map(i => (i.toLong, Seq(s"t${i % 7}", s"u${i % 5}"))).toDF("id", "value")),
+      Facet(AttributeSpec("txt", SimOp.Textual),
+        (1 to n).map(i => (i.toLong, s"name ${i % 97}")).toDF("id", "value")),
+      Facet(AttributeSpec("geo", SimOp.Spatial),
+        (1 to n).map(i => (i.toLong, (i % 13).toDouble, (i % 17).toDouble)).toDF("id", "lon", "lat")
+          .select(col("id"), struct(col("lon"), col("lat")).as("value")))))
+    try {
+      def search(num: Double, toks: Seq[String], text: String, point: String) =
+        SparkActions.record(spark)(SimSearchEngine.search(spark, catalog, 1, Seq(
+          SearchSpec("num", num, Seq(0.4)), SearchSpec("cat", toks, Seq(0.2)),
+          SearchSpec("txt", text, Seq(0.2)), SearchSpec("geo", point, Seq(0.2))))
+          .collect())
+      def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(search(50.0, Seq("t1", "u2"), "name 42", "POINT(3 4)").jobs == 2)
+      // (common-subexpression elimination orders what it hoists by hash,
+      // so the values must not steer the hash: POINT(1 9) once did)
+      val rnd = new scala.util.Random(3)
+      val variants = Seq((17.25, Seq("t3", "u4", "t5"), "name 7", "POINT(11.5 2)"),
+        (81.5, Seq("t6"), "name 13", "POINT(1 9)")) ++
+        Seq.fill(4)((rnd.nextInt(10000) / 7.0, Seq.fill(1 + rnd.nextInt(4))(s"t${rnd.nextInt(9)}"),
+          s"name ${rnd.nextInt(200)}", s"POINT(${rnd.nextInt(300) / 7.0} ${rnd.nextInt(300) / 11.0})"))
+      for ((num, toks, text, point) <- variants) {
+        val before = compiles
+        val variant = search(num, toks, text, point)
+        assert(variant.result.length == 1 && variant.jobs == 2)
+        assert(compiles == before, s"${compiles - before} compiles for $point")
+      }
+    } finally catalog.close()
+  }
+
+  test("rank aggregation phase 2: the plan description does not grow with " +
+      "the candidate count") {
+    // the candidate filter prints its key count, not its keys: 10 and
+    // 15,000 candidates describe the same plan up to ids and numbers
+    import org.apache.spark.sql.execution.ExplainUtils
+    import graft.operators.{BoundFacet, RankAggregate}
+    val n = 20000
+    val facets = Seq(
+      BoundFacet("up", spark.range(n).select(col("id"), col("id").cast("double").as("d")), Seq(0.5)),
+      BoundFacet("down", spark.range(n).select(col("id"), (lit(n) - col("id")).cast("double").as("d")),
+        Seq(0.5)))
+    // the two lists are disjoint, so m = 5 gives 10 candidates, m = 7500 gives 15,000
+    def phase2(m: Int): String = {
+      val rec = SparkActions.record(spark)(RankAggregate.topK(spark, facets, 1, m).collect())
+      val Seq(_, p2) = rec.actions
+      val text = new StringBuilder
+      ExplainUtils.processPlan(p2, (s: String) => { text ++= s; () })
+      text.toString.replaceAll("[0-9]+", "N")
+    }
+    val (few, many) = (phase2(5), phase2(7500))
+    assert(few.contains("IN (N keys)"), few)
+    assert(few == many, s"${few.length} vs ${many.length} chars:\n${many.take(3000)}")
+  }
+
+  test("q_pivot_multimetric outside a CacheScope leaves no cache behind") {
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val jobs = (1 to 3).map { _ =>
+      val rec = SparkActions.record(spark)(Queries.all("q_pivot_multimetric")(spark, dir).collect())
+      assert(rec.result.length == 10)
+      rec.jobs
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    assert(jobs.distinct.size == 1, jobs)
   }
 
   test("similarity matrix: one collect of the top-M lists ranks the " +

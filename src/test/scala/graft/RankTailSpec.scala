@@ -157,4 +157,55 @@ class RankTailSpec extends SparkTestBase {
       Map(0L -> 0.123457, 1L -> 0.000001, 2L -> 0.000002, 3L -> 1.0,
         4L -> 0.5, 5L -> 0.250001))
   }
+
+  /** Pre-scored facets over the same ids: facet f scores id i with
+    * `scores(f)(i)`, so the weighted means are whatever the test needs. */
+  private def preScored(ids: Seq[Long], scores: Seq[Seq[Double]], weights: Seq[Seq[Double]]) =
+    scores.zip(weights).zipWithIndex.map { case ((ss, ws), f) =>
+      BoundFacet(s"p$f", ids.zip(ss).toDF("id", "d"), ws, preScored = true)
+    }
+
+  test("ranking window: rounding only the candidates that can reach the " +
+    "top k ranks exactly as rounding every candidate — near-ties at the 6th " +
+    "decimal, scores far above 1, NaN and infinities, k >= candidates") {
+    val rnd = new scala.util.Random(11)
+    val n = 240
+    val ids = rnd.shuffle((0 until n).map(_.toLong * 7 + 3))
+    // clustered on and around the half-way points of round(x, 6), off by
+    // an ulp or a few 1e-12 either way: many candidates tie after rounding
+    // at the k-th score, and the tie is broken by id
+    def nearTies(base: Double) = Seq.fill(n)(base + rnd.nextInt(6) * 5e-7 +
+      (rnd.nextInt(3) - 1) * (if (rnd.nextBoolean()) math.ulp(base) else 1e-12))
+    // ES-style scores far above 1, with the same half-way clustering
+    def large(base: Double) = Seq.fill(n)(base + rnd.nextInt(4) * 5e-7 + rnd.nextInt(3) * 1e-9)
+    val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    def withSpecial(xs: Seq[Double], every: Int) =
+      xs.zipWithIndex.map { case (x, i) => if (i % every == 0) special(i / every % 3) else x }
+    val cases = Seq(
+      "near ties" -> preScored(ids, Seq(nearTies(0.1234555), nearTies(0.1234555)),
+        Seq(Seq(0.3, 1.0), Seq(0.7, 1.0))),
+      "one facet" -> preScored(ids, Seq(nearTies(0.4999985)), Seq(Seq(1.0))),
+      "far above 1" -> preScored(ids, Seq(large(12.3456785), large(98765.4321005)),
+        Seq(Seq(0.5, 0.2), Seq(0.5, 0.9))),
+      "NaN and infinities" -> preScored(ids, Seq(withSpecial(nearTies(0.25), 7), nearTies(0.25)),
+        Seq(Seq(0.5), Seq(0.5))),
+      "mostly NaN and infinities" -> preScored(ids, Seq(withSpecial(large(3.0), 2), large(3.0)),
+        Seq(Seq(0.5), Seq(0.5))))
+    for ((name, facets) <- cases; k <- Seq(1, 5, 20, n, n + 10)) {
+      val driver = driverRanked(facets, k, 10 * n)
+      assert(driver.size == facets.head.weightPerCombo.size * math.min(k, n), (name, k))
+      assert(bits(driver) == bits(sparkRanked(facets, k, 10 * n)), (name, k, driver.take(5)))
+    }
+  }
+
+  test("ranking window: spread-out scores round a window of the candidates, " +
+    "and the window holds every one that ties the k-th after rounding") {
+    val raw = Array.tabulate(1000)(i => i * 1e-5) ++ Array(0.0099905, 0.0099895)
+    val window = RankAggregate.rankWindow(raw, 5)
+    assert(window.length < 20, window.toSeq)
+    val kth = raw.map(RankAggregate.round6).sorted(Ordering.Double.TotalOrdering).reverse(4)
+    val reaching = raw.indices.filter(j => RankAggregate.round6(raw(j)) >= kth)
+    assert(reaching.forall(window.contains), (reaching, window.toSeq))
+    assert(RankAggregate.rankWindow(raw, raw.length).length == raw.length)
+  }
 }

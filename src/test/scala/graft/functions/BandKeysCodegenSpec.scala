@@ -109,4 +109,52 @@ class BandKeysCodegenSpec extends AnyFunSuite {
     val outN = proj(nulls)
     assert(outN.isNullAt(0) && outN.isNullAt(1) && outN.isNullAt(2))
   }
+
+  test("served search kernels (query values, query-set Jaccard, in_keys) " +
+    "compile under strict UnsafeProjection codegen and agree with " +
+    "interpreted eval") {
+    import org.apache.spark.sql.catalyst.expressions.{Abs, Subtract}
+    import org.apache.spark.sql.types.{BinaryType, DecimalType, DoubleType, LongType}
+    val x = BoundReference(0, DoubleType, nullable = true)
+    val vec = BoundReference(1, ArrayType(DoubleType), nullable = true)
+    val toks = BoundReference(2, ArrayType(StringType), nullable = true)
+    val text = BoundReference(3, StringType, nullable = true)
+    val id = BoundReference(4, LongType, nullable = true)
+    val dec = BoundReference(5, DecimalType(10, 2), nullable = true)
+    val bin = BoundReference(6, BinaryType, nullable = true)
+    def packed(keys: Seq[Any], dt: org.apache.spark.sql.types.DataType, child: BoundReference) =
+      org.apache.spark.sql.GraftColumnBridge.expression(
+        NativeKernels.inKeys(org.apache.spark.sql.functions.lit(null), keys, dt))
+        .withNewChildren(Seq(child))
+    val exprs = Seq(
+      Abs(Subtract(x, NativeKernels.QueryValueExpr(2.5, DoubleType))),
+      NativeKernels.L2DistExpr(vec, NativeKernels.QueryValueExpr(
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(Array(0.0, 0.0)),
+        ArrayType(DoubleType, containsNull = false))),
+      NativeKernels.QuerySetJaccardExpr(toks, Seq("a", "b", "b"), 0),
+      NativeKernels.QuerySetJaccardExpr(text, Seq("ab", "bc"), 2),
+      packed(Seq(3L, 5L), LongType, id),
+      packed(Seq(org.apache.spark.sql.types.Decimal(new java.math.BigDecimal("1.25"), 10, 2)),
+        DecimalType(10, 2), dec),
+      packed(Seq(Array[Byte](1, 2)), BinaryType, bin))
+    val proj = GenerateUnsafeProjection.generate(exprs) // throws on compile error
+    val row = new GenericInternalRow(Array[Any](
+      1.0, new GenericArrayData(Array[Any](3.0, 4.0)),
+      new GenericArrayData(Array[Any](UTF8String.fromString("a"), null, UTF8String.fromString("c"))),
+      UTF8String.fromString("abc"), 5L,
+      org.apache.spark.sql.types.Decimal(new java.math.BigDecimal("1.25"), 10, 2),
+      Array[Byte](1, 2)))
+    val out = proj(row)
+    assert(out.getDouble(0) == 1.5 && out.getDouble(1) == 5.0)
+    assert(out.getDouble(2) == 1.0 - 1.0 / (3 + 3 - 1)) // |row| counts the null
+    assert(out.getDouble(3) == 0.0) // grams {ab, bc} == the query
+    assert(out.getBoolean(4) && out.getBoolean(5) && out.getBoolean(6))
+    exprs.zipWithIndex.foreach { case (e, i) =>
+      assert(e.eval(row) == out.get(i, e.dataType), (e, i))
+    }
+    // null inputs: the set kernels score the empty set, in_keys is null
+    val nulls = proj(new GenericInternalRow(Array.fill[Any](7)(null)))
+    assert(nulls.getDouble(2) == 1.0 && nulls.getDouble(3) == 1.0)
+    assert((4 to 6).forall(nulls.isNullAt))
+  }
 }
